@@ -43,7 +43,7 @@ object Bench {
       // compression encoders; cache scan: ColumnarToRow + codec decode)
       // plus broadcast-probe-over-cache, integer div aggregation, and
       // the collect_list/array_intersect pair-verify shapes — every
-      // swapPersist-heavy query (graph iterations, the dedup family)
+      // persist-slot-heavy query (graph iterations, the dedup family)
       // otherwise pays this class-load/JIT cost inside its first timed
       // run (measured: identical stages cost 5-10x less once warm).
       // Synthetic input only, dropped before any query runs.

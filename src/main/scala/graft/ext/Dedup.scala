@@ -33,37 +33,8 @@ object Dedup extends QueryModule {
   private def h60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Self-cleaning persist: queries here reuse a small DataFrame across
-    * several join branches, but the query function cannot unpersist
-    * before the caller's action runs. Each invocation releases the
-    * PREVIOUS invocation's cache under the same slot, so repeated runs
-    * (bench, driver, specs) hold at most one live cache per slot
-    * instead of accumulating for the session's lifetime. */
-  private val persistSlots = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def swapPersist(slot: String, df: DataFrame): DataFrame = {
-    val cached = df.persist()
-    // materialize EAGERLY: the consumers fan the cached table into up to
-    // five parallel join branches, and when the cache is still cold AQE
-    // submits those leaf stages concurrently — each one then computes
-    // the ENTIRE upstream pipeline itself (no cross-job build sharing),
-    // measured as 4 simultaneous ~7 s rebuilds of the same signature
-    // table at sf0.1. One count() builds the cache once, alone on all
-    // cores; every branch then reads blocks.
-    cached.count()
-    val prev = persistSlots.put(slot, cached)
-    // CacheManager keys entries by LOGICAL PLAN, not DataFrame identity:
-    // when the same query re-instantiates the same pipeline (bench runs
-    // d06 then d07, both building the identical shingle table), the
-    // previous slot-holder's plan EQUALS the new one, and unpersisting
-    // it would evict the cache materialized two lines up — measured as
-    // d07 re-running the whole candidate pipeline ~7x (286 s CPU vs
-    // 40 s) whenever it followed d06 in one session. Only release a
-    // previous table whose plan is a genuinely different cache entry.
-    if (prev != null && (prev ne cached) &&
-        !prev.queryExecution.analyzed.sameResult(cached.queryExecution.analyzed))
-      prev.unpersist(blocking = false)
-    cached
-  }
+  /** Cached tables reused across a query's join branches. */
+  private val slots = new graft.util.PersistSlots
 
   /** Deterministic global order for a SMALL result without the
     * range-exchange sampling pass: a plain orderBy plans a
@@ -129,31 +100,17 @@ object Dedup extends QueryModule {
       .select(col("doc_id"), h60(col("shs")).as("sh"))
       .distinct()
 
-  /** Per-(JVM, input-dir) scratch materialization of the distinct
-    * (doc_id, sh) table — the Graph.coTradingEdges pattern applied to
-    * the dedup family's shared tokenization layer. SEVEN queries (d02,
-    * d06, d07, d13, d16, d17, d18) each rebuilt the identical
-    * explode+md5+distinct pipeline because the bench isolates
-    * per-query caches; the output is corpus-metadata-sized (224k rows
-    * ≈ 3.6 MB parquet at sf0.1, hashes only — never text), so it is
-    * written ONCE per input dir by its first consumer and read by the
-    * rest — the staged intermediate a production corpus pipeline
-    * persists to the warehouse after tokenization. First consumer's
-    * timing includes build + write; later consumers pay a tiny read.
-    * Public operators (shingleHashes/nearDupPairs) are untouched —
-    * they take arbitrary DataFrames and stay computation-defined. */
-  private val shinglePathByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def shingles(s: SparkSession, d: String): DataFrame = {
+  /** The distinct (doc_id, sh) table of the corpus at `d`, a derived
+    * artifact: seven queries (d02, d06, d07, d13, d16, d17, d18) share the
+    * explode+md5+distinct pipeline, and its output is hashes only
+    * (224k rows, ~3.6 MB parquet at sf0.1), never text. */
+  private[graft] def shingles(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val path = shinglePathByDir.computeIfAbsent(d, _ => {
-      val out = graft.util.Scratch.dir(
-        "shingles_" + d.replaceAll("[^A-Za-z0-9]", "_")) + "/sh"
+    s.read.parquet(graft.util.Scratch.derived(s, "shingles", d,
+        Seq(Tables.path(d, "documents"))) { out =>
       shingleHashes(Tables.documents(s, d), $"doc_id", $"text")
-        .write.mode("overwrite").parquet(out)
-      out
+        .write.parquet(out)
     })
-    s.read.parquet(path)
   }
 
   /** Non-distinct shingle hashes for minhash-only consumers: min() is
@@ -217,7 +174,7 @@ object Dedup extends QueryModule {
     // an order of magnitude less shuffle volume at identical results
     // (the oracle hashes identically; a collision would have to defeat
     // md5 inside one corpus). Three consumers — materialize once.
-    val sh = swapPersist("d02", shingles(s, d))
+    val sh = slots.swap("d02", shingles(s, d))
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     val inter = sh.as("a").join(sh.as("b"),
         $"a.sh" === $"b.sh" && $"a.doc_id" < $"b.doc_id")
@@ -270,7 +227,7 @@ object Dedup extends QueryModule {
       min((lit(permA(i)) * (col("sh") % 1073741824L) + lit(permB(i))) % 1000000007L).as(s"mh$i")
     }
     val mh = sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-    swapPersist(slot,
+    slots.swap(slot,
       (0 until 3).foldLeft(mh)((df, b) =>
         df.withColumn(s"bh$b", md5(concat_ws(",",
           (0 until 4).map(r => col(s"mh${b * 4 + r}").cast("string")): _*)))))
@@ -283,8 +240,9 @@ object Dedup extends QueryModule {
     * as per-row array expressions with no aggregation, so a stream
     * carries a document's whole signature on one row and the online
     * operator's pairs are hash-identical to the batch d06 oracle.
-    * Documents with no 3-shingle (under 3 tokens) are filtered — they
-    * produce no signature rows in the batch pipeline either. */
+    * Documents with no 3-shingle (under 3 tokens, or null text) are
+    * filtered — they produce no signature rows in the batch pipeline
+    * either. */
   private[graft] def docSignatures(docs: DataFrame, id: Column,
       text: Column): DataFrame = {
     // ONE imperative pass per document (the d14 kernel discipline):
@@ -316,7 +274,8 @@ object Dedup extends QueryModule {
           }
           sb.toString
         }
-        it.flatMap { case (id0, t) =>
+        // null text has no shingles: the row is skipped
+        it.filter(_._2 != null).flatMap { case (id0, t) =>
           val toks = t.split(" ", -1)
           val n = toks.length
           if (n < 3) Iterator.empty // no 3-shingle: no signature row
@@ -467,7 +426,7 @@ object Dedup extends QueryModule {
       slot: String): DataFrame = {
     // hashed shingles feed the signature build AND the exact check —
     // persist so the explode+md5 pipeline runs once
-    val sh = swapPersist(s"${slot}sh", shin)
+    val sh = slots.swap(s"${slot}sh", shin)
     val cand = bandCandidates(minhashBands(sh, s"${slot}mh"))
     // per-doc shingle-hash arrays: ONE groupBy over the shingle table,
     // then the exact check runs MAP-SIDE per candidate pair via
@@ -480,7 +439,7 @@ object Dedup extends QueryModule {
     // and doc_b) — unpersisted, each side re-runs the groupBy's full
     // shuffle of the cached shingle table (measured as two extra
     // ~118k-row exchanges and 2.5-5 s CPU inside d13 at sf0.1)
-    val shArr = swapPersist(s"${slot}arr",
+    val shArr = slots.swap(s"${slot}arr",
       sh.groupBy(col("doc_id")).agg(collect_list(col("sh")).as("arr"))
         .withColumn("n", size(col("arr")).cast("long")))
     cand
@@ -691,20 +650,16 @@ object Dedup extends QueryModule {
     // converged star forest: every parent is a root. The final
     // checkpoint (possibly the initial one, when the input was already
     // converged) outlives this call — the caller's action reads its
-    // blocks — so it is registered in a slot and released by the NEXT
-    // invocation, the same lifecycle swapPersist gives the cached
-    // tables (each checkpoint is a distinct LogicalRDD, so no
-    // plan-equality guard is needed here).
-    val prevFinal = persistSlots.put("starFinal", e)
-    if (prevFinal != null && (prevFinal ne e))
-      prevFinal.unpersist(blocking = false)
+    // blocks — so it is held in a slot and released by the NEXT
+    // invocation, the lifecycle of the cached tables.
+    slots.hold("starFinal", e)
     e.select($"u".as("node"), $"v".as("lbl"))
       .unionAll(e.select($"v".as("node"), $"v".as("lbl")).distinct())
   }
 
   private def d07(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val lab = swapPersist("d07l",
+    val lab = slots.swap("d07l",
       connectedComponents(d06Pairs(s, d), $"doc_a", $"doc_b"))
     val clusters = lab.groupBy($"lbl").agg(count(lit(1)).as("cluster_size"))
     lab.join(clusters, "lbl")
@@ -743,10 +698,10 @@ object Dedup extends QueryModule {
     import s.implicits._
     // the pair pipeline feeds BOTH the clustering and the straddle
     // check — persist it once or the whole LSH+verify DAG runs twice
-    val pairs = swapPersist("d13p", d06Pairs(s, d))
-    val lab = swapPersist("d13l",
+    val pairs = slots.swap("d13p", d06Pairs(s, d))
+    val lab = slots.swap("d13l",
       connectedComponents(pairs, $"doc_a", $"doc_b"))
-    val assign = swapPersist("d13a", Tables.documents(s, d).select($"doc_id")
+    val assign = slots.swap("d13a", Tables.documents(s, d).select($"doc_id")
       .join(lab.select($"node".as("doc_id"), $"lbl"), Seq("doc_id"), "left")
       .withColumn("cluster", coalesce($"lbl", $"doc_id"))
       .withColumn("split",
@@ -831,7 +786,7 @@ object Dedup extends QueryModule {
         (0 until bits).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ + _))
       .select($"doc_id", $"simhash")
-    persistSlot.fold(sigs)(swapPersist(_, sigs))
+    persistSlot.fold(sigs)(slots.swap(_, sigs))
   }
 
   /** The matching DuckDB signature pipeline (wc → bits → sigs CTEs). */
@@ -886,7 +841,7 @@ object Dedup extends QueryModule {
     // branch — the whole vote pipeline materializes exactly once
     // under the eager count(), including under load (round 5's two
     // contended driver benches put the recompute races top-2)
-    val blocks = swapPersist("simhash60",
+    val blocks = slots.swap("simhash60",
       simhashSigs(s, d, 60, persistSlot = None)
         .select($"doc_id", $"simhash", explode(sequence(lit(0), lit(3))).as("b"))
         .withColumn("bk", expr("(simhash >> (b * 15)) & 32767")))
@@ -1149,7 +1104,8 @@ object Dedup extends QueryModule {
       .as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, t) =>
+        // null text has no chunks: the row is skipped
+        it.filter(_._2 != null).flatMap { case (id, t) =>
           // split(" ", -1): keep trailing empties — the semantics of
           // Spark's split() and DuckDB's string_split the oracle uses
           val toks = t.split(" ", -1)
@@ -1252,8 +1208,8 @@ object Dedup extends QueryModule {
     * 64-bit no-collision assumption the md5-prefix form documented,
     * not a semantic change; a false sharing would surface as an
     * oracle hash mismatch. Position is folded in by the polynomial
-    * (token order matters); token identity by xxh64-style avalanche
-    * of the token bytes. */
+    * (token order matters); token identity by a splitmix64 round per
+    * character. Rows with null text are skipped. */
   def substringRunStats(docs: DataFrame, docId: Column, text: Column,
       widths: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
     import docs.sparkSession.implicits._
@@ -1270,13 +1226,17 @@ object Dedup extends QueryModule {
           z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
           z ^ (z >>> 31)
         }
+        // every character passes through the bijective mixer, so tokens
+        // collide only by chance (~2^-64 per pair); a `h*31 + c` pre-mix
+        // made "Aa" and "BB" equal before any mixing
         def tokHash(s: String): Long = {
-          var h = 1125899906842597L
+          var h = s.length.toLong
           var i = 0
-          while (i < s.length) { h = h * 31 + s.charAt(i); i += 1 }
-          mix(h)
+          while (i < s.length) { h = mix(h ^ s.charAt(i)); i += 1 }
+          h
         }
-        it.flatMap { case (id, t) =>
+        // null text has no windows: the row is skipped
+        it.filter(_._2 != null).flatMap { case (id, t) =>
           val toks = t.split(" ", -1)
           val th = new Array[Long](toks.length)
           var i = 0
@@ -1385,7 +1345,7 @@ object Dedup extends QueryModule {
     // with the cache). toks is BOUND in its own projection so the
     // interpreted gram lambda doesn't re-split the document per
     // element (shingleArrFromToks rationale).
-    val grams = swapPersist("d10", Tables.documents(s, d)
+    val grams = slots.swap("d10", Tables.documents(s, d)
       .select($"doc_id", split($"text", " ").as("toks"))
       .select($"doc_id", explode(
         when(size($"toks") >= 8,
@@ -1440,7 +1400,7 @@ object Dedup extends QueryModule {
   def incrementalNearDupPairs(docs: DataFrame, id: Column, text: Column,
       isNew: Column, threshold: Double, slot: String = "incr"): DataFrame = {
     val flags = docs.select(id.as("doc_id"), isNew.cast("boolean").as("is_new"))
-    val sh = swapPersist(s"${slot}sh", shingleHashes(docs, id, text))
+    val sh = slots.swap(s"${slot}sh", shingleHashes(docs, id, text))
     val bands = minhashBands(sh, s"${slot}mh")
     // batch side: band table restricted to new docs (a doc-keyed join
     // against the flag projection — both sides are |docs|-sized and
@@ -1459,7 +1419,7 @@ object Dedup extends QueryModule {
     // and doc_b) — unpersisted, each side re-runs the groupBy's full
     // shuffle of the cached shingle table (measured as two extra
     // ~118k-row exchanges and 2.5-5 s CPU inside d13 at sf0.1)
-    val shArr = swapPersist(s"${slot}arr",
+    val shArr = slots.swap(s"${slot}arr",
       sh.groupBy(col("doc_id")).agg(collect_list(col("sh")).as("arr"))
         .withColumn("n", size(col("arr")).cast("long")))
     cand
@@ -1556,14 +1516,14 @@ object Dedup extends QueryModule {
 
   private def d16(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val sh = swapPersist("d16sh", shingles(s, d))
-    val dfs = swapPersist("d16df",
+    val sh = slots.swap("d16sh", shingles(s, d))
+    val dfs = slots.swap("d16df",
       sh.groupBy($"sh").agg(count(lit(1)).as("df")))
     // one-agg pre-pass: the posting-list cap derives from the observed
     // max df (see containmentCap) instead of a hardcoded constant
     val cap = containmentCap(dfs.agg(max($"df")).collect()(0).getLong(0))
     val rare = dfs.filter($"df" <= cap).select($"sh")
-    val kept = swapPersist("d16k", sh.join(rare, "sh"))
+    val kept = slots.swap("d16k", sh.join(rare, "sh"))
     // COUNT-FILTERED candidates (the PPJoin-family idea), not the raw
     // distinct index join: the capped index emits ~2.3M candidate
     // pairs at sf0.1 (10x linear at sf1 — the cap math holds, the
@@ -1601,7 +1561,7 @@ object Dedup extends QueryModule {
         .as("p"))
       .select($"p.doc_a".as("doc_a"), $"p.doc_b".as("doc_b"),
         $"p.c_capped".as("c_capped"))
-    val docStats = swapPersist("d16st",
+    val docStats = slots.swap("d16st",
       sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
         .join(kept.groupBy($"doc_id").agg(count(lit(1)).as("n_kept")),
           Seq("doc_id"), "left")
@@ -1612,7 +1572,7 @@ object Dedup extends QueryModule {
         $"n".as("na_pre"), $"n_stop".as("stop_a")), "doc_a")
       .filter(($"c_capped" + $"stop_a") * 10000000L >= $"na_pre" * 7999995L)
       .select($"doc_a", $"doc_b")
-    val shArr = swapPersist("d16arr",
+    val shArr = slots.swap("d16arr",
       sh.groupBy($"doc_id").agg(collect_list($"sh").as("arr"))
         .withColumn("n", size($"arr").cast("long")))
     cand
@@ -1707,7 +1667,7 @@ object Dedup extends QueryModule {
       .withColumn("h", sha2(regexp_replace($"text", "( dup)+$", ""), 256))
       .groupBy($"h").agg(min($"doc_id").as("kept_doc"))
       .select($"kept_doc")
-    val lab = swapPersist("d18l",
+    val lab = slots.swap("d18l",
       connectedComponents(d06Pairs(s, d), $"doc_a", $"doc_b"))
     val staged = docs
       .join(canonGroups.select($"kept_doc".as("doc_id"),

@@ -39,20 +39,7 @@ object Similarity extends QueryModule {
     dot / (sqrt(na) * sqrt(nb))
   }
 
-  /** One cached table per slot, previous entry released on the next
-    * call — Dedup.swapPersist's pattern including the plan-equality
-    * guard (cache entries are keyed by logical plan; unpersisting an
-    * equal-plan previous holder would evict the entry just built). */
-  private val persistSlots = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def swapPersist(slot: String, df: DataFrame): DataFrame = {
-    val cached = df.persist()
-    cached.count()
-    val prev = persistSlots.put(slot, cached)
-    if (prev != null && (prev ne cached) &&
-        !prev.queryExecution.analyzed.sameResult(cached.queryExecution.analyzed))
-      prev.unpersist(blocking = false)
-    cached
-  }
+  private val slots = new graft.util.PersistSlots
 
   /** PUBLIC operator: exact cosine top-k of a corpus against a 1-row
     * query-vector DataFrame (broadcast; TakeOrderedAndProject keeps the
@@ -455,7 +442,7 @@ object Similarity extends QueryModule {
   private def s12(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val B = 8
-    val a2 = swapPersist("s12a",
+    val a2 = slots.swap("s12a",
       kmeansAssignments(s, d).select($"vec_id", $"v", $"cl")
         .withColumn("blk", pmod($"vec_id", lit(B)).cast("int")))
     val aSide = a2
@@ -711,7 +698,7 @@ object Similarity extends QueryModule {
     * an exact cosine. */
   private def s13(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = swapPersist("s13e", Tables.embeddings(s, d)
+    val e = slots.swap("s13e", Tables.embeddings(s, d)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .filter(array_max(transform($"v", x => abs(x))) > 0))
     // per-dim magnitude profile: S_i in integer micro-units, c_i = S_i/(n*1e6)
@@ -807,7 +794,7 @@ object Similarity extends QueryModule {
     */
   private def s14(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = swapPersist("s14e", Tables.embeddings(s, d)
+    val e = slots.swap("s14e", Tables.embeddings(s, d)
       .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
       .filter(array_max(transform($"v", x => abs(x))) > 0))
     // coarse quantizer: label centroids; the probe searches its 2
@@ -1281,23 +1268,18 @@ object Similarity extends QueryModule {
         round($"cos", 6).as("cos_sim"))
   }
 
-  /** One stored index per (JVM, corpus dir) for the s17 gate and its
-    * fixture dump: whichever side touches it first builds it; both then
-    * read the SAME stored rows, so the oracle is a recompute from the
-    * artifact, never from a second training run (float summation order
-    * could differ between runs — the artifact pins it). */
-  private val ivfIndexPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The stored IVF index of the corpus at `d`, a derived artifact shared
+    * by the s17 gate and its fixture dump: both read the SAME stored rows,
+    * so the oracle recomputes the search from the artifact, never from a
+    * second training run (float summation order could differ between
+    * runs — the artifact pins it). */
   private[graft] def ensureIvfIndex(s: SparkSession, d: String): String =
-    ivfIndexPaths.computeIfAbsent(d, _ => {
-      val p = graft.util.Scratch.dir(
-        "ivf_index_" + Integer.toHexString(d.hashCode))
-      graft.util.Scratch.deleteRecursively(new java.io.File(p))
+    graft.util.Scratch.derived(s, "ivf_index", d,
+        Seq(Tables.path(d, "embeddings"))) { out =>
       buildIvfIndex(s, Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("v")), p)
-      p
-    })
+          col("embedding").cast("array<double>").as("v")), out)
+    }
 
   /** The stored index rows, for the fixture dump (Verify) — the m32
     * discipline: the oracle recomputes the SEARCH from the ARTIFACT. */

@@ -18,56 +18,29 @@ import graft.sources.Tables
   */
 object TextAnalysis extends QueryModule {
 
-  /** Self-cleaning persist (the Dedup/Graph slot pattern): a17's scored
-    * table is read twice — once by the approxQuantile bounds pass, once
-    * by the ranking query — and the query function cannot unpersist
-    * before the caller's action runs, so each invocation releases the
-    * PREVIOUS invocation's cache under the same slot. Eager count so
-    * parallel downstream branches never race a cold cache into
-    * simultaneous rebuilds; plan-equality guard because CacheManager
-    * keys entries by logical plan, not DataFrame identity. */
-  private val persistSlots = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def swapPersist(slot: String, df: DataFrame): DataFrame = {
-    val cached = df.persist()
-    cached.count()
-    val prev = persistSlots.put(slot, cached)
-    if (prev != null && (prev ne cached) &&
-        !prev.queryExecution.analyzed.sameResult(cached.queryExecution.analyzed))
-      prev.unpersist(blocking = false)
-    cached
-  }
+  /** a17's scored table is read twice: by the approxQuantile bounds pass
+    * and by the ranking query. */
+  private val slots = new graft.util.PersistSlots
 
-  /** Per-(JVM, input-dir) scratch materialization of the corpus TERM
-    * FREQUENCIES — distinct (doc_id, word, cnt) with cnt = the word's
-    * occurrence count in the document (the Dedup.shingles /
-    * Graph.coTradingEdges shared-intermediate pattern applied to the
-    * token layer). Five queries (a09's tf, a10/a17's LM scoring, the
-    * d04/d09 simhash votes) each re-ran the identical
-    * explode-split-aggregate over the corpus per bench invocation; the
-    * rollup is vocabulary×docs-sized (~116 k rows ≈ 1 MB parquet at
-    * sf0.1 — words and counts, never documents), built once per input
-    * dir by its first consumer and read by the rest. EMPTY-STRING
-    * tokens are kept (split of adjacent spaces): a09/d04/d09 count
-    * them like the raw explode did; a10/a17 filter them exactly as
-    * before. Occurrence-level aggregates recompose exactly:
-    * Σ_occurrences f(word) = Σ_(doc,word) cnt·f(word) — integer-exact
-    * for counts/votes; the LM means use the cnt-weighted form (see
-    * a10). */
-  private val wordCountPathByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def wordCounts(s: SparkSession, d: String): DataFrame = {
-    val path = wordCountPathByDir.computeIfAbsent(d, _ => {
-      val out = graft.util.Scratch.dir(
-        "wordcounts_" + d.replaceAll("[^A-Za-z0-9]", "_")) + "/wc"
+  /** The corpus TERM FREQUENCIES at `d` — distinct (doc_id, word, cnt),
+    * cnt = the word's occurrence count in the document — a derived
+    * artifact: five queries (a09's tf, a10/a17's LM scoring, the d04/d09
+    * simhash votes) share the explode-split-aggregate, and its output is
+    * vocabulary×docs-sized (~116 k rows ≈ 1 MB parquet at sf0.1). EMPTY-
+    * STRING tokens are kept (split of adjacent spaces): a09/d04/d09 count
+    * them like the raw explode did; a10/a17 filter them. Occurrence-level
+    * aggregates recompose exactly: Σ_occurrences f(word) =
+    * Σ_(doc,word) cnt·f(word) — integer-exact for counts/votes; the LM
+    * means use the cnt-weighted form (see a10). */
+  private[graft] def wordCounts(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(graft.util.Scratch.derived(s, "wordcounts", d,
+        Seq(Tables.path(d, "documents"))) { out =>
       Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
         .groupBy(col("doc_id"), col("word"))
         .agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(out)
-      out
+        .write.parquet(out)
     })
-    s.read.parquet(path)
-  }
 
   /** Marker-word lists per language (n-gram-heuristic stand-in; the
     * fixture vocabulary is shared so the *mechanism* — count marker
@@ -885,7 +858,7 @@ object TextAnalysis extends QueryModule {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     // scored is read twice (bounds pass + ranking query): persist it
-    val scored = swapPersist("a17scored", a17Scored(s, d))
+    val scored = slots.swap("a17scored", a17Scored(s, d))
     val bounds = scored.stat
       .approxQuantile("avg_logp", (1 until 32).map(_ / 32.0).toArray, 0.001)
       .distinct.sorted

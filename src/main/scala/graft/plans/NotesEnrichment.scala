@@ -40,7 +40,7 @@ object NotesEnrichment {
   @volatile private var factUSlot: DataFrame = null
   private def swapPersist(df: DataFrame): DataFrame = synchronized {
     val cached = df.persist()
-    // plan-equality guard (see Dedup.swapPersist): cache entries are
+    // plan-equality guard (see graft.util.PersistSlots): cache entries are
     // keyed by logical plan, and a repeat invocation re-instantiates the
     // same plan — unpersisting the previous holder would evict the entry
     // just registered above and every join branch would recompute

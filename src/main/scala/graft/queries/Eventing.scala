@@ -348,24 +348,20 @@ object Eventing extends QueryModule {
 
   private val streamRunId = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Per-(JVM, input dir) single-file rewrite of the events table, for
-    * the maxFilesPerTrigger=1 staging paths (e17/e24): built by the
-    * first run, linked by every later copy/run — the one-batch-per-copy
-    * staging costs one normalization pass per input dir, not one per
-    * query. */
-  private val coalescedEventsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def coalescedEvents(s: SparkSession, d: String): String =
-    coalescedEventsByDir.computeIfAbsent(d, _ => {
-      val side = graft.util.Scratch.dir(
-        "evt1_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-      graft.sources.Tables.events(s, d).coalesce(1)
-        .write.mode("overwrite").parquet(side)
-      new java.io.File(side).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("coalesced events write produced no parquet part"))
-        .getAbsolutePath
-    })
+  /** The events table at `d` rewritten as ONE parquet file, a derived
+    * artifact for the maxFilesPerTrigger=1 staging paths (e17/e24): every
+    * copy/run links the same file, so the one-batch-per-copy staging
+    * costs one normalization pass per input, not one per query. */
+  private def coalescedEvents(s: SparkSession, d: String): String = {
+    val side = graft.util.Scratch.derived(s, "evt1", d,
+        Seq(Tables.path(d, "events"))) {
+      Tables.events(s, d).coalesce(1).write.parquet(_)
+    }
+    new java.io.File(side).listFiles()
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(sys.error("coalesced events write produced no parquet part"))
+      .getAbsolutePath
+  }
 
   /** e13 — the STREAMING plane under the driver's oracle: the exact
     * streaming transform (`EventStreams.tumblingStream` — watermarked

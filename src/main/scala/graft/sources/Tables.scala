@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(path(dir, name))
+
+  /** Where table `name` of a scale-factor directory lives. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   /** Split-starved-scan fix: parquet splits at ROW-GROUP granularity, so
     * a single-row-group file reads as ONE task no matter how small

@@ -854,10 +854,11 @@ object VersionedTable {
           .repartition(col(KB))
           .write.mode("error").partitionBy(KB).parquet(s"$path/$dir")
       catch { case e: Throwable =>
-        // reap the staged feed so a failed merge leaves only the one
-        // orphan shape vacuum already knows ($dir); best-effort
+        // reap the staged feed, best-effort: the wait is BOUNDED so a
+        // hung feed job cannot hide this failure; a feed still running
+        // after it leaves $cdcTmpName, an unreferenced dir vacuum sweeps
         cdcF.foreach { cf =>
-          try { Await.ready(cf, Duration.Inf)
+          try { Await.ready(cf, Duration(60, "s"))
                 fs.delete(new HPath(root, cdcTmpName), true) }
           catch { case _: Exception => () }
         }

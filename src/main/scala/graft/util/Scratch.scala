@@ -1,6 +1,7 @@
 package graft.util
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.SparkSession
 
 /** Per-JVM scratch space for operators that stage intermediate files
   * (partitioned rewrites, format round-trips, binary fixtures).
@@ -11,8 +12,8 @@ import java.nio.file.{Files, Path}
   * files out from under each other mid-scan — and stale subdirs from
   * older layouts would silently pollute a mergeSchema read. A per-JVM
   * random root isolates processes while keeping paths stable WITHIN a
-  * process, so fixture writers stay idempotent and per-run caches still
-  * hit. On a cluster the analog is a job-scoped staging prefix on
+  * process, so fixture writers stay idempotent and derived artifacts
+  * (`derived`) still hit. On a cluster the analog is a job-scoped staging prefix on
   * shared storage.
   */
 object Scratch {
@@ -72,6 +73,54 @@ object Scratch {
     touch(root)
     d.toAbsolutePath.toString
   }
+
+  /** The one home for engine-owned DERIVED ARTIFACTS: tables a family of
+    * queries would otherwise recompute from the same input, written once
+    * by their first consumer and read by the rest. Returns the artifact's
+    * path; `build` writes it there (the path does not exist when `build`
+    * runs, and a failed build is retried by the next call).
+    *
+    * Key: `kind`, the raw `dir` string and a fingerprint of the `inputs`
+    * (name, size and mtime of each input's files, from one listing per
+    * input, no data read). A rewritten input changes the fingerprint, so
+    * the next call builds a fresh artifact under a new path; the
+    * superseded one stays until the root goes. The path is `kind` plus
+    * the md5 of the whole key, so distinct directories or input states
+    * share a path only on an md5 collision (~2^-128 per pair). A rewrite
+    * that keeps every file's size and millisecond mtime is not seen.
+    *
+    * Lifetime: the per-JVM root. No artifact outlives its process, so a
+    * later run never reads an earlier run's results. */
+  def derived(s: SparkSession, kind: String, dir: String, inputs: Seq[String])(
+      build: String => Unit): String = {
+    val key = Seq(kind, dir, fingerprint(s, inputs)).mkString("\u0000")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+    artifacts.computeIfAbsent(key,
+      _ => new Artifact(root.resolve(s"${kind}_$md5").toString, build)).path
+  }
+
+  /** The lazy val is the per-key build lock: concurrent first consumers
+    * wait for one build, and a build that throws leaves it unset. */
+  private final class Artifact(out: String, build: String => Unit) {
+    lazy val path: String = {
+      deleteRecursively(new java.io.File(out)) // a failed build's leftovers
+      build(out)
+      touch(root)
+      out
+    }
+  }
+  private val artifacts =
+    new java.util.concurrent.ConcurrentHashMap[String, Artifact]()
+
+  private def fingerprint(s: SparkSession, inputs: Seq[String]): String =
+    inputs.map { in =>
+      val p = new org.apache.hadoop.fs.Path(in)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p)
+        .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+        .sorted.mkString(s"$in[", ",", "]")
+    }.mkString(";")
 
   /** Run-scoped STREAMING CHECKPOINT directory. Checkpoints here are
     * per-run temp dirs (created fresh, abandoned after the query), so

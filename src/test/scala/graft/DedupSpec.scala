@@ -239,6 +239,35 @@ class DedupSpec extends SparkSpec {
     assert(got(5L) == 0L, "unique doc shares nothing")
   }
 
+  test("public text operators skip a null-text row instead of failing") {
+    import spark.implicits._
+    val body = (1 to 40).map(i => s"tok$i").mkString(" ")
+    val docs = Seq((1L, body), (2L, body + " tail"), (3L, null: String))
+      .toDF("doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame, c: String = "doc_id"): Set[Long] =
+      df.select(col(c)).as[Long].collect().toSet
+    val (id, text) = (col("doc_id"), col("text"))
+    assert(ids(Dedup.shingleHashes(docs, id, text)) === Set(1L, 2L))
+    assert(ids(Dedup.docSignatures(docs, id, text)) === Set(1L, 2L))
+    assert(ids(Dedup.cdcChunkStats(docs, id, text)) === Set(1L, 2L))
+    assert(ids(Dedup.substringRunStats(docs, id, text)) === Set(1L, 2L))
+    assert(Dedup.nearDupPairs(docs, id, text, 0.6, slot = "nulltext")
+      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSeq === Seq((1L, 2L)))
+  }
+
+  test("d15 token hash: docs differing only by Aa/BB tokens share no run") {
+    import spark.implicits._
+    // "Aa" and "BB" have equal String.hashCode; a polynomial pre-mix
+    // made their token hashes equal, so these windows looked shared
+    val tail = (1 to 7).map(i => s"w$i").mkString(" ")
+    val docs = Seq((1L, s"Aa $tail"), (2L, s"BB $tail"),
+      (3L, s"$tail Aa Aa"), (4L, s"$tail BB BB")).toDF("doc_id", "text")
+    val got = Dedup.substringRunStats(docs, col("doc_id"), col("text"))
+      .select("doc_id", "max_shared_run", "n_shared_w8")
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(got === Seq((1L, 0L, 0L), (2L, 0L, 0L), (3L, 0L, 0L), (4L, 0L, 0L)))
+  }
+
   test("d12 incremental pairs = full near-dup pairs restricted to the new batch") {
     import spark.implicits._
     // same banding, same verification, one-sided candidate join — so the

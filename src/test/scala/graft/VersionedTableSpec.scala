@@ -102,6 +102,19 @@ class VersionedTableSpec extends SparkSpec {
       .map(_.getName).toSet === Set("commit_version=2"))
   }
 
+  test("vacuum reaps a staged CDC feed a failed merge left behind") {
+    val dir = freshDir("vacuum_cdc_tmp")
+    VersionedTable.merge(spark, dir, Seq((1L, "a")).toDF("k", "v"), Seq("k"), numBuckets = 1)
+    // the shape a merge whose bucket write failed leaves when its feed
+    // job outlives the bounded wait: `.cdc_tmp_<commit dir>` with parts
+    val orphan = new java.io.File(dir, ".cdc_tmp_d00000001_deadbeef")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(orphan.getPath)
+    val removed = VersionedTable.vacuum(spark, dir, retainLast = 1)
+    assert(removed === Seq(orphan.getName))
+    assert(!orphan.exists())
+    assert(state(dir) === Set((1L, "a")))
+  }
+
   test("vacuum keeps a dir still referenced by an older RETAINED version") {
     val dir = freshDir("vacuum_shared")
     // bucket 0 and bucket 1 written at v0; v1 touches only one bucket,
