@@ -13,18 +13,22 @@ import org.apache.spark.sql.functions._
   *
   * Reference shape: an O(lines) loop of per-line SQL round trips (one
   * SELECT per extracted line, :99-115) plus per-token UPDATE/INSERT.
-  * Spark shape: ONE equi-join on the statement key with the contains()
-  * predicate as a codegen residual, lookahead via `lead` windows, the
-  * token split via posexplode, and the update expressed as
-  * anti ∪ updated ∪ inserted (the table-format-free MERGE).
+  * Spark shape: ONE pass — each distinct fact row left-joins the
+  * statement lines on the statement key with the contains() predicate
+  * as a codegen residual, keeps its first note ref, and posexplodes the
+  * ref's tokens: token 0 is the updated row, tokens 1..n the inserted
+  * ones, no token the untouched row. Lookahead is two `lead` windows.
   *
-  * Scale notes: the join equi-keys (issuer, year, quarter, group)
-  * carry the shuffle; within a key the contains() residual evaluates
-  * in the hash-join probe loop — no nested loop over the corpus. The
-  * lookahead window partitions by (doc_id, grup) so per-task state is
-  * one document-statement's lines. Reference bugs NOT reproduced
-  * (SURVEY §7.4): hardcoded issuer on inserts, lookahead overrun,
-  * mismatched SELECT params.
+  * Scale notes: fact rows are hash-partitioned once on the statement
+  * key, and the duplicate count, the join's fact side and the per-row
+  * first match all reuse that partitioning — three exchanges (fact,
+  * the lookahead window, the lines' join side), each input scanned
+  * once, nothing persisted. Within a key the contains() residual
+  * evaluates in the hash-join probe loop — no nested loop over the
+  * corpus. The lookahead window partitions by (doc_id, grup) so
+  * per-task state is one document-statement's lines. Reference bugs
+  * NOT reproduced (SURVEY §7.4): hardcoded issuer on inserts, lookahead
+  * overrun, mismatched SELECT params.
   */
 object NotesEnrichment {
 
@@ -32,24 +36,6 @@ object NotesEnrichment {
   val notePattern = "^(\\d{1,2}|(\\d{1,2}[a-z])|(\\d{1,2}(?:,\\d{1,2}[a-z]?)*))$"
 
   private val factKey = Seq("kode_emiten", "tahun", "quartal", "grup_laporan_keuangan")
-
-  /** factU feeds both merge branches (matched join + untouched anti);
-    * Spark does not share self-join subplans, so persist it — one slot,
-    * previous invocation's cache released on the next call (the caller's
-    * action runs after enrich() returns, so we cannot unpersist here). */
-  @volatile private var factUSlot: DataFrame = null
-  private def swapPersist(df: DataFrame): DataFrame = synchronized {
-    val cached = df.persist()
-    // plan-equality guard (see graft.util.PersistSlots): cache entries are
-    // keyed by logical plan, and a repeat invocation re-instantiates the
-    // same plan — unpersisting the previous holder would evict the entry
-    // just registered above and every join branch would recompute
-    if (factUSlot != null && (factUSlot ne cached) &&
-        !factUSlot.queryExecution.analyzed.sameResult(cached.queryExecution.analyzed))
-      factUSlot.unpersist(blocking = false)
-    factUSlot = cached
-    cached
-  }
 
   /** fact: (kode_emiten, nama_emiten, tahun, quartal,
     * grup_laporan_keuangan, item, nilai, notes);
@@ -69,44 +55,40 @@ object NotesEnrichment {
         when(col("n1").rlike(notePattern), col("n1"))
           .when(col("n2").rlike(notePattern), col("n2")))
       .filter(col("note_ref").isNotNull)
-      .select(factKey.map(col) :+ col("text") :+ col("note_ref"): _*)
+      .select(factKey.map(k => col(k).as(s"_l_$k")) :+ col("text").as("_text") :+
+        col("note_ref").as("_ref"): _*)
 
     // Identical fact rows must keep their cardinality (the reference's
-    // UPDATE touches every matching row): a per-(key, item) ordinal
-    // disambiguates exact duplicates through the groupBy and anti-join.
-    // The order columns are explicit for self-documentation; rows inside
-    // one partition of this window are exact duplicates, so ANY order
-    // (including ties) yields the same multiset.
-    val wDup = Window.partitionBy((factKey :+ "item").map(col): _*)
-      .orderBy(col("nama_emiten"), col("nilai"), col("notes"))
-    val factU = swapPersist(fact.withColumn("_dup", row_number().over(wDup)))
+    // UPDATE touches every matching row), so each distinct row is matched
+    // once and re-expanded by its count. Grouping normalizes -0.0 to 0.0
+    // and collapses NaN payloads, so `nilai` groups on its string form
+    // (exact) and its value is carried through first().
+    val rowKey = fact.columns.toSeq.filter(_ != "nilai") :+ "_exact_nilai"
+    val rows = fact
+      .withColumn("_exact_nilai", col("nilai").cast("string"))
+      .repartition(factKey.map(col): _*)
+      .groupBy(rowKey.map(col): _*)
+      .agg(count(lit(1)).as("_rows"), first(col("nilai")).as("nilai"))
 
-    // J1: equi-join on the statement key, containment as residual.
-    // A fact row may match several lines — keep the first note ref by
-    // line text for determinism (the reference takes the first SELECT hit).
-    val matched = factU.join(withNote,
-        factKey.map(k => factU(k) === withNote(k)).reduce(_ && _) &&
-          lower(factU("item")).contains(lower(withNote("text"))))
-      .select(factU("*"), withNote("note_ref"), withNote("text"))
-      .groupBy(factU.columns.map(factU(_)): _*)
-      .agg(min(struct(col("text"), col("note_ref"))).as("m"))
-      .withColumn("note_ref", col("m.note_ref")).drop("m")
+    // J1: equi-join on the statement key, containment as residual. A
+    // fact row may match several lines — keep the first note ref by line
+    // text for determinism (the reference takes the first SELECT hit).
+    val matched = rows.join(withNote,
+        factKey.map(k => col(k) === col(s"_l_$k")).reduce(_ && _) &&
+          lower(col("item")).contains(lower(col("_text"))),
+        "left")
+      .groupBy(rowKey.map(col): _*)
+      .agg(first(col("_rows")).as("_rows"), first(col("nilai")).as("nilai"),
+        min(struct(col("_text"), col("_ref"))).as("_m"))
 
-    // U3: token 0 updates the matched row; tokens 1..n insert new rows
-    val exploded = matched
-      .select(col("*"), posexplode(split(col("note_ref"), ",")).as(Seq("tok_pos", "tok")))
-    val updated = exploded.filter(col("tok_pos") === 0)
-      .withColumn("notes", col("tok"))
-      .drop("note_ref", "tok_pos", "tok")
-    val inserted = exploded.filter(col("tok_pos") > 0)
-      .withColumn("notes", col("tok"))
-      .withColumn("nilai", lit(0.0))
-      .drop("note_ref", "tok_pos", "tok")
-
-    // MERGE: untouched fact rows ∪ updated rows ∪ inserted rows
-    val untouched = factU.join(updated,
-      (factKey :+ "item" :+ "_dup").map(k => factU(k) === updated(k)).reduce(_ && _),
-      "left_anti")
-    untouched.unionByName(updated).unionByName(inserted).drop("_dup")
+    // U3: token 0 updates the matched row, tokens 1..n insert zero-value
+    // rows, a row with no match keeps its notes; then every output row is
+    // repeated once per identical input row
+    matched
+      .select(col("*"), posexplode_outer(split(col("_m._ref"), ",")).as(Seq("_pos", "_tok")))
+      .withColumn("notes", when(col("_pos").isNull, col("notes")).otherwise(col("_tok")))
+      .withColumn("nilai", when(col("_pos") > 0, lit(0.0)).otherwise(col("nilai")))
+      .withColumn("_copy", explode(array_repeat(lit(true), col("_rows").cast("int"))))
+      .select(fact.columns.toSeq.map(col): _*)
   }
 }

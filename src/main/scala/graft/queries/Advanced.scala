@@ -671,13 +671,12 @@ object Advanced extends QueryModule {
     * bucket pruning, tombstone removal, emptied-directory cleanup,
     * dynamic partition overwrite. This is the reference's
     * update-then-insert upsert (mainTesting.py:130-149) as a durable
-    * table operation rather than a recompute (v06's form). State is
-    * reset before each run, so the query is a pure function of the
-    * inputs; double-merge idempotence is spec'd in SourcesSpec. */
+    * table operation rather than a recompute (v06's form). Each run
+    * starts from a fresh directory, so the query is a pure function of
+    * the inputs; double-merge idempotence is spec'd in SourcesSpec. */
   private def v19(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v19_merge_" + d.replaceAll("[^A-Za-z0-9]", "_"))
+    val dir = graft.util.Scratch.fresh("v19_merge")
     val ord = Tables.orders(s, d)
     val target = ord.filter(year($"o_orderdate") <= 1997)
       .groupBy($"o_custkey")
@@ -688,7 +687,6 @@ object Advanced extends QueryModule {
       .agg(round(sum($"o_totalprice"), 2).as("spend"),
         count(lit(1)).as("n_orders"),
         (min($"o_orderpriority") === "1-URGENT").as("del"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
     graft.sources.Sources.mergeParquet(s, dir,
       target.withColumn("del", lit(false)), Seq("o_custkey"), Some("del"))
     graft.sources.Sources.mergeParquet(s, dir,
@@ -735,9 +733,7 @@ object Advanced extends QueryModule {
     * orderBy+limit — TakeOrderedAndProject, no global window. */
   private def v20(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v20_vtab_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v20_vtab")
     val ord = Tables.orders(s, d)
     val t0 = ord.filter(year($"o_orderdate") <= 1997)
       .groupBy($"o_custkey")
@@ -813,9 +809,7 @@ object Advanced extends QueryModule {
     * shape), so a downstream consumer can replay either side. */
   private def v21(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v21_cdf_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v21_cdf")
     val ord = Tables.orders(s, d)
     val t0 = ord.filter(year($"o_orderdate") <= 1997)
       .groupBy($"o_custkey")
@@ -937,9 +931,7 @@ object Advanced extends QueryModule {
     * pair. */
   private def v22(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v22_ivm_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v22_ivm")
     val ord = Tables.orders(s, d)
     val t0 = ord.filter(year($"o_orderdate") <= 1997)
       .groupBy($"o_custkey")
@@ -1035,9 +1027,7 @@ object Advanced extends QueryModule {
     * spec'd in VersionedScanSpec). */
   private def v23(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v23_scan_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v23_scan")
     val ord = Tables.orders(s, d)
     val t0 = ord.filter(year($"o_orderdate") <= 1997)
       .groupBy($"o_custkey")
@@ -1117,9 +1107,7 @@ object Advanced extends QueryModule {
     * VersionedTableSpec pins those per-fixture. */
   private def v24(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v24_hist_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v24_hist")
     val ord = Tables.orders(s, d)
     val t0 = ord.filter(year($"o_orderdate") <= 1997)
       .groupBy($"o_custkey")
@@ -1173,9 +1161,7 @@ object Advanced extends QueryModule {
     * study_r10.json `cow_write_amplification`. */
   private def v25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v25_mor_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v25_mor")
     val ord = Tables.orders(s, d)
     val t0 = ord.filter(year($"o_orderdate") <= 1997)
       .groupBy($"o_custkey")
@@ -1244,9 +1230,7 @@ object Advanced extends QueryModule {
     * broken stats path fails the gate instead of degrading. */
   private def v26(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v26_skip_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v26_skip")
     val ord = Tables.orders(s, d)
       .select($"o_orderkey", $"o_custkey", $"o_orderdate", $"o_totalprice")
     graft.sources.VersionedTable.merge(s, dir, ord, Seq("o_orderkey"),
@@ -1285,9 +1269,7 @@ object Advanced extends QueryModule {
     * string predicates that silently stop skipping fail the gate. */
   private def v27(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = graft.util.Scratch.dir(
-      "v27_strskip_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    graft.util.Scratch.deleteRecursively(new java.io.File(dir))
+    val dir = graft.util.Scratch.fresh("v27_strskip")
     val cust = Tables.customer(s, d)
       .select($"c_custkey", $"c_name", $"c_nationkey", $"c_acctbal")
     graft.sources.VersionedTable.merge(s, dir, cust, Seq("c_custkey"),

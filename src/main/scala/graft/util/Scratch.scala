@@ -74,6 +74,19 @@ object Scratch {
     d.toAbsolutePath.toString
   }
 
+  /** A new, empty directory under this JVM's root on every call, named
+    * `prefix` plus a random suffix: the home of a per-run table that a
+    * query builds, reads back and rebuilds on its next run. Two runs never
+    * share one, concurrent or not, whatever their input directories are
+    * called (a name derived from the input dir would let `/x/sf0.1` and
+    * `/x/sf0_1` collide). Each lives until the root goes, since the
+    * query's result reads it lazily. */
+  def fresh(prefix: String): String = {
+    val d = Files.createTempDirectory(root, prefix + "_")
+    touch(root)
+    d.toAbsolutePath.toString
+  }
+
   /** The one home for engine-owned DERIVED ARTIFACTS: tables a family of
     * queries would otherwise recompute from the same input, written once
     * by their first consumer and read by the rest. Returns the artifact's

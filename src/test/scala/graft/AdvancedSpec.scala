@@ -66,4 +66,36 @@ class AdvancedSpec extends SparkSpec {
     assert(merged.except(full).count() == 0 && full.except(merged).count() == 0)
     assert(merged.count() > 0)
   }
+
+  test("v19-v27 over sf0.1 and sf0_1 in parallel threads get distinct table dirs") {
+    // symlinks to the fixture: never delete this dir recursively
+    val base = java.nio.file.Files.createTempDirectory("advanced_spec_names").toString
+    val names = Seq(s"$base/sf0.1", s"$base/sf0_1")
+    names.foreach(n => java.nio.file.Files.createSymbolicLink(
+      java.nio.file.Paths.get(n), java.nio.file.Paths.get(sfDir).toAbsolutePath))
+    val vq = Advanced.queries.keys.filter(_.matches("v(19|2[0-7])_.*")).toSeq.sorted
+    assert(vq.size == 9)
+    // the top-level scratch dir each result file lives in
+    def tableDirs(files: Seq[String]): Set[String] =
+      files.flatMap(_.split("/").find(_.matches("v(19|2[0-7])_.*"))).toSet
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val runs = names.map { n =>
+      val f = new java.util.concurrent.FutureTask(() => {
+        start.await()
+        vq.map { q =>
+          val df = Advanced.queries(q)(spark, n)
+          q -> (tableDirs(df.inputFiles.toSeq), df.collect().toSeq.map(_.toString).sorted)
+        }.toMap
+      })
+      new Thread(f).start()
+      f
+    }
+    start.countDown()
+    val Seq(a, b) = runs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    assert(vq.exists(q => a(q)._1.nonEmpty), "no result reads its table dir")
+    vq.foreach { q =>
+      assert((a(q)._1 intersect b(q)._1).isEmpty, s"$q shares ${a(q)._1}")
+      assert(a(q)._2 == b(q)._2, s"$q rows differ between the two runs")
+    }
+  }
 }

@@ -1,0 +1,134 @@
+#!/usr/bin/env python3
+"""Summarize a Spark event log per SQL execution.
+
+Usage: python3 tools/joblog.py <event log> [--json] [--top N]
+
+The log is Spark's JSON-lines event log (spark.eventLog.enabled=true);
+a `.zstd`/`.zst` file is read through `zstd -dc`. For every root SQL
+execution (sub-executions such as AQE broadcasts fold into their root)
+it prints: wall, jobs, submitted stages, tasks, summed task CPU, and the
+delay from a stage's submission to its first task launch (median and
+max over the execution's stages). Jobs outside any SQL execution
+(RDD actions, listing jobs) are summed on their own line. Each stage
+attempt counts once; stages a job skipped are not counted.
+"""
+import argparse
+import json
+import statistics
+import subprocess
+import sys
+from collections import defaultdict
+
+SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
+NO_EXEC = "-"
+
+
+def events(path):
+    if path.endswith((".zstd", ".zst")):
+        text = subprocess.run(["zstd", "-dc", path], check=True, capture_output=True).stdout.decode()
+    else:
+        with open(path) as fh:
+            text = fh.read()
+    for line in text.splitlines():
+        if line.strip():
+            yield json.loads(line)
+
+
+def summarize(evs):
+    execs = {}                      # root execution id -> description, start, end
+    root_of = {}                    # execution id -> root execution id
+    stage_exec = {}                 # (stage, attempt) -> root execution id
+    job_exec = {}                   # job id -> root execution id
+    submitted = {}                  # (stage, attempt) -> submission ms
+    first_launch = {}               # (stage, attempt) -> first task launch ms
+    tasks = defaultdict(int)        # (stage, attempt) -> finished tasks
+    cpu_ns = defaultdict(int)       # (stage, attempt) -> summed executor CPU
+    for e in evs:
+        kind = e.get("Event")
+        if kind == SQL_START:
+            eid = str(e["executionId"])
+            root = str(e.get("rootExecutionId", eid))
+            root_of[eid] = root
+            if root == eid:
+                execs[eid] = {"description": e.get("description", ""), "start": e["time"], "end": None}
+        elif kind == SQL_END:
+            eid = str(e["executionId"])
+            if eid in execs:
+                execs[eid]["end"] = e["time"]
+        elif kind == "SparkListenerJobStart":
+            props = e.get("Properties") or {}
+            eid = props.get("spark.sql.execution.root.id") or props.get("spark.sql.execution.id")
+            root = root_of.get(eid, eid) if eid is not None else NO_EXEC
+            job_exec[e["Job ID"]] = root
+            for si in e.get("Stage Infos", []):
+                stage_exec.setdefault((si["Stage ID"], si.get("Stage Attempt ID", 0)), root)
+        elif kind == "SparkListenerStageSubmitted":
+            si = e["Stage Info"]
+            key = (si["Stage ID"], si.get("Stage Attempt ID", 0))
+            submitted[key] = si.get("Submission Time")
+        elif kind == "SparkListenerTaskStart":
+            key = (e["Stage ID"], e.get("Stage Attempt ID", 0))
+            t = e["Task Info"]["Launch Time"]
+            first_launch[key] = min(first_launch.get(key, t), t)
+        elif kind == "SparkListenerTaskEnd":
+            key = (e["Stage ID"], e.get("Stage Attempt ID", 0))
+            tasks[key] += 1
+            cpu_ns[key] += (e.get("Task Metrics") or {}).get("Executor CPU Time", 0)
+
+    rows = defaultdict(lambda: {"jobs": 0, "stages": 0, "tasks": 0, "task_cpu_s": 0.0, "delays_ms": []})
+    for job, root in job_exec.items():
+        rows[root]["jobs"] += 1
+    for key, sub in submitted.items():
+        r = rows[stage_exec.get(key, NO_EXEC)]
+        r["stages"] += 1
+        r["tasks"] += tasks[key]
+        r["task_cpu_s"] += cpu_ns[key] / 1e9
+        if sub is not None and key in first_launch:
+            r["delays_ms"].append(first_launch[key] - sub)
+    out = []
+    for root, r in rows.items():
+        ex = execs.get(root, {})
+        start, end = ex.get("start"), ex.get("end")
+        d = r.pop("delays_ms")
+        out.append(dict(
+            execution=root, description=ex.get("description", "(no SQL execution)")[:60],
+            wall_s=(end - start) / 1000 if start is not None and end is not None else None,
+            task_cpu_s=round(r.pop("task_cpu_s"), 3), **r,
+            delay_p50_ms=statistics.median(d) if d else None, delay_max_ms=max(d) if d else None))
+    out.sort(key=lambda x: (x["execution"] == NO_EXEC, int(x["execution"]) if x["execution"].isdigit() else 0))
+    return out
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("log")
+    ap.add_argument("--json", action="store_true", help="one JSON object per execution")
+    ap.add_argument("--top", type=int, default=0, help="only the N executions with the most jobs")
+    a = ap.parse_args()
+    rows = summarize(events(a.log))
+    total = {k: sum(r[k] for r in rows) for k in ("jobs", "stages", "tasks", "task_cpu_s")}
+    delays = [r["delay_p50_ms"] for r in rows if r["delay_p50_ms"] is not None]
+    if a.top:
+        rows = sorted(rows, key=lambda r: -r["jobs"])[:a.top]
+    if a.json:
+        for r in rows:
+            print(json.dumps(r))
+        print(json.dumps({"total": total}))
+        return
+    fmt = "{:>5} {:>7} {:>5} {:>6} {:>6} {:>8} {:>9} {:>9}  {}"
+    print(fmt.format("exec", "wall_s", "jobs", "stages", "tasks", "cpu_s", "delay_p50", "delay_max", "description"))
+    for r in rows:
+        print(fmt.format(r["execution"], "-" if r["wall_s"] is None else f"{r['wall_s']:.2f}",
+                         r["jobs"], r["stages"], r["tasks"], f"{r['task_cpu_s']:.2f}",
+                         "-" if r["delay_p50_ms"] is None else f"{r['delay_p50_ms']:.0f}ms",
+                         "-" if r["delay_max_ms"] is None else f"{r['delay_max_ms']:.0f}ms",
+                         r["description"]))
+    print(f"total: {total['jobs']} jobs, {total['stages']} stages, {total['tasks']} tasks, "
+          f"{total['task_cpu_s']:.2f} s task CPU, {len(rows)} executions shown"
+          + (f", median of per-execution delay medians {statistics.median(delays):.0f} ms" if delays else ""),
+          file=sys.stdout)
+
+
+if __name__ == "__main__":
+    main()
