@@ -31,7 +31,7 @@ object Bench {
         .withColumn("toks", split(col("s"), " "))
         .select(col("id"), col("j"), explode(transform(sequence(lit(1), size(col("toks")) - 2),
           i => concat_ws(" ", element_at(col("toks"), i), element_at(col("toks"), i + 1)))).as("sh"))
-        .withColumn("h", conv(substring(md5(col("sh")), 1, 15), 16, 10).cast("long"))
+        .withColumn("h", graft.functions.Hashing.h60(col("sh")))
         .withColumn("k", get_json_object(col("j"), "$.k").cast("int"))
         .withColumn("r", regexp_extract_all(col("sh"), lit("[^ ]+"), lit(0)))
       val agg = shingled.groupBy(col("h") % 1024).agg(count(lit(1)).as("n"), sum(col("k")).as("sk"))

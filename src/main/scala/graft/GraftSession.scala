@@ -24,6 +24,12 @@ import org.apache.spark.sql.SparkSession
   *    creations per filings_etl run (`/proc/stat processes`, threads
   *    included, 4 cores) fell from 2,143-2,247 to 533-604 with it, and a
   *    64-bucket commit task no longer pays ~1.6 ms per file serially.
+  *
+  * Every setting is a constant: there is one session configuration to
+  * test and benchmark. A deployment that wants another value calls
+  * `.config(key, value)` on the builder `builder` returns; the later
+  * call wins. Only the shuffle/spill directory reads the environment
+  * (`SPARK_GRAFT_LOCAL_DIR`, see `localDir`).
   */
 object GraftSession {
 
@@ -52,15 +58,12 @@ object GraftSession {
       // Once the real per-task constant was fixed at the source (the
       // bypass shuffle writer's 33 file creates per map task, below),
       // parallelism-first won every A/B cell: d16 5.0 vs 13.4 s wall,
-      // d02 1.7 vs 2.9, g01 6.1 vs 7.4, rest equal. Both knobs stay
-      // env-parameterised: a cluster with real data volumes wants
-      // size-targeted partitions (set ..PARALLELISM_FIRST=false and an
-      // advisory in the 64-256m range, guide §9); the measured local
-      // default keeps the driver's bench shape.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
+      // d02 1.7 vs 2.9, g01 6.1 vs 7.4, rest equal. A cluster with real
+      // data volumes wants size-targeted partitions (parallelismFirst
+      // false and an advisory in the 64-256m range, guide §9) and sets
+      // both with `.config` on the returned builder.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       // Shuffle writer + local-dir I/O (guide §2.1: map-side cost is
       // charged to executor compute; §6: local disk is the shuffle
       // medium). Thread-dump sampling of the bench showed map tasks
@@ -72,8 +75,7 @@ object GraftSession {
       // the partition count) selects the serialized sort writer — ONE
       // data+index file per map task at any R — the same writer every
       // >200-partition production shuffle already uses.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // Spark 4.1's checkpoint file checksums (new in 4.1; absent from
       // every earlier Spark) write a sibling .checksum per checkpoint
       // file through ChecksumCheckpointFileManager. On a local
@@ -83,11 +85,10 @@ object GraftSession {
       // DeprecatedRawLocalFileStatus.loadPermissionInfo): driver
       // thread-dump sampling during e17 caught 34/50 runnable samples
       // inside ProcessImpl.forkAndExec under that manager. Integrity
-      // hardening against storage corruption, not semantics — off by
-      // default here, env-overridable for deployments on storage where
-      // the protection is wanted.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      // hardening against storage corruption, not semantics — off
+      // here; a deployment on storage where the protection is wanted
+      // turns it on with `.config`.
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.hadoop.fs.file.impl", classOf[graft.util.NoForkLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",

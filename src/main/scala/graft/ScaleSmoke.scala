@@ -1,37 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ext.Dedup
-import graft.sources.Tables
 
-/** One-decade scale smoke for the dedup/similarity families: derives a
-  * 10x corpus (sf1) from the sf0.1 test data, runs the headline
-  * operators at both scales, and records the quantities the scaladocs'
-  * scale arguments actually rest on — CANDIDATE-PAIR COUNTS per LSH
-  * family, not just wall time (wall is co-tenant-noisy on this machine;
-  * candidate growth is the bucketing math itself).
+/** Derives the sf1 corpus (10x) from the sf0.1 test data, for scale
+  * runs of the query suite one decade up (`SPARK_GRAFT_SF_DIR=<out>`
+  * with `graft.Bench`).
   *
   * The 10x derivation keeps within-shard structure identical to sf0.1
-  * while making shards mutually dissimilar, so the expected reading is
-  * sharp:
+  * while making shards mutually dissimilar:
   *  - documents: shard k prefixes every token with "s<k>" — every
   *    shingle/word hash changes, so cross-shard text similarity is
   *    exactly zero and each shard reproduces sf0.1's pair structure.
-  *    Linear-candidate families (banded minhash, simhash blocks) must
-  *    therefore come out ~10x sf0.1; a superlinear reading would mean
-  *    the banding math is wrong.
+  *    `n_chars` is recomputed as `length(text)`, the fixture invariant
+  *    the source rows hold;
   *  - embeddings: shard k applies a deterministic +-1 sign flip per
   *    dimension (an orthogonal diagonal map — within-shard cosines are
-  *    EXACTLY preserved, cross-shard cosines scrambled). Sign-plane
-  *    bucketing at a FIXED plane count concentrates 10x vectors into
-  *    the same 2^planes cells, so its candidate count must grow ~100x:
-  *    the measured knee that forces `planes` to GROW with the corpus
-  *    (Dedup.signBucket scaladoc) — and the planes=8 count alongside it
-  *    shows the knob working.
+  *    EXACTLY preserved, cross-shard cosines scrambled).
+  *
+  * The candidate-pair counts and per-query timings this corpus was
+  * first built for are recorded in scale_sf1.json and BASELINE.md.
   *
   * Usage: runMain graft.ScaleSmoke [sf0.1Dir] [sf1OutDir]
-  * Writes scale_sf1.json (consumed into BASELINE.md).
+  * Writes the corpus and prints its path.
   */
 object ScaleSmoke {
 
@@ -62,7 +53,7 @@ object ScaleSmoke {
       .repartition(32).write.mode("overwrite").parquet(s"$out/$table.parquet")
   }
 
-  private def buildSf1(spark: SparkSession, src: String, out: String): Unit = {
+  private[graft] def buildSf1(spark: SparkSession, src: String, out: String): Unit = {
     // fixed dimensions stay single-copy (nation/region cardinality does
     // not scale with SF); every fact/dim keyed table shard-replicates
     Seq("region", "nation").foreach { t =>
@@ -84,7 +75,8 @@ object ScaleSmoke {
           w => concat(lit(s"s$k"), w)))
       docs.select(
         (col("doc_id") + lit(k * idStride)).as("doc_id"),
-        text.as("text"), col("lang"), col("source"), col("n_chars"))
+        text.as("text"), col("lang"), col("source"),
+        length(text).cast(docs.schema("n_chars").dataType).as("n_chars"))
     }
     docShards.reduce(_ unionByName _)
       .repartition(32).write.mode("overwrite").parquet(s"$out/documents.parquet")
@@ -101,97 +93,6 @@ object ScaleSmoke {
       .repartition(32).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
   }
 
-  /** sum over buckets of C(n,2) for the sign-plane embedding LSH. */
-  private def embeddingCandidates(s: SparkSession, d: String, planes: Int): Long =
-    Tables.embeddings(s, d)
-      .select(Dedup.signBucket(col("embedding").cast("array<double>"), planes).as("b"))
-      .groupBy(col("b")).agg(count(lit(1)).as("n"))
-      .agg((sum(col("n") * (col("n") - 1)) / 2).cast("long").as("c"))
-      .first().getLong(0)
-
-  /** Multi-probe join volume at `planes`: the probe side carries home +
-    * `planes` Hamming-1 cells per vector, so the bucket join pays
-    * sum over cells of n_probe(c) x n_home(c) rows — the quantity the
-    * recall lever actually costs. The home-bucket pair count alone
-    * (embeddingCandidates) understates multi-probe cost ~(planes+1)x. */
-  private def multiProbeJoinRows(s: SparkSession, d: String, planes: Int): Long = {
-    val e = Tables.embeddings(s, d)
-      .select(Dedup.signBucket(col("embedding").cast("array<double>"), planes)
-        .as("bucket"))
-    val home = e.groupBy(col("bucket")).agg(count(lit(1)).as("nh"))
-    val probe = e.withColumn("flip",
-        explode(array((lit(0L) +: (0 until planes).map(i => lit(1L << i))): _*)))
-      .select(col("bucket").bitwiseXOR(col("flip")).as("cell"))
-      .groupBy(col("cell")).agg(count(lit(1)).as("np"))
-    probe.join(home, probe("cell") === home("bucket"))
-      .agg(sum(col("np") * col("nh")).cast("long").as("c"))
-      .first().getLong(0)
-  }
-
-  /** Distinct banded-minhash candidate pairs (what d03/d06 feed the
-    * exact verifier). */
-  private def minhashCandidates(s: SparkSession, d: String): Long = {
-    import s.implicits._
-    Dedup.bandCandidates(Dedup.minhashBands(
-      Dedup.shingleHashes(Tables.documents(s, d), $"doc_id", $"text"), "smokemh"))
-      .count()
-  }
-
-  /** Simhash 4x15-bit block-join candidate rows (pre-verification,
-    * pre-pair-dedup — the join volume d09 actually pays). */
-  private def simhashCandidates(s: SparkSession, d: String): Long = {
-    import s.implicits._
-    val sig = Dedup.simhashSigs(s, d, 60, None)
-      .select($"doc_id", explode(array((0 until 4).map(lit): _*)).as("b"),
-        $"simhash")
-      .withColumn("bk", expr("(simhash >> (b * 15)) & 32767"))
-      .select($"b", $"bk")
-    sig.groupBy($"b", $"bk").agg(count(lit(1)).as("n"))
-      .agg((sum($"n" * ($"n" - 1)) / 2).cast("long").as("c"))
-      .first().getLong(0)
-  }
-
-  /** Distinct one-sided (batch×corpus) banded candidates for a 1-in-`mod`
-    * ingest batch — the quantity behind d12's Θ(batch) claim. Against
-    * `minhash_band_pairs` (the full two-sided count) a 1% batch should
-    * cost ~2% of the full candidate volume (either endpoint may be the
-    * batch doc), at BOTH scales — the incremental shape stays linear in
-    * the batch however big the corpus grows. */
-  private def incrementalCandidates(s: SparkSession, d: String, mod: Long): Long = {
-    import s.implicits._
-    val bands = Dedup.minhashBands(
-      Dedup.shingleHashes(Tables.documents(s, d), $"doc_id", $"text"), "smokeincr")
-    (0 until 3).map { b =>
-      val x = bands.filter($"doc_id" % mod === 7)
-        .select($"doc_id".as("na"), col(s"bh$b").as("bh"))
-      val y = bands.select($"doc_id".as("nb"), col(s"bh$b").as("bh"))
-      x.join(y, Seq("bh")).filter($"na" =!= $"nb")
-        .select(least($"na", $"nb").as("a"), greatest($"na", $"nb").as("b"))
-    }.reduce(_ unionByName _).distinct().count()
-  }
-
-  /** Ordered candidate pairs from d16's DF-capped containment index.
-    * The sf1 shards are token-prefixed (cross-shard hash spaces are
-    * disjoint), so posting-list document frequencies are unchanged
-    * within each shard and the capped index must come out ~10x linear
-    * — superlinear growth here would mean the stop-shingle cap is not
-    * actually bounding per-key fan-out. */
-  private def containmentCandidates(s: SparkSession, d: String): Long = {
-    import s.implicits._
-    val sh = Dedup.shingleHashes(Tables.documents(s, d), $"doc_id", $"text")
-      .persist()
-    sh.count()
-    val rare = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
-      .filter($"df" <= 64).select($"sh")
-    val kept = sh.join(rare, "sh")
-    val n = kept.select($"sh", $"doc_id".as("doc_a"))
-      .join(kept.select($"sh", $"doc_id".as("doc_b")), "sh")
-      .filter($"doc_a" =!= $"doc_b")
-      .select($"doc_a", $"doc_b").distinct().count()
-    sh.unpersist(blocking = false)
-    n
-  }
-
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else
@@ -202,43 +103,7 @@ object ScaleSmoke {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     buildSf1(spark, src, out)
-
-    val names = Seq("d01_exact_dedup", "d03_minhash_lsh", "d05_embedding_neardup",
-      "d06_lsh_verified_neardup", "d07_neardup_clusters", "d09_simhash_verified",
-      "d10_decontaminate", "d11_multiprobe_neardup", "d12_incremental_neardup",
-      "d16_containment",
-      "s02_batch_knn", "s07_kmeans", "s12_semantic_dedup", "s13_pq_adc")
-      .filter(SparkEntry.queries.contains)
-    def j(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val dirs = Seq("sf0.1" -> src, "sf1" -> out)
-    val sections = dirs.map { case (tag, dir) =>
-      val perQuery = names.map { n =>
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(n)(spark, dir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        s""""$n":{"sec":${j(sec)},"rows":$rows}"""
-      }
-      val cands = Seq(
-        s""""minhash_band_pairs":${minhashCandidates(spark, dir)}""",
-        s""""incremental_band_pairs_1pct":${incrementalCandidates(spark, dir, 100L)}""",
-        s""""simhash_block_pairs":${simhashCandidates(spark, dir)}""",
-        s""""containment_capped_pairs":${containmentCandidates(spark, dir)}""",
-        s""""sign4_bucket_pairs":${embeddingCandidates(spark, dir, 4)}""",
-        s""""sign8_bucket_pairs":${embeddingCandidates(spark, dir, 8)}""",
-        s""""sign8_multiprobe_join_rows":${multiProbeJoinRows(spark, dir, 8)}""",
-        s""""sign8_noprobe_result_pairs":${
-          import spark.implicits._
-          Dedup.embeddingNearDupPairs(Tables.embeddings(spark, dir),
-            $"vec_id", $"embedding", threshold = 0.4, planes = 8,
-            multiProbe = false).count()}""")
-      spark.catalog.clearCache()
-      s""""$tag":{"queries":{${perQuery.mkString(",")}},"candidates":{${cands.mkString(",")}}}"""
-    }
-    val json = s"""{${sections.mkString(",")},"copies":$copies}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_sf1.json"),
-      json.getBytes("UTF-8"))
-    println(json)
+    println(out)
     spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Hashing.{h60, h60jvm}
 import graft.queries.QueryModule
 import graft.sources.Tables
 
@@ -22,16 +23,12 @@ import graft.sources.Tables
   *  - embedding near-dup prunes the O(n^2) pair space with sign-bit
   *    buckets (a 4-plane LSH) before the exact cosine check.
   *
-  * Every hash is derived from md5 so the DuckDB oracle reproduces the
-  * exact same values — the approximate structures are byte-for-byte
-  * deterministic and fully oracle-checked, not "close enough".
+  * Every hash is derived from md5 (`graft.functions.Hashing`) so the
+  * DuckDB oracle reproduces the exact same values — the approximate
+  * structures are byte-for-byte deterministic and fully
+  * oracle-checked, not "close enough".
   */
 object Dedup extends QueryModule {
-
-  /** 60-bit deterministic hash from md5, reproducible in DuckDB as
-    * CAST('0x' || substr(md5(x),1,15) AS BIGINT). */
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Cached tables reused across a query's join branches. */
   private val slots = new graft.util.PersistSlots
@@ -1072,20 +1069,6 @@ object Dedup extends QueryModule {
     * The rollup mirrors d08 so the two chunking disciplines are
     * directly comparable under the gate.
     */
-  /** JVM twin of `h60` (same md5 → first 15 hex chars → BIGINT), for
-    * per-partition imperative paths that would otherwise pay the
-    * INTERPRETED higher-order-function evaluator. Identical output to
-    * the Column form — DedupSpec pins the equivalence. */
-  private[graft] def h60jvm(md: java.security.MessageDigest, s: String): Long = {
-    md.reset()
-    val dig = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // first 15 hex chars = 7.5 bytes: 7 full bytes + the high nibble
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (dig(i) & 0xffL); i += 1 }
-    (v << 4) | ((dig(7) & 0xf0L) >> 4)
-  }
-
   /** Public CDC surface of d14: per-doc chunk stats for the caller's
     * own corpus (docId, text columns; ids must cast to BIGINT). See
     * the d14 scaladoc for the boundary discipline and scale design.

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Hashing.h60
 import graft.queries.QueryModule
 import graft.sources.Tables
 
@@ -221,8 +222,7 @@ object TextAnalysis extends QueryModule {
     import s.implicits._
     val fp = Tables.documents(s, d)
       .select($"doc_id", posexplode(split($"text", " ")).as(Seq("pos0", "word")))
-      .withColumn("h", conv(substring(md5(concat(lit("f:"), $"word")), 1, 15), 16, 10)
-        .cast("long") % 1000000007L)
+      .withColumn("h", h60(concat(lit("f:"), $"word")) % 1000000007L)
       .groupBy($"doc_id")
       .agg(sum(($"pos0" + 1) * $"h").as("fingerprint"))
     val groups = fp.groupBy($"fingerprint").agg(count(lit(1)).as("n_same"))
@@ -260,8 +260,7 @@ object TextAnalysis extends QueryModule {
       .withColumn("n_tokens", nTokens($"text").cast("long"))
       .withColumn("quality", qualityScore($"text"))
       .filter($"quality" >= 0.75)
-      .filter(conv(substring(md5(concat(lit("s:"), $"doc_id")), 1, 15), 16, 10)
-        .cast("long") % 100 < 50)
+      .filter(h60(concat(lit("s:"), $"doc_id")) % 100 < 50)
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_tokens").as("sum_tokens"),
         round(avg($"quality"), 6).as("avg_quality"))
@@ -362,8 +361,7 @@ object TextAnalysis extends QueryModule {
     * without a shuffle or a seed-ordering hazard. */
   private def a08(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val bucket = conv(substring(md5(concat(lit("strat:"), $"doc_id")), 1, 15), 16, 10)
-      .cast("long") % 100
+    val bucket = h60(concat(lit("strat:"), $"doc_id")) % 100
     val rate = when($"lang" === "en", 50).otherwise(20)
     Tables.documents(s, d)
       .withColumn("kept", bucket < rate)
@@ -665,8 +663,7 @@ object TextAnalysis extends QueryModule {
         least(lit(1.0), lit(budget) * $"prob" / $"n_docs".cast("double")))
     val sampled = docs.select($"source", $"doc_id")
       .join(broadcast(probs.select($"source", $"rate")), "source")
-      .filter(conv(substring(md5(concat(lit("mix:"), $"doc_id")), 1, 15), 16, 10)
-        .cast("long") % 1000000L < $"rate" * 1000000.0)
+      .filter(h60(concat(lit("mix:"), $"doc_id")) % 1000000L < $"rate" * 1000000.0)
       .groupBy($"source").agg(count(lit(1)).as("n_sampled"))
     probs.join(sampled, Seq("source"), "left")
       .select($"source", $"n_docs",
@@ -727,9 +724,7 @@ object TextAnalysis extends QueryModule {
     val toks = split($"text", " ")
     // integer token weight: bucket = h60(tok) % 1024, then the weight
     // formula, all in exact BIGINT arithmetic (max |operand| ~ 2.7e12)
-    val wInt = (t: Column) =>
-      (conv(substring(md5(t), 1, 15), 16, 10).cast("long") % 1024L) *
-        2654435761L % 2048L - 1024L
+    val wInt = (t: Column) => (h60(t) % 1024L) * 2654435761L % 2048L - 1024L
     Tables.documents(s, d)
       .select($"doc_id",
         aggregate(transform(toks, wInt), lit(0L), (acc, x) => acc + x).as("sum_w"),
@@ -980,9 +975,7 @@ object TextAnalysis extends QueryModule {
     import s.implicits._
     val k = 5
     val docs = Tables.documents(s, d)
-      .withColumn("h",
-        conv(substring(md5(concat(lit("quota:"), $"doc_id")), 1, 15), 16, 10)
-          .cast("long"))
+      .withColumn("h", h60(concat(lit("quota:"), $"doc_id")))
     val picked = graft.plans.TopKPerKey.topKPerKey(
       docs.select($"lang", $"source", $"h", $"doc_id"), k,
       Seq($"lang", $"source"), Seq($"h", $"doc_id"))

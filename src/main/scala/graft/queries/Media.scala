@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Multimodal
+import graft.functions.Hashing.h60
 import graft.sources.{Tar, Xlsx}
 import graft.sources.Xlsx.W
 
@@ -1089,10 +1090,8 @@ object Media extends QueryModule {
     val dir = graft.util.Scratch.dir("orc_docs")
     graft.sources.Tables.documents(s, d).write.mode("overwrite").orc(dir)
     s.read.orc(dir)
-      .withColumn("digest",
-        conv(substring(md5(concat_ws("|",
-          $"doc_id", $"text", $"lang", $"source", $"n_chars")), 1, 15), 16, 10)
-          .cast("long") % 1000000007L)
+      .withColumn("digest", h60(concat_ws("|",
+        $"doc_id", $"text", $"lang", $"source", $"n_chars")) % 1000000007L)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_chars").as("sum_chars"),
@@ -1355,10 +1354,8 @@ object Media extends QueryModule {
       graft.sources.Tables.documents(s, d)
         .write.mode("overwrite").option("compression", c).parquet(dir)
       s.read.parquet(dir)
-        .withColumn("digest",
-          conv(substring(md5(concat_ws("|",
-            $"doc_id", $"text", $"lang", $"source", $"n_chars")), 1, 15), 16, 10)
-            .cast("long") % 1000000007L)
+        .withColumn("digest", h60(concat_ws("|",
+          $"doc_id", $"text", $"lang", $"source", $"n_chars")) % 1000000007L)
         .agg(count(lit(1)).as("n_docs"), sum($"digest").as("digest_sum"))
         .withColumn("codec", lit(c))
     }.reduce(_ unionByName _)

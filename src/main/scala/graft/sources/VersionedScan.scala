@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
 
 /** Catalyst-integrated scan of a [[VersionedTable]] snapshot — the
   * Delta/Iceberg architecture (a custom `FileIndex` under a
-  * `HadoopFsRelation`) instead of `readBuckets`' union-of-scans:
+  * `HadoopFsRelation`) instead of a union of per-commit-dir scans:
   *
   *   - ONE `FileSourceScan` node however many commit dirs the snapshot
   *     spans (after N merges the union form fans out to N branches,

@@ -373,9 +373,7 @@ object VersionedTable {
     * scan over every live commit dir's files via [[VersionedScan]]'s
     * custom FileIndex — so a key predicate on the result prunes to the
     * key's bucket (one file) inside the plan, and mixed-generation
-    * files read under the snapshot's widened schema. The union-of-scans
-    * form survives as `readBuckets` for the version-pinned internal
-    * paths (derived diff, rewrite). */
+    * files read under the snapshot's widened schema. */
   def read(spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame =
     resolved(spark, path, snapshot(spark, path, asOf), None)
@@ -424,24 +422,6 @@ object VersionedTable {
     base.join(deltaKeys, keys, "left_anti")
       .unionByName(upserted)
       .select(sn.schema.fieldNames.toSeq.map(col): _*)
-  }
-
-  private[graft] def readBuckets(spark: SparkSession, path: String, sn: Snapshot,
-      buckets: Option[Set[Int]]): DataFrame = {
-    val byDir = sn.owners.toSeq
-      .filter { case (b, _) => buckets.forall(_.contains(b)) }
-      .groupMap(_._2)(_._1)
-    if (byDir.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sn.schema)
-    else byDir.toSeq.sortBy(_._1).map { case (dir, bs) =>
-      // kb is a directory-partition column inside each commit dir, so
-      // the isin prunes at file listing; select(schema columns) rather
-      // than drop(KB) so every branch aligns for the union even across
-      // schema-widening commits
-      spark.read.parquet(s"$path/$dir")
-        .filter(col(KB).isin(bs.map(Int.box).toIndexedSeq: _*))
-        .drop(KB)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   private def listBuckets(fs: FileSystem, dir: HPath): Seq[Int] =
@@ -625,7 +605,6 @@ object VersionedTable {
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
-          conflictRecomputes.incrementAndGet()
           if (attempt > maxConflictRetries) throw e
           System.err.println(s"[VersionedTable] merge of $path hit a true " +
             s"commit conflict (${e.getMessage.take(120)}); recomputing " +
@@ -660,13 +639,6 @@ object VersionedTable {
           lit(writers)) === lit(w))
     }
   }
-
-  /** Study/ops instrumentation, not control flow: how many true
-    * conflicts forced a recompute, and how many lost manifest races
-    * were rebased, process-wide (the OCC-throughput study reads these;
-    * see study_r10.json `occ_throughput`). */
-  private[graft] val conflictRecomputes = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val rebaseRetries = new java.util.concurrent.atomic.AtomicLong
 
   private def mergeOnce(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], deleteCol: Option[String],
@@ -1067,7 +1039,6 @@ object VersionedTable {
           if (touched.nonEmpty)
             conflict(s"it rewrote bucket(s) ${touched.toSeq.sorted.take(8).mkString(",")}" +
               " that this merge also touches")
-          rebaseRetries.incrementAndGet()
           cur = Some(winner) // disjoint: rebase and retry
       }
     }
@@ -1873,16 +1844,6 @@ object VersionedTable {
           .collect().toSeq
       }
     stats.filter(_._2.nonEmpty).toMap
-  }
-
-  /** Study/spec seam: re-collect the data-skipping stats of one
-    * committed dir through the same code path a commit runs, so the
-    * stats-cost study can time driver-vs-distributed collection
-    * without staging a write. */
-  private[graft] def collectStatsFor(spark: SparkSession, path: String,
-      dir: String, cols: Seq[String]): Map[String, Map[String, (String, String)]] = {
-    val (fs, root) = fsOf(spark, path)
-    collectFileStats(spark, fs, root, dir, cols)
   }
 
   /** MoR operational surface: the numbers the compaction-cadence

@@ -181,12 +181,15 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val samples = Seq("", "a", "tok1 tok2 tok3 tok4", "Ünïcode ☃ text",
       (1 to 50).map("w" + _).mkString(" "))
+    import graft.functions.Hashing
     val md = java.security.MessageDigest.getInstance("MD5")
-    val expected = samples.toDF("s")
-      .selectExpr("CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)")
-      .as[Long].collect()
-    samples.zip(expected).foreach { case (s, e) =>
-      assert(Dedup.h60jvm(md, s) == e, s"h60 twin diverges on '$s'")
+    val rows = samples.toDF("s")
+      .select(Hashing.h60($"s"),
+        expr("CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"))
+      .as[(Long, Long)].collect()
+    samples.zip(rows).foreach { case (s, (col60, sql60)) =>
+      assert(col60 == sql60, s"Column h60 diverges from its SQL form on '$s'")
+      assert(Hashing.h60jvm(md, s) == col60, s"h60 twin diverges on '$s'")
     }
   }
 

@@ -14,6 +14,14 @@ class GraftSessionSpec extends SparkSpec {
     assert(math.abs(r - 1.0) < 1e-12)
   }
 
+  test("session pins the measured coalescing, shuffle-writer and checksum constants") {
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true")
+    assert(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")) == 64L * 1024 * 1024)
+    assert(spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
+    assert(spark.sparkContext.getConf.get("spark.shuffle.sort.bypassMergeThreshold") == "1")
+  }
+
   test("from_json is PERMISSIVE: corrupt JSON yields null, not failure") {
     import spark.implicits._
     val df = Seq("""{"k": 1}""", """not json at all""", """{"k": """).toDF("props")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Summarize a Spark event log per SQL execution.
 
-Usage: python3 tools/joblog.py <event log> [--json] [--top N]
+Usage: python3 tools/joblog.py <event log> [--stages] [--json] [--top N]
 
 The log is Spark's JSON-lines event log (spark.eventLog.enabled=true);
 a `.zstd`/`.zst` file is read through `zstd -dc`. For every root SQL
@@ -11,6 +11,12 @@ delay from a stage's submission to its first task launch (median and
 max over the execution's stages). Jobs outside any SQL execution
 (RDD actions, listing jobs) are summed on their own line. Each stage
 attempt counts once; stages a job skipped are not counted.
+
+With --stages it prints one line per submitted stage attempt instead:
+stage id, attempt, root execution, tasks, executor CPU ms, input
+records, shuffle read and write records, and the first `graft` frame of
+the stage's call site (the stage name when no frame names the engine).
+This attributes a query's cost to the operators that paid it.
 """
 import argparse
 import json
@@ -35,15 +41,19 @@ def events(path):
             yield json.loads(line)
 
 
-def summarize(evs):
+def scan(evs):
+    """One pass over the log: SQL executions, job and stage ownership,
+    and per-stage-attempt task totals."""
     execs = {}                      # root execution id -> description, start, end
     root_of = {}                    # execution id -> root execution id
-    stage_exec = {}                 # (stage, attempt) -> root execution id
+    stage_exec = {}                 # stage id (every attempt) -> root execution id
     job_exec = {}                   # job id -> root execution id
     submitted = {}                  # (stage, attempt) -> submission ms
     first_launch = {}               # (stage, attempt) -> first task launch ms
+    info = {}                       # (stage, attempt) -> declared tasks, call site
     tasks = defaultdict(int)        # (stage, attempt) -> finished tasks
     cpu_ns = defaultdict(int)       # (stage, attempt) -> summed executor CPU
+    records = defaultdict(lambda: [0, 0, 0])  # (stage, attempt) -> input, shuffle read, shuffle write
     for e in evs:
         kind = e.get("Event")
         if kind == SQL_START:
@@ -62,11 +72,12 @@ def summarize(evs):
             root = root_of.get(eid, eid) if eid is not None else NO_EXEC
             job_exec[e["Job ID"]] = root
             for si in e.get("Stage Infos", []):
-                stage_exec.setdefault((si["Stage ID"], si.get("Stage Attempt ID", 0)), root)
+                stage_exec.setdefault(si["Stage ID"], root)
         elif kind == "SparkListenerStageSubmitted":
             si = e["Stage Info"]
             key = (si["Stage ID"], si.get("Stage Attempt ID", 0))
             submitted[key] = si.get("Submission Time")
+            info[key] = (si.get("Number of Tasks", 0), si.get("Stage Name", ""), si.get("Details", ""))
         elif kind == "SparkListenerTaskStart":
             key = (e["Stage ID"], e.get("Stage Attempt ID", 0))
             t = e["Task Info"]["Launch Time"]
@@ -74,13 +85,25 @@ def summarize(evs):
         elif kind == "SparkListenerTaskEnd":
             key = (e["Stage ID"], e.get("Stage Attempt ID", 0))
             tasks[key] += 1
-            cpu_ns[key] += (e.get("Task Metrics") or {}).get("Executor CPU Time", 0)
+            m = e.get("Task Metrics") or {}
+            cpu_ns[key] += m.get("Executor CPU Time", 0)
+            r = records[key]
+            r[0] += (m.get("Input Metrics") or {}).get("Records Read", 0)
+            r[1] += (m.get("Shuffle Read Metrics") or {}).get("Total Records Read", 0)
+            r[2] += (m.get("Shuffle Write Metrics") or {}).get("Shuffle Records Written", 0)
+    return dict(execs=execs, stage_exec=stage_exec, job_exec=job_exec, submitted=submitted,
+                first_launch=first_launch, info=info, tasks=tasks, cpu_ns=cpu_ns, records=records)
 
+
+def summarize(evs):
+    st = scan(evs)
+    execs, stage_exec, submitted = st["execs"], st["stage_exec"], st["submitted"]
+    first_launch, tasks, cpu_ns = st["first_launch"], st["tasks"], st["cpu_ns"]
     rows = defaultdict(lambda: {"jobs": 0, "stages": 0, "tasks": 0, "task_cpu_s": 0.0, "delays_ms": []})
-    for job, root in job_exec.items():
+    for job, root in st["job_exec"].items():
         rows[root]["jobs"] += 1
     for key, sub in submitted.items():
-        r = rows[stage_exec.get(key, NO_EXEC)]
+        r = rows[stage_exec.get(key[0], NO_EXEC)]
         r["stages"] += 1
         r["tasks"] += tasks[key]
         r["task_cpu_s"] += cpu_ns[key] / 1e9
@@ -100,12 +123,52 @@ def summarize(evs):
     return out
 
 
+def call_site(name, details):
+    """The first call-site frame that names the engine, else the stage name."""
+    frame = next((ln for ln in details.splitlines() if "graft" in ln), None)
+    return (frame or name.split("\n")[0]).strip()[:100]
+
+
+def stage_rows(evs):
+    st = scan(evs)
+    out = []
+    for key in sorted(st["submitted"]):
+        n_tasks, name, details = st["info"][key]
+        inp, sh_r, sh_w = st["records"][key]
+        out.append(dict(stage=key[0], attempt=key[1], execution=st["stage_exec"].get(key[0], NO_EXEC),
+                        tasks=n_tasks, cpu_ms=st["cpu_ns"][key] // 1000000, input_records=inp,
+                        shuffle_read_records=sh_r, shuffle_write_records=sh_w,
+                        call_site=call_site(name, details)))
+    return out
+
+
+def print_stages(rows, as_json):
+    if as_json:
+        for r in rows:
+            print(json.dumps(r))
+        return
+    fmt = "{:>5} {:>3} {:>5} {:>6} {:>8} {:>10} {:>10} {:>10}  {}"
+    print(fmt.format("stage", "att", "exec", "tasks", "cpu_ms", "in_rec", "sh_r_rec", "sh_w_rec", "call site"))
+    for r in rows:
+        print(fmt.format(r["stage"], r["attempt"], r["execution"], r["tasks"], r["cpu_ms"],
+                         r["input_records"], r["shuffle_read_records"], r["shuffle_write_records"],
+                         r["call_site"]))
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("log")
     ap.add_argument("--json", action="store_true", help="one JSON object per execution")
-    ap.add_argument("--top", type=int, default=0, help="only the N executions with the most jobs")
+    ap.add_argument("--top", type=int, default=0,
+                    help="only the N executions with the most jobs (with --stages: the N stages with the most CPU)")
+    ap.add_argument("--stages", action="store_true", help="one line per stage attempt")
     a = ap.parse_args()
+    if a.stages:
+        rows = stage_rows(events(a.log))
+        if a.top:
+            rows = sorted(rows, key=lambda r: -r["cpu_ms"])[:a.top]
+        print_stages(rows, a.json)
+        return
     rows = summarize(events(a.log))
     total = {k: sum(r[k] for r in rows) for k in ("jobs", "stages", "tasks", "task_cpu_s")}
     delays = [r["delay_p50_ms"] for r in rows if r["delay_p50_ms"] is not None]
