@@ -1,6 +1,16 @@
 package graft
 
+import graft.plans.TopKPerKey
 import graft.queries.Graph
+import org.apache.spark.graft.SparkProbe
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, ExprId}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.collection.mutable
+import scala.util.Random
 
 class GraphSpec extends SparkSpec {
 
@@ -97,16 +107,8 @@ class GraphSpec extends SparkSpec {
     rows.filter(_._2 == 0L).foreach(r => assert(r._1 % 50 == 0, s"seed rule: $r"))
     // BFS level property against an independently built edge map: every
     // hop-k node has a neighbor at k-1 and none at < k-1
-    val pairs = graft.sources.Tables.lineitem(spark, sfDir)
-      .join(graft.sources.Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
-      .select($"o_custkey".as("c"), $"l_suppkey".as("sup")).distinct()
-    val co = pairs.as("a").join(pairs.as("b"), $"a.c" === $"b.c" && $"a.sup" =!= $"b.sup")
-      .groupBy($"a.sup".as("s1"), $"b.sup".as("s2")).agg(count(lit(1)).as("shared"))
-    val top = co.withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"s1")
-          .orderBy($"shared".desc, $"s2"))).filter($"rk" <= 5)
-    val adj = top.select(least($"s1", $"s2").as("a"), greatest($"s1", $"s2").as("b"))
-      .distinct().as[(Long, Long)].collect()
+    val adj = declarativeEdges(graft.sources.Tables.lineitem(spark, sfDir),
+        graft.sources.Tables.orders(spark, sfDir)).as[(Long, Long)].collect()
       .flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
     rows.filter(_._2 > 0L).foreach { case (n, hp) =>
@@ -175,5 +177,146 @@ class GraphSpec extends SparkSpec {
     import graft.ext.Dedup
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(Dedup.starComponents(empty, $"src", $"dst").count() == 0L)
+  }
+
+  test("co-trading kernel equals the declarative half/mirror/TopKPerKey build on seeded fixtures") {
+    (1 to 6).foreach { seed =>
+      val (li, ord) = coTables(seed)
+      val (got, schema) = Graph.buildCoTradingEdges(li, ord)(e => (e.collect(), e.schema))
+      val want = declarativeEdges(li, ord)
+      assert(schema.map(_.dataType) == want.schema.map(_.dataType), s"seed $seed: $schema")
+      val (g, w) = (got.map(_.toSeq).toSet, want.collect().map(_.toSeq).toSet)
+      assert(g == w, s"seed $seed: kernel only ${g -- w}, declarative only ${w -- g}")
+      assert(got.length == got.distinct.length, s"seed $seed: duplicate edges")
+    }
+  }
+
+  test("the co-trading fixtures cover every case the parity claim rests on") {
+    val fx = (1 to 6).map(coFixture)
+    val perSeed = fx.map { case (li, ord) =>
+      val cust = ord.toMap
+      val pairs = li.collect { case (o, Some(s)) if cust.get(o).exists(_.isDefined) =>
+        (cust(o).get, s) }.distinct
+      val custsOf = pairs.groupBy(_._2).map { case (s, ps) => s -> ps.map(_._1).toSet }
+      val ranked = custsOf.keys.toSeq.map { s1 =>
+        custsOf.keys.toSeq.filter(_ != s1)
+          .map(s2 => (custsOf(s1) & custsOf(s2)).size).filter(_ > 0).sorted.reverse
+      }
+      (pairs, ranked)
+    }
+    val pairs = perSeed.flatMap(_._1)
+    val ranked = perSeed.flatMap(_._2)
+    assert(ranked.exists(r => r.length > 5 && r(4) == r(5)), "a tie straddles the 5th place")
+    assert(ranked.exists(r => r.nonEmpty && r.length < 5), "fewer than 5 co-suppliers")
+    assert(perSeed.exists(_._1.groupBy(_._1).exists(_._2.size == 1)), "a single-supplier customer")
+    assert(pairs.exists(_._2 < 0), "negative supplier keys")
+    val sups = perSeed.head._1.map(_._2).distinct.sorted
+    assert(sups.zip(sups.tail).exists { case (a, b) => b - a > 1 }, "non-contiguous supplier keys")
+    assert(fx.exists { case (li, ord) =>
+      ord.exists(o => o._2.isEmpty && li.exists(_._1 == o._1)) }, "a null o_custkey with lineitems")
+    assert(fx.exists(_._1.exists(_._2.isEmpty)), "a null l_suppkey")
+    assert(fx.exists { case (li, _) => li.length > li.distinct.length }, "duplicate lineitems")
+  }
+
+  test("the co-trading build destroys its broadcast and runs no supplier-pair aggregate") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    def adjacencies() = SparkProbe.broadcastValues().count(_.isInstanceOf[Graph.CoAdjacency])
+    val (li, ord) = coTables(1)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (rows, during) = try {
+      Graph.buildCoTradingEdges(li, ord)(e => (e.collect(), adjacencies()))
+    } finally {
+      SparkProbe.drainListeners(spark)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(rows.nonEmpty)
+    assert(during == 1, "the adjacency is a broadcast block while the edges are consumed")
+    // destroy() removes the blocks asynchronously
+    eventually(timeout(30.seconds), interval(50.millis)) {
+      assert(adjacencies() == 0, "the adjacency broadcast outlived the build")
+    }
+    // every query the build ran, the fact pass included
+    val ran = plans.toArray(Array.empty[LogicalPlan]).toSeq
+    assert(ran.exists(_.output.exists(_.name == "a")), "the edge query")
+    assert(ran.exists(p => p.collectLeaves().exists(_.output.exists(_.name == "l_suppkey"))),
+      "the fact pass")
+    ran.foreach(p => assert(supplierPairAggregates(p).isEmpty, p))
+    assert(supplierPairAggregates(declarativeEdges(li, ord).queryExecution.optimizedPlan)
+      .nonEmpty, "the guard must see the declarative build's pair aggregate")
+  }
+
+  /** The declarative build the kernel replaced, kept as its oracle: the
+    * per-customer pair self-join on `a.sup < b.sup`, counted, mirrored and
+    * cut to 5 per supplier by TopKPerKey. */
+  private def declarativeEdges(lineitem: DataFrame, orders: DataFrame): DataFrame = {
+    import spark.implicits._
+    val pairs = lineitem.join(orders, $"l_orderkey" === $"o_orderkey")
+      .select($"o_custkey".as("c"), $"l_suppkey".as("sup")).distinct()
+    val half = pairs.as("a").join(pairs.as("b"), $"a.c" === $"b.c" && $"a.sup" < $"b.sup")
+      .groupBy($"a.sup".as("s1"), $"b.sup".as("s2"))
+      .agg(count(lit(1)).as("shared"))
+    val co = half.unionAll(half.select($"s2".as("s1"), $"s1".as("s2"), $"shared"))
+    TopKPerKey.topKPerKey(co, 5, Seq($"s1"), Seq($"shared".desc, $"s2"))
+      .select(least($"s1", $"s2").as("a"), greatest($"s1", $"s2").as("b"))
+      .distinct()
+  }
+
+  /** Aggregates grouped by two or more keys that derive from l_suppkey:
+    * the supplier-pair space. Lineage follows aliases to a fixpoint. */
+  private def supplierPairAggregates(plan: LogicalPlan): Seq[Aggregate] = {
+    val sup = mutable.Set[ExprId]()
+    plan.foreach(_.output.filter(_.name == "l_suppkey").foreach(sup += _.exprId))
+    var size = -1
+    while (size != sup.size) {
+      size = sup.size
+      plan.foreach(_.expressions.foreach(_.foreach {
+        case a: Alias if a.child.references.nonEmpty &&
+            a.child.references.forall(r => sup(r.exprId)) => sup += a.exprId
+        case _ =>
+      }))
+    }
+    plan.collect { case a: Aggregate
+      if a.groupingExpressions.count(_.references.exists(r => sup(r.exprId))) >= 2 => a }
+  }
+
+  /** The fixture of `seed` as DataFrames; seed 6 carries INT keys, so the
+    * build must hand back the input's key type. */
+  private def coTables(seed: Int): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val (li, ord) = coFixture(seed)
+    val key = if (seed == 6) "int" else "long"
+    (li.toDF("l_orderkey", "l_suppkey").select($"l_orderkey", $"l_suppkey".cast(key)),
+      ord.toDF("o_orderkey", "o_custkey").select($"o_orderkey", $"o_custkey".cast(key)))
+  }
+
+  /** (l_orderkey, l_suppkey) lineitems and (o_orderkey, o_custkey) orders
+    * of a small random bipartite trading graph. Supplier keys are spread
+    * over both signs with gaps, each customer buys from its own pool of
+    * 1-6 suppliers (a fifth of the customers from exactly one), counts are
+    * small so shared-count ties are common, and some orders and lineitems
+    * carry null keys or repeat. */
+  private def coFixture(seed: Int): (Seq[(Long, Option[Long])], Seq[(Long, Option[Long])]) = {
+    val rnd = new Random(seed)
+    val sups = rnd.shuffle((-30 to 30).map(_ * 7L - 3)).take(8 + rnd.nextInt(10))
+    val custs = rnd.shuffle((0 until 200).map(_ * 3L + 11)).take(15 + rnd.nextInt(20))
+    val pool = custs.map { c =>
+      c -> rnd.shuffle(sups).take(if (rnd.nextInt(5) == 0) 1 else 2 + rnd.nextInt(5))
+    }.toMap
+    val ord = (custs.flatMap(c => Seq.fill(1 + rnd.nextInt(3))(Option(c))) ++
+      Seq(None, None)).zipWithIndex.map { case (c, i) => (i.toLong, c) }
+    val li = ord.flatMap { case (o, c) =>
+      val from = c.map(pool).getOrElse(sups.take(3))
+      Seq.fill(1 + rnd.nextInt(4))(from(rnd.nextInt(from.size))).flatMap { s =>
+        val line = (o, if (rnd.nextInt(15) == 0) None else Some(s))
+        if (rnd.nextInt(4) == 0) Seq(line, line) else Seq(line)
+      }
+    }
+    (rnd.shuffle(li), ord)
   }
 }
