@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Generation-blind Excel reader — the exact `pd.read_excel` contract
   * (mainTesting.py:456-458): pandas dispatches on the FILE BYTES, not
@@ -37,32 +36,16 @@ object Excel {
         " are neither a zip (OOXML .xlsx) nor a compound file (BIFF8 .xls)")
   }
 
-  /** Read every *.xls and *.xlsx under `dir` into the long cell shape,
-    * dispatching each file on its magic bytes (a mislabeled extension
-    * reads through the right parser, the pandas behavior). */
+  /** Read every top-level .xls and .xlsx under `dir` (any case) into the
+    * long cell shape, dispatching each file on its magic bytes (a
+    * mislabeled extension reads through the right parser, the pandas
+    * behavior). */
   def read(spark: SparkSession, dir: String): Dataset[Xlsx.Cell] = {
     import spark.implicits._
-    // case-tolerant extensions (.XLS archives are common); Hadoop
-    // globs are case-sensitive, so both cases are listed explicitly
-    spark.read.format("binaryFile").load(s"$dir/*.{xls,xlsx,XLS,XLSX}")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        parseAny(bytes).map { case (sheet, si, r, c, v) =>
-          Xlsx.Cell(name, sheet, si, r, c, v)
-        }
-      }
+    Sources.perFile(spark, dir, Seq("xls", "xlsx"))(Xlsx.cellsOf(parseAny))
   }
 
   /** Reference `cari_sheet_excel` over BOTH generations at once. */
-  def discoverSheet(spark: SparkSession, dir: String, keyword: String): DataFrame = {
-    import spark.implicits._
-    read(spark, dir)
-      .filter(lower($"value").contains(keyword.toLowerCase))
-      .groupBy($"file", $"sheet_idx", $"sheet")
-      .agg(count(lit(1)).as("n_hits"))
-      .orderBy($"file", $"sheet_idx")
-      .limit(1)
-      .select($"file", $"sheet", $"n_hits")
-  }
+  def discoverSheet(spark: SparkSession, dir: String, keyword: String): DataFrame =
+    Xlsx.firstSheetWith(read(spark, dir), keyword)
 }

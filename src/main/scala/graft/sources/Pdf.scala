@@ -67,8 +67,9 @@ import org.apache.spark.sql.functions._
   * message — a quarantine pattern (m14) belongs upstream of the
   * parser, not silently inside it.
   *
-  * Spark integration mirrors sources/Xlsx: binaryFile scan → per-file
-  * executor-side parse via flatMap; the payload never shuffles, only
+  * Spark integration is the connectors' one scan, [[Sources.perFile]]:
+  * the directory's top-level `.pdf` files (any case) → per-file
+  * executor-side parse; the payload never shuffles, only
   * (file, page, line_no, text) rows move. A filing corpus at 100 TB
   * parallelizes per file inside the scan stage.
   */
@@ -76,18 +77,15 @@ object Pdf {
 
   case class Line(file: String, page: Long, line_no: Long, text: String)
 
-  /** Read every *.pdf under `dir` into per-line rows. */
+  /** Read every top-level .pdf under `dir` into per-line rows. */
   def read(spark: SparkSession, dir: String,
       password: Option[String] = None): Dataset[Line] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.pdf")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        parsePdf(bytes, password).map {
-          case (pg, ln, text) => Line(name, pg, ln, text)
-        }
+    Sources.perFile(spark, dir, Seq("pdf")) { (name, bytes) =>
+      parsePdf(bytes, password).iterator.map {
+        case (pg, ln, text) => Line(name, pg, ln, text)
       }
+    }
   }
 
   /** Reference page-keyword search (`mainTesting.py:217-254`): pages
@@ -109,20 +107,17 @@ object Pdf {
   case class PosLine(file: String, page: Long, line_no: Long,
       x: Double, y: Double, text: String)
 
-  /** Read every *.pdf under `dir` into POSITIONED rows: each shown
+  /** Read every top-level .pdf under `dir` into POSITIONED rows: each shown
     * string with the text-line origin (x, y) in page coordinates at
     * the moment of its show op. */
   def readPositioned(spark: SparkSession, dir: String,
       password: Option[String] = None): Dataset[PosLine] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.pdf")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        parsePdfPositioned(bytes, password).map { case (pg, ln, x, y, text) =>
-          PosLine(name, pg, ln, x, y, text)
-        }
+    Sources.perFile(spark, dir, Seq("pdf")) { (name, bytes) =>
+      parsePdfPositioned(bytes, password).iterator.map { case (pg, ln, x, y, text) =>
+        PosLine(name, pg, ln, x, y, text)
       }
+    }
   }
 
   /** Table-region scan — the engine-native form of the reference's
@@ -155,7 +150,7 @@ object Pdf {
   case class Cell(file: String, page: Long, row_idx: Long, col_idx: Long,
       value: String)
 
-  /** Read every *.pdf under `dir` into RULING rows: the axis-aligned
+  /** Read every top-level .pdf under `dir` into RULING rows: the axis-aligned
     * line segments its content streams stroke (`m`/`l`/`re` + `S`-family
     * paint ops) or fill as thin bars (`re f`, ≤2pt across — the other
     * way real tables draw their rules), in displayed coordinates. The
@@ -163,14 +158,11 @@ object Pdf {
   def readRulings(spark: SparkSession, dir: String,
       password: Option[String] = None): Dataset[Ruling] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.pdf")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        parseRulings(bytes, password).map { case (pg, x0, y0, x1, y1) =>
-          Ruling(name, pg, x0, y0, x1, y1)
-        }
+    Sources.perFile(spark, dir, Seq("pdf")) { (name, bytes) =>
+      parseRulings(bytes, password).iterator.map { case (pg, x0, y0, x1, y1) =>
+        Ruling(name, pg, x0, y0, x1, y1)
       }
+    }
   }
 
   /** LATTICE-mode table extraction — tabula's default when ruled lines
@@ -204,17 +196,8 @@ object Pdf {
     * repartitions the finished cells, then sorts within the
     * partition). */
   def tableLattice(spark: SparkSession, dir: String,
-      password: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.pdf")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        pageCellRows(bytes, password, streamFallback = false).map {
-          case (pg, r, c, v) => Cell(name, pg, r, c, v)
-        }
-      }.toDF()
-  }
+      password: Option[String] = None): DataFrame =
+    tableCells(spark, dir, password, streamFallback = false)
 
   /** Tabula's actual DEFAULT behavior: lattice where rulings exist,
     * stream-mode otherwise. Ruled pages produce [[tableLattice]] cells;
@@ -225,16 +208,17 @@ object Pdf {
     * per-file flatMap (see [[tableLattice]]'s execution note): one
     * scan, one parse, zero shuffle. */
   def tableAuto(spark: SparkSession, dir: String,
-      password: Option[String] = None): DataFrame = {
+      password: Option[String] = None): DataFrame =
+    tableCells(spark, dir, password, streamFallback = true)
+
+  private def tableCells(spark: SparkSession, dir: String,
+      password: Option[String], streamFallback: Boolean): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.pdf")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        pageCellRows(bytes, password, streamFallback = true).map {
-          case (pg, r, c, v) => Cell(name, pg, r, c, v)
-        }
-      }.toDF()
+    Sources.perFile(spark, dir, Seq("pdf")) { (name, bytes) =>
+      pageCellRows(bytes, password, streamFallback).iterator.map {
+        case (pg, r, c, v) => Cell(name, pg, r, c, v)
+      }
+    }.toDF()
   }
 
   // ---- parser (executor-side, JDK-only) -----------------------------
@@ -2023,11 +2007,9 @@ object Pdf {
     val cmaps = scala.collection.mutable.Map[Int, Option[FontDec]]()
     val fcache = scala.collection.mutable.Map[(Int, Option[String], Int), FormX]()
     pageObjs(doc).zipWithIndex.flatMap { case ((pageObj, res, geo), pi) =>
-      walkContent(pageContent(doc, pageObj), fontsOf(doc, res, cmaps),
-          formsOf(doc, res, cmaps, fcache))
+      displayTokens(doc, pageContent(doc, pageObj), res, geo, cmaps, fcache)
         .zipWithIndex.map { case ((x, y, text), li) =>
-          val (dx, dy) = displayXY(geo, x, y)
-          ((pi + 1).toLong, li.toLong, dx, dy, text)
+          ((pi + 1).toLong, li.toLong, x, y, text)
         }
     }
   }
@@ -2041,13 +2023,31 @@ object Pdf {
       : Seq[(Long, Double, Double, Double, Double)] = {
     val doc = new Doc(bytes, password)
     pageObjs(doc).zipWithIndex.flatMap { case ((pageObj, _, geo), pi) =>
-      walkPaths(pageContent(doc, pageObj)).map { case (x0, y0, x1, y1) =>
-        val (dx0, dy0) = displayXY(geo, x0, y0)
-        val (dx1, dy1) = displayXY(geo, x1, y1)
-        ((pi + 1).toLong, dx0, dy0, dx1, dy1)
+      displayRulings(pageContent(doc, pageObj), geo).map { case (x0, y0, x1, y1) =>
+        ((pi + 1).toLong, x0, y0, x1, y1)
       }
     }
   }
+
+  /** One page's shown strings (x, y, text) in DISPLAYED coordinates. */
+  private def displayTokens(doc: Doc, content: String, res: Option[String],
+      geo: PageGeo, cmaps: scala.collection.mutable.Map[Int, Option[FontDec]],
+      fcache: scala.collection.mutable.Map[(Int, Option[String], Int), FormX])
+      : Seq[(Double, Double, String)] =
+    walkContent(content, fontsOf(doc, res, cmaps), formsOf(doc, res, cmaps, fcache))
+      .map { case (x, y, text) =>
+        val (dx, dy) = displayXY(geo, x, y)
+        (dx, dy, text)
+      }
+
+  /** One page's painted rulings (x0, y0, x1, y1) in DISPLAYED coordinates. */
+  private def displayRulings(content: String, geo: PageGeo)
+      : Seq[(Double, Double, Double, Double)] =
+    walkPaths(content).map { case (x0, y0, x1, y1) =>
+      val (dx0, dy0) = displayXY(geo, x0, y0)
+      val (dx1, dy1) = displayXY(geo, x1, y1)
+      (dx0, dy0, dx1, dy1)
+    }
 
   /** Parses started, across all entry points that construct a [[Doc]]
     * (xref walk + decryption setup) — the spec seam proving the
@@ -2099,17 +2099,8 @@ object Pdf {
     val eps = 0.01
     pageObjs(doc).zipWithIndex.flatMap { case ((pageObj, res, geo), pi) =>
       val content = pageContent(doc, pageObj)
-      val toks = walkContent(content, fontsOf(doc, res, cmaps),
-          formsOf(doc, res, cmaps, fcache))
-        .map { case (x, y, text) =>
-          val (dx, dy) = displayXY(geo, x, y)
-          (dx, dy, text)
-        }
-      val rulings = walkPaths(content).map { case (x0, y0, x1, y1) =>
-        val (dx0, dy0) = displayXY(geo, x0, y0)
-        val (dx1, dy1) = displayXY(geo, x1, y1)
-        (dx0, dy0, dx1, dy1)
-      }
+      val toks = displayTokens(doc, content, res, geo, cmaps, fcache)
+      val rulings = displayRulings(content, geo)
       val (horiz, vert) = rulings.partition(r => math.abs(r._4 - r._2) <= eps)
       val ycuts = clusterCuts(horiz.map(r => round2((r._2 + r._4) / 2)))
       val xcuts = clusterCuts(vert.map(r => round2((r._1 + r._3) / 2)))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink layer beyond the fixture parquet (SURVEY.md §2.1): CSV
@@ -212,26 +212,7 @@ object Sources {
     // aggregate) runs once, not once per consumer
     val u = updates.persist()
     try {
-      // ONE batch-sized aggregate validates both contracts (null keys /
-      // duplicate keys) AND collects the affected bucket set, before
-      // anything durable moves; the offending-key lookup re-runs only
-      // on the failure path
-      val stats = u.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("n"))
-        .agg(max(col("n")).as("maxn"),
-          max(keyCols.map(col(_).isNull).reduce(_ || _).cast("int")).as("anynull"),
-          collect_set(bucket).as("bks"))
-        .collect()(0)
-      if (!stats.isNullAt(0) && (stats.getLong(0) > 1 || stats.getInt(1) > 0)) {
-        val bad = u.groupBy(keyCols.map(col): _*)
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1 || keyCols.map(col(_).isNull).reduce(_ || _))
-          .limit(1).collect()
-        throw new IllegalArgumentException(
-          s"mergeParquet: null or duplicate key ${bad.headOption.getOrElse("")} in the " +
-            s"update batch for (${keyCols.mkString(",")}) — keys must be unique and " +
-            "non-null; compact a versioned log first (the v16 struct-max shape)")
-      }
+      val affected = keyBatchBuckets(u, keyCols, bucket, "mergeParquet").toSeq.sorted
       val dataCols = u.columns.filterNot(c => deleteCol.contains(c)).toSeq
       val upserts = deleteCol
         .map(c => u.filter(!coalesce(col(c), lit(false))))
@@ -249,8 +230,6 @@ object Sources {
           .write.mode("overwrite").partitionBy(kb).parquet(path)
         return
       }
-      val affected =
-        (if (stats.isNullAt(2)) Seq.empty[Int] else stats.getSeq[Int](2)).sorted
       if (affected.isEmpty) return
       val cur = spark.read.parquet(path)
         .filter(col(kb).isin(affected.map(Int.box).toIndexedSeq: _*))
@@ -381,5 +360,67 @@ object Sources {
       }
     } finally conn.close()
     df.write.mode("append").jdbc(url, table, props)
+  }
+
+  /** Both merge sinks' key-batch contract (`mergeParquet`,
+    * `VersionedTable.merge`): keys non-null (NULL never equi-matches, so
+    * it would duplicate on re-merge) and unique (two updates for one key
+    * have no deterministic winner). One batch-sized aggregate checks both
+    * and returns the affected buckets; the offending-key lookup runs only
+    * on failure, its message prefixed by `who`. */
+  private[sources] def keyBatchBuckets(u: DataFrame, keyCols: Seq[String],
+      bucketOf: Column, who: String): Set[Int] = {
+    import org.apache.spark.sql.functions._
+    val anyNull = keyCols.map(col(_).isNull).reduce(_ || _)
+    val perKey = u.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
+    val stats = perKey
+      .agg(max(col("n")).as("maxn"), max(anyNull.cast("int")).as("anynull"),
+        collect_set(bucketOf).as("bks"))
+      .collect()(0)
+    if (!stats.isNullAt(0) && (stats.getLong(0) > 1 || stats.getInt(1) > 0)) {
+      val bad = perKey.filter(col("n") > 1 || anyNull).limit(1).collect()
+      throw new IllegalArgumentException(
+        s"$who: null or duplicate key ${bad.headOption.getOrElse("")} in the " +
+          s"update batch for (${keyCols.mkString(",")}) — keys must be unique and " +
+          "non-null; compact a versioned log first (the v16 struct-max shape)")
+    }
+    if (stats.isNullAt(2)) Set.empty else stats.getSeq[Int](2).toSet
+  }
+
+  /** The one binary-file scan behind the PDF and Excel connectors: list
+    * `dir` (a directory, or a glob over directories) once on the driver,
+    * keep its top-level regular files that are not hidden (`.` or `_`
+    * prefix) and whose extension is one of `exts` (lowercase, matched
+    * case-insensitively), load exactly those through binaryFile, and run
+    * `parse(baseName, bytes)` per file in one executor-side flatMap.
+    * Listed paths, not a `*.ext` glob: Spark's FileStreamSink probe stats
+    * a lone load path and WARNs with a stack trace when it is a glob; a
+    * `pathGlobFilter` directory load fails on a `k=v/` subdirectory. No
+    * matching file, or no directory, fails here with PATH_NOT_FOUND
+    * naming `dir` and `exts`. */
+  private[graft] def perFile[T: Encoder](spark: SparkSession, dir: String,
+      exts: Seq[String])(parse: (String, Array[Byte]) => Iterator[T]): Dataset[T] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(root)).toSeq.flatten.filter(_.isDirectory)
+      .flatMap(d => fs.listStatus(d.getPath))
+      .filter { f =>
+        val name = f.getPath.getName
+        val lower = name.toLowerCase(java.util.Locale.ROOT)
+        f.isFile && !name.startsWith(".") && !name.startsWith("_") &&
+          exts.exists(e => lower.endsWith("." + e))
+      }
+    if (files.isEmpty)
+      throw new AnalysisException("PATH_NOT_FOUND", Map("path" ->
+        s"$dir/*.{${exts.mkString(",")}} (extensions matched case-insensitively)"))
+    // listed names are literal: escape the glob metacharacters Spark
+    // would otherwise expand (`r[1].pdf` would look for `r1.pdf`)
+    val paths = files.map(_.getPath.toString.replaceAll("""([\\{}\[\]*?])""", """\\$1"""))
+    import spark.implicits._
+    spark.read.format("binaryFile").load(paths: _*)
+      .select($"path", $"content").as[(String, Array[Byte])]
+      .flatMap { case (path, bytes) =>
+        parse(path.substring(path.lastIndexOf('/') + 1), bytes)
+      }
   }
 }

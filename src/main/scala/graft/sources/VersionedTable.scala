@@ -712,25 +712,7 @@ object VersionedTable {
     try {
       // one job: per-key multiplicity, null keys, and the affected
       // bucket set together
-      val stats = u.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("n"))
-        .agg(max(col("n")).as("maxn"),
-          max(keyCols.map(col(_).isNull).reduce(_ || _).cast("int")).as("anynull"),
-          collect_set(bucket).as("bks"))
-        .collect()(0)
-      if (!stats.isNullAt(0) && (stats.getLong(0) > 1 || stats.getInt(1) > 0)) {
-        val bad = u.groupBy(keyCols.map(col): _*)
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1 || keyCols.map(col(_).isNull).reduce(_ || _))
-          .limit(1).collect()
-        throw new IllegalArgumentException(
-          s"merge: null or duplicate key ${bad.headOption.getOrElse("")} in the " +
-            s"update batch for (${keyCols.mkString(",")}) — keys must be unique " +
-            "and non-null; compact a versioned log first (the v16 struct-max shape)")
-      }
-      val affected =
-        if (stats.isNullAt(2)) Set.empty[Int]
-        else stats.getSeq[Int](2).toSet // <= numBuckets ints on the driver
+      val affected = Sources.keyBatchBuckets(u, keyCols, bucket, "merge")
       val dataCols = u.columns.filterNot(c => deleteCol.contains(c)).toSeq
       val upserts = deleteCol
         .map(c => u.filter(!coalesce(col(c), lit(false))))

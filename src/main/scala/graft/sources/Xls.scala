@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Legacy `.xls` (BIFF8) source — the reference reads both Excel
   * generations transparently (`pd.read_excel`, mainTesting.py:456-458),
@@ -37,32 +36,17 @@ import org.apache.spark.sql.functions._
   */
 object Xls {
 
-  /** Read every *.xls under `dir` into the long cell shape (the same
-    * [[Xlsx.Cell]] rows, so downstream operators are format-blind). */
+  /** Read every top-level .xls under `dir` into the long cell shape (the
+    * same [[Xlsx.Cell]] rows, so downstream operators are format-blind). */
   def read(spark: SparkSession, dir: String): Dataset[Xlsx.Cell] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.xls")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        parseWorkbook(bytes).map { case (sheet, si, r, c, v) =>
-          Xlsx.Cell(name, sheet, si, r, c, v)
-        }
-      }
+    Sources.perFile(spark, dir, Seq("xls"))(Xlsx.cellsOf(parseWorkbook))
   }
 
   /** Reference `cari_sheet_excel` over the binary generation: first
     * sheet (file order, then declared order) containing `keyword`. */
-  def discoverSheet(spark: SparkSession, dir: String, keyword: String): DataFrame = {
-    import spark.implicits._
-    read(spark, dir)
-      .filter(lower($"value").contains(keyword.toLowerCase))
-      .groupBy($"file", $"sheet_idx", $"sheet")
-      .agg(count(lit(1)).as("n_hits"))
-      .orderBy($"file", $"sheet_idx")
-      .limit(1)
-      .select($"file", $"sheet", $"n_hits")
-  }
+  def discoverSheet(spark: SparkSession, dir: String, keyword: String): DataFrame =
+    Xlsx.firstSheetWith(read(spark, dir), keyword)
 
   // ---- parser (executor-side, JDK-only) -----------------------------
 

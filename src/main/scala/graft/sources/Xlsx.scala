@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   * (serial 60). Formulas are out of scope — the reference reads
   * values, not formulas.
   *
-  * Spark integration: `spark.read.format("binaryFile")` yields one row per
-  * file (path + payload); parsing is a per-file `flatMap` on executors, so
+  * Spark integration: the connectors' one scan, [[Sources.perFile]],
+  * yields one row per top-level `.xlsx` file (any case; path + payload);
+  * parsing is a per-file `flatMap` on executors, so
   * a directory of N workbooks parallelizes N-ways and the binary payload
   * never shuffles — only parsed cells (a few strings per row) move. At
   * 100 TB of workbooks the scan stage IS the extraction stage. Cells are
@@ -42,32 +43,32 @@ object Xlsx {
   case class Cell(file: String, sheet: String, sheet_idx: Long,
       row_idx: Long, col_idx: Long, value: String)
 
-  /** Read every *.xlsx under `dir` into the long cell shape. */
+  /** Read every top-level .xlsx under `dir` into the long cell shape. */
   def read(spark: SparkSession, dir: String): Dataset[Cell] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.xlsx")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        parseWorkbook(bytes).map { case (sheet, si, r, c, v) =>
-          Cell(name, sheet, si, r, c, v)
-        }
-      }
+    Sources.perFile(spark, dir, Seq("xlsx"))(cellsOf(parseWorkbook))
   }
+
+  /** A workbook parser's (sheet, sheetIdx, row, col, value) tuples as
+    * one file's [[Cell]] rows — shared by every Excel generation. */
+  private[sources] def cellsOf(parse: Array[Byte] => Seq[(String, Long, Long, Long, String)])
+      (name: String, bytes: Array[Byte]): Iterator[Cell] =
+    parse(bytes).iterator.map { case (sheet, si, r, c, v) => Cell(name, sheet, si, r, c, v) }
 
   /** Reference `cari_sheet_excel`: the first sheet — file order, then
     * workbook DECLARED sheet order — whose content contains `keyword`,
     * case-insensitively. */
-  def discoverSheet(spark: SparkSession, dir: String, keyword: String): DataFrame = {
-    import spark.implicits._
-    read(spark, dir)
-      .filter(lower($"value").contains(keyword.toLowerCase))
-      .groupBy($"file", $"sheet_idx", $"sheet")
+  def discoverSheet(spark: SparkSession, dir: String, keyword: String): DataFrame =
+    firstSheetWith(read(spark, dir), keyword)
+
+  /** The one `discoverSheet` body, over cells of any generation. */
+  private[sources] def firstSheetWith(cells: Dataset[Cell], keyword: String): DataFrame =
+    cells.filter(lower(col("value")).contains(keyword.toLowerCase))
+      .groupBy(col("file"), col("sheet_idx"), col("sheet"))
       .agg(count(lit(1)).as("n_hits"))
-      .orderBy($"file", $"sheet_idx")
+      .orderBy(col("file"), col("sheet_idx"))
       .limit(1)
-      .select($"file", $"sheet", $"n_hits")
-  }
+      .select(col("file"), col("sheet"), col("n_hits"))
 
   // ---- parser (executor-side, JDK-only) -----------------------------
 
@@ -88,39 +89,40 @@ object Xlsx {
     val parts = readZip(bytes)
     val shared = parts.get("xl/sharedStrings.xml").map(parseSharedStrings)
       .getOrElse(IndexedSeq.empty)
-    val rels = parts.get("xl/_rels/workbook.xml.rels").map(parseRels)
-      .getOrElse(Map.empty)
-    val sheets = parts.get("xl/workbook.xml").map(parseSheetList)
-      .getOrElse(Seq.empty)
     val dateStyles = parts.get("xl/styles.xml").map(parseDateStyles)
       .getOrElse(Set.empty)
     val date1904 = parts.get("xl/workbook.xml").exists(parseDate1904)
-    sheets.zipWithIndex.flatMap { case ((sheetName, rid), i) =>
-      val target = rels.getOrElse(rid, "")
-      val part = if (target.startsWith("/")) target.drop(1) else s"xl/$target"
-      parts.get(part).toSeq.flatMap { sheetXml =>
-        val (cells, merges) = parseSheet(sheetXml, shared, dateStyles, date1904)
-        val have = cells.map { case (r, c, _) => (r, c) }.toSet
-        val anchor = cells.map { case (r, c, v) => (r, c) -> v }.toMap
-        val filled = merges.flatMap { case (r1, c1, r2, c2) =>
-          anchor.get((r1, c1)).toSeq.flatMap { v =>
-            for {
-              r <- r1 to r2; c <- c1 to c2
-              if !have((r, c))
-            } yield (r, c, v)
-          }
+    sheetParts(parts).flatMap { case (sheetName, si, sheetXml) =>
+      val (cells, merges) = parseSheet(sheetXml, shared, dateStyles, date1904)
+      val have = cells.map { case (r, c, _) => (r, c) }.toSet
+      val anchor = cells.map { case (r, c, v) => (r, c) -> v }.toMap
+      val filled = merges.flatMap { case (r1, c1, r2, c2) =>
+        anchor.get((r1, c1)).toSeq.flatMap { v =>
+          for {
+            r <- r1 to r2; c <- c1 to c2
+            if !have((r, c))
+          } yield (r, c, v)
         }
-        (cells ++ filled).sortBy(t => (t._1, t._2)).map { case (r, c, v) =>
-          (sheetName, (i + 1).toLong, r, c, v)
-        }
+      }
+      (cells ++ filled).sortBy(t => (t._1, t._2)).map { case (r, c, v) =>
+        (sheetName, si, r, c, v)
       }
     }
   }
 
   /** Merged regions of every sheet, by declared order: (sheetName,
     * sheetIdx, firstRow, firstCol, lastRow, lastCol). */
-  def parseWorkbookMerges(bytes: Array[Byte]): Seq[(String, Long, Long, Long, Long, Long)] = {
-    val parts = readZip(bytes)
+  def parseWorkbookMerges(bytes: Array[Byte]): Seq[(String, Long, Long, Long, Long, Long)] =
+    sheetParts(readZip(bytes)).flatMap { case (sheetName, si, sheetXml) =>
+      parseSheet(sheetXml, IndexedSeq.empty)._2.map { case (r1, c1, r2, c2) =>
+        (sheetName, si, r1, c1, r2, c2)
+      }
+    }
+
+  /** The workbook's sheets in declared order with their 1-based index
+    * and worksheet XML, resolved through workbook.xml's relationships;
+    * a sheet whose part is missing is skipped. */
+  private def sheetParts(parts: Map[String, Array[Byte]]): Seq[(String, Long, Array[Byte])] = {
     val rels = parts.get("xl/_rels/workbook.xml.rels").map(parseRels)
       .getOrElse(Map.empty)
     val sheets = parts.get("xl/workbook.xml").map(parseSheetList)
@@ -128,11 +130,7 @@ object Xlsx {
     sheets.zipWithIndex.flatMap { case ((sheetName, rid), i) =>
       val target = rels.getOrElse(rid, "")
       val part = if (target.startsWith("/")) target.drop(1) else s"xl/$target"
-      parts.get(part).toSeq.flatMap { sheetXml =>
-        parseSheet(sheetXml, IndexedSeq.empty)._2.map { case (r1, c1, r2, c2) =>
-          (sheetName, (i + 1).toLong, r1, c1, r2, c2)
-        }
-      }
+      parts.get(part).map(xml => (sheetName, (i + 1).toLong, xml))
     }
   }
 
@@ -141,15 +139,11 @@ object Xlsx {
     * span cells. */
   def mergedRegions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.xlsx")
-      .select($"path", $"content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        parseWorkbookMerges(bytes).map { case (sheet, si, r1, c1, r2, c2) =>
-          (name, sheet, si, r1, c1, r2, c2)
-        }
+    Sources.perFile(spark, dir, Seq("xlsx")) { (name, bytes) =>
+      parseWorkbookMerges(bytes).iterator.map { case (sheet, si, r1, c1, r2, c2) =>
+        (name, sheet, si, r1, c1, r2, c2)
       }
-      .toDF("file", "sheet", "sheet_idx", "first_row", "first_col",
+    }.toDF("file", "sheet", "sheet_idx", "first_row", "first_col",
         "last_row", "last_col")
   }
 
