@@ -29,49 +29,14 @@ object Verify {
       val (fact, lines) = graft.queries.Pipelines.p03Fixture(spark)
       fact.coalesce(1).write.mode("overwrite").parquet(s"$fixDir/p03_fact")
       lines.coalesce(1).write.mode("overwrite").parquet(s"$fixDir/p03_lines")
-      graft.queries.Media.fixture(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/media")
-      graft.queries.Media.xlsxExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/xlsx_expected")
-      graft.queries.Media.pdfExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_expected")
-      graft.queries.Media.pdfPosExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_pos_expected")
-      graft.queries.Media.pdfTjExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_tj_expected")
-      graft.queries.Media.pdfCidExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_cid_expected")
-      graft.queries.Media.pdfDiffExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_diff_expected")
-      graft.queries.Media.pdfFormExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_form_expected")
-      graft.queries.Media.pdfEncExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_enc_expected")
-      graft.queries.Media.pdfMixedExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_mixed_expected")
-      graft.queries.Media.pdfPwdExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_pwd_expected")
-      graft.queries.Media.pdfLatticeExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_lattice_expected")
-      graft.queries.Media.pdfFontProgExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pdf_fontprog_expected")
-      graft.queries.Media.xlsExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/xls_expected")
-      graft.queries.Media.pixelsExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/pixels_expected")
-      graft.queries.Media.audioExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/audio_expected")
-      graft.queries.Media.framePixelsExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/frame_pixels_expected")
-      graft.queries.Media.jpegPixelsExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/jpeg_pixels_expected")
+      graft.queries.Media.parquetFixtures.foreach { case (name, expected) =>
+        expected(spark).coalesce(1).write.mode("overwrite").parquet(s"$fixDir/$name")
+      }
       // the STORED vector index (s17): dumped from the same versioned
       // table the query serves from, so the oracle recomputes the
       // search from the artifact, never from a second training run
       graft.ext.Similarity.ivfIndexExpected(spark, sfDir)
         .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/ivf_index")
-      graft.queries.Media.tarExpected(spark)
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixDir/tar_expected")
       // raw TEXT (not parquet): the m14 oracle re-parses these bytes
       // with DuckDB's own CSV reader, independent of Spark's parser
       graft.queries.Media.csvRawFixture(spark)

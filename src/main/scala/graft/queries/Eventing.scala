@@ -1066,8 +1066,7 @@ object Eventing extends QueryModule {
   private def e26(s: SparkSession, d: String): DataFrame = {
     val prefix = "e26"
     val (stage, schema) = stageCdcSlices(s, d, prefix)
-    val table = graft.util.Scratch.dir(
-      s"${prefix}_vtab_${streamRunId.incrementAndGet()}")
+    val table = graft.util.Scratch.fresh(s"${prefix}_vtab")
     // explicit function VAL picks the Scala foreachBatch overload (the
     // (DataFrame, Long) => Unit vs VoidFunction2 ambiguity)
     val applyBatch: (DataFrame, Long) => Unit = (batch, _) => {
@@ -1094,8 +1093,7 @@ object Eventing extends QueryModule {
   private def e28(s: SparkSession, d: String): DataFrame = {
     val prefix = "e28"
     val (stage, schema) = stageCdcSlices(s, d, prefix)
-    val table = graft.util.Scratch.dir(
-      s"${prefix}_vtab_${streamRunId.incrementAndGet()}")
+    val table = graft.util.Scratch.fresh(s"${prefix}_vtab")
     val applyBatch: (DataFrame, Long) => Unit = (batch, _) => {
       val sess = batch.sparkSession
       // compaction now rides the TABLE's own policy (autoCompactLayers)
@@ -1128,8 +1126,7 @@ object Eventing extends QueryModule {
   private def e29(s: SparkSession, d: String): DataFrame = {
     val prefix = "e29"
     val (stage, schema) = stageCdcSlices(s, d, prefix)
-    val table = graft.util.Scratch.dir(
-      s"${prefix}_vtab_${streamRunId.incrementAndGet()}")
+    val table = graft.util.Scratch.fresh(s"${prefix}_vtab")
     val applyBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
       val sess = batch.sparkSession
       val state = lastUserState(batch)
@@ -1165,9 +1162,7 @@ object Eventing extends QueryModule {
   private def e31(s: SparkSession, d: String): DataFrame = {
     val prefix = "e31"
     val (stage, schema) = stageCdcSlices(s, d, prefix)
-    val table = graft.util.Scratch.dir(
-      s"${prefix}_vtab_${streamRunId.incrementAndGet()}")
-    graft.util.Scratch.deleteRecursively(new java.io.File(table))
+    val table = graft.util.Scratch.fresh(s"${prefix}_vtab")
     def runOnce(): Unit = {
       val ckpt = graft.util.Scratch.ckptDir(prefix)
       val ns = s.newSession()
@@ -1238,9 +1233,7 @@ object Eventing extends QueryModule {
   private def e27(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, d)
-    val run = streamRunId.incrementAndGet()
-    val table = graft.util.Scratch.dir(s"e27_vtab_$run")
-    graft.util.Scratch.deleteRecursively(new java.io.File(table))
+    val table = graft.util.Scratch.fresh("e27_vtab")
     def slice(pred: Column): DataFrame = ev.filter(pred)
       .groupBy(col("user_id"))
       .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
@@ -1262,8 +1255,7 @@ object Eventing extends QueryModule {
       .agg(count(lit(1)).as("n_users"), sum(col("cents")).as("cents"))
     // the standing view a dashboard holds, AS A TABLE: v0 state,
     // computed once, committed as the view table's creation version
-    val viewTable = graft.util.Scratch.dir(s"e27_view_$run")
-    graft.util.Scratch.deleteRecursively(new java.io.File(viewTable))
+    val viewTable = graft.util.Scratch.fresh("e27_view")
     graft.sources.VersionedTable.merge(s, viewTable,
       rollup(graft.sources.VersionedTable.read(s, table, Some(0L))),
       Seq("last_type"), numBuckets = 4)
@@ -1307,9 +1299,7 @@ object Eventing extends QueryModule {
   private def e30(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = Tables.events(s, d)
-    val run = streamRunId.incrementAndGet()
-    val table = graft.util.Scratch.dir(s"e30_vtab_$run")
-    graft.util.Scratch.deleteRecursively(new java.io.File(table))
+    val table = graft.util.Scratch.fresh("e30_vtab")
     def slice(pred: Column): DataFrame = ev.filter(pred)
       .groupBy(col("user_id"))
       .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
@@ -1327,8 +1317,7 @@ object Eventing extends QueryModule {
       .withColumn("cents", expr("cast(round(last_value * 100) as bigint)"))
       .groupBy(col("last_type"))
       .agg(count(lit(1)).as("n_users"), sum(col("cents")).as("cents"))
-    val viewTable = graft.util.Scratch.dir(s"e30_view_$run")
-    graft.util.Scratch.deleteRecursively(new java.io.File(viewTable))
+    val viewTable = graft.util.Scratch.fresh("e30_view")
     graft.sources.VersionedTable.merge(s, viewTable,
       rollup(graft.sources.VersionedTable.read(s, table, Some(0L))),
       Seq("last_type"), numBuckets = 4)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Multimodal
 import graft.functions.Hashing.h60
-import graft.sources.{Tar, Xlsx}
+import graft.sources.{Pdf, Tar, Xlsx}
 import graft.sources.Xlsx.W
 
 /** Driver-visible binary-column queries (north-star multimodal
@@ -67,6 +67,19 @@ object Media extends QueryModule {
         Multimodal.pngColorType(col("content")).cast("long").as("color_type"))
       .orderBy("media_id")
 
+  /** Write `files` (name → bytes) into `dir`, creating it; returns its
+    * absolute path. Every fixture's bytes are deterministic, so a
+    * rewrite is idempotent. Local-path scratch: on a cluster this dir
+    * would be shared storage; the connectors read any binaryFile URI. */
+  def writeFiles(dir: String, files: Seq[(String, Array[Byte])]): String = {
+    val d = new java.io.File(dir)
+    d.mkdirs()
+    files.foreach { case (name, bytes) =>
+      java.nio.file.Files.write(new java.io.File(d, name).toPath, bytes)
+    }
+    d.getAbsolutePath
+  }
+
   // ---- real binary XLSX connector (sources/Xlsx) --------------------
 
   /** Deterministic workbook corpus: two files, multi-sheet, mixing
@@ -108,25 +121,17 @@ object Media extends QueryModule {
   def xlsxMergeData: Map[(String, Int), Seq[(Int, Int, Int, Int)]] = Map(
     ("fin_2024.xlsx", 1) -> Seq((6, 1, 6, 3), (7, 1, 8, 1)))
 
-  /** Write the fixture workbooks as actual .xlsx files (idempotent,
-    * deterministic bytes). Local-path scratch: on a cluster this dir
-    * would be shared storage; the connector itself reads any
-    * binaryFile-supported URI. */
-  def writeXlsxFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    xlsxFixtureData.foreach { case (name, sheets) =>
+  /** Write the fixture workbooks as actual .xlsx files. */
+  def writeXlsxFixture(dir: String): String =
+    writeFiles(dir, xlsxFixtureData.map { case (name, sheets) =>
       val merges = sheets.indices.map { i =>
         xlsxMergeData.getOrElse((name, i + 1), Seq.empty).map {
           case (r1, c1, r2, c2) =>
             s"${Xlsx.colName(c1)}$r1:${Xlsx.colName(c2)}$r2"
         }
       }
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath, Xlsx.writeWorkbook(sheets, merges))
-    }
-    d.getAbsolutePath
-  }
+      name -> Xlsx.writeWorkbook(sheets, merges)
+    })
 
   /** Expected cell rows derived DIRECTLY from the fixture definition —
     * never through the parser — so the oracle is independent of the
@@ -169,62 +174,6 @@ object Media extends QueryModule {
     Xlsx.read(s, dir).toDF()
       .orderBy("file", "sheet_idx", "row_idx", "col_idx")
   }
-
-  /** FORM-XOBJECT fixture: every page's letterhead and audit stamp
-    * live in `/XObject /Form` streams invoked by `Do` — the header
-    * carries its own WinAnsi font and a translating /Matrix, the stamp
-    * nests INSIDE the header with a scaling matrix, no resources and
-    * no Tf of its own (it inherits both through the Do). Written by
-    * `Pdf.writePdfForm`; the em-dash and € are cp1252 bytes that only
-    * decode right through the inherited font. */
-  def pdfFormFixtureData: Seq[(String, Seq[Seq[String]])] = Seq(
-    "form_2015.pdf" -> Seq(
-      Seq("Pendapatan usaha 7500", "Beban umum (2100)"),
-      Seq("Catatan 3: piutang usaha 430")),
-    "form_2016.pdf" -> Seq(
-      Seq("Ikhtisar arus kas 990")))
-  val pdfFormHeader = "PT Contoh Tbk — Laporan Keuangan"
-  val pdfFormStamp = "AUDITED €0"
-
-  def writePdfFormFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfFormFixtureData.foreach { case (name, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfForm(pages, pdfFormHeader, pdfFormStamp))
-    }
-    d.getAbsolutePath
-  }
-
-  /** Expected rows straight from the fixture definition — per page the
-    * header line, the nested stamp line, then the body lines, in the
-    * content-stream order the parser must preserve. */
-  def pdfFormExpected(s: SparkSession): DataFrame = {
-    import s.implicits._
-    (for {
-      (file, pages) <- pdfFormFixtureData
-      (lines, pi) <- pages.zipWithIndex
-      (text, li) <- (Seq(pdfFormHeader, pdfFormStamp) ++ lines).zipWithIndex
-    } yield (file, (pi + 1).toLong, li.toLong, text))
-      .toDF("file", "page", "line_no", "text")
-  }
-
-  private def pdfFormDir: String = graft.util.Scratch.dir("pdf_form")
-
-  /** m25 — Form-XObject text extraction: `Do`-invoked letterhead and
-    * nested scaled stamp read in place with graphics-state inheritance;
-    * oracle replays the expected lines (m20/m22/m23 discipline, against
-    * the independent form encoder). */
-  private def m25(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfFormFixture(pdfFormDir)
-    graft.sources.Pdf.read(s, dir).toDF()
-      .orderBy("file", "page", "line_no")
-  }
-  private val m25Sql =
-    """SELECT file, page, line_no, text
-       FROM read_parquet('__FIXTURES__/pdf_form_expected/*.parquet')
-       ORDER BY file, page, line_no"""
 
   /** m24 — merged-region metadata surface: `<mergeCells>` regions per
     * sheet, in declared order; oracle is the golden merge spec
@@ -297,120 +246,173 @@ object Media extends QueryModule {
 
   // ---- real binary PDF connector (sources/Pdf) ----------------------
 
-  /** Deterministic filing-like PDF corpus: two files, multi-page,
-    * FlateDecode streams, escaped parentheses, a CALK-shaped heading
-    * run — the text shapes fitz extracts in the reference. */
-  def pdfFixtureData: Seq[(String, Seq[Seq[String]])] = Seq(
-    "filing_2023.pdf" -> Seq(
-      Seq("LAPORAN KEUANGAN", "PT Contoh (Persero) Tbk", "Tahun 2023"),
-      Seq("1. UMUM", "Perusahaan didirikan tahun 1946.", "a. Pendirian"),
-      Seq("CATATAN ATAS LAPORAN KEUANGAN", "Kas dan setara kas", "2,3b")),
-    "filing_2024.pdf" -> Seq(
-      Seq("Ikhtisar \\ saldo (awal)", "Laba bersih 88")))
-
-  /** Write the fixture PDFs as actual .pdf files (deterministic
-    * deflate bytes). */
-  def writePdfFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfFixtureData.foreach { case (name, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath, graft.sources.Pdf.writePdf(pages))
-    }
-    d.getAbsolutePath
+  /** One fixture file of a PDF text gate: the lines each page must read
+    * back as, and the file's bytes from an encoder that shares no code
+    * with the parser, encoded on first use (so listing the gates, as
+    * every `SparkEntry.queries` lookup does, runs no encoder). */
+  final class PdfTextFile(val name: String, val pages: Seq[Seq[String]],
+      encode: => Array[Byte]) {
+    lazy val bytes: Array[Byte] = encode
   }
 
-  /** Expected line rows straight from the fixture definition — the
-    * parser never touches these. */
-  def pdfExpected(s: SparkSession): DataFrame = {
+  /** A PDF text gate: the query writes `files` into the scratch dir
+    * `dir` and reads them back through `Pdf.read`; its oracle replays
+    * the `<dir>_expected` dump of the files' own lines, which never
+    * touched the parser. */
+  final case class PdfTextGate(query: String, dir: String,
+      files: Seq[PdfTextFile])
+
+  private def encodedWith(encode: Seq[Seq[String]] => Array[Byte])(
+      files: (String, Seq[Seq[String]])*): Seq[PdfTextFile] =
+    files.map { case (name, pages) => new PdfTextFile(name, pages, encode(pages)) }
+
+  private val pdfFormHeader = "PT Contoh Tbk — Laporan Keuangan"
+  private val pdfFormStamp = "AUDITED €0"
+
+  /** The PDF text gates, one encoder each. */
+  lazy val pdfTextGates: Seq[PdfTextGate] = Seq(
+    // m05 — the classic Flate+Tj writer: filing-like pages, escaped
+    // parentheses and backslashes, a CALK-shaped heading run — the
+    // text shapes fitz extracts in the reference
+    PdfTextGate("m05_pdf_lines", "pdf", encodedWith(Pdf.writePdf)(
+      "filing_2023.pdf" -> Seq(
+        Seq("LAPORAN KEUANGAN", "PT Contoh (Persero) Tbk", "Tahun 2023"),
+        Seq("1. UMUM", "Perusahaan didirikan tahun 1946.", "a. Pendirian"),
+        Seq("CATATAN ATAS LAPORAN KEUANGAN", "Kas dan setara kas", "2,3b")),
+      "filing_2024.pdf" -> Seq(
+        Seq("Ikhtisar \\ saldo (awal)", "Laba bersih 88")))),
+    // m20 — the MODERN encoder (PDF 1.5 shapes real IDX filings use):
+    // kerned TJ arrays, hex strings, Tm/TD/T-star/quote positioning,
+    // /Contents arrays, a nested page tree, object streams and a
+    // PNG-predicted xref STREAM
+    PdfTextGate("m20_pdf_tj", "pdf_tj", encodedWith(Pdf.writePdfModern)(
+      "modern_2023.pdf" -> Seq(
+        Seq("LAPORAN POSISI KEUANGAN KONSOLIDASIAN",
+          "Kas dan setara kas 1500.5",
+          "Jumlah aset 2300.5"),
+        Seq("1. UMUM",
+          "Perusahaan didirikan tahun 1946.",
+          "a. Pendirian dan informasi umum"),
+        Seq("CATATAN ATAS LAPORAN KEUANGAN",
+          "Piutang usaha (neto) 800",
+          "2,3b"),
+        Seq("Lihat catatan terlampir")),
+      "modern_2024.pdf" -> Seq(
+        Seq("Ikhtisar \\ saldo (awal)", "Laba bersih 88"),
+        Seq("Pendapatan 9000", "Beban pokok (6500)")))),
+    // m22 — subsetted CID fonts: 2-byte private CIDs readable ONLY
+    // through the /ToUnicode CMap, lines alternating with a no-CMap
+    // Type1 font, /Resources on the root page-tree node (inheritance)
+    PdfTextGate("m22_pdf_cid", "pdf_cid", encodedWith(Pdf.writePdfCid)(
+      "cid_2023.pdf" -> Seq(
+        Seq("LAPORAN LABA RUGI KONSOLIDASIAN",       // F2 plain
+          "Pendapatan bersih efisiensi 12500",       // F1 CID (kerned TJ)
+          "Beban pokok pendapatan (8200)",           // F2
+          "Laba kotor final 4300"),                  // F1 CID, "fi" ligature
+        Seq("CATATAN 12: Informasi segmen",
+          "Aset segmen konsolidasian 99100")),
+      "cid_2024.pdf" -> Seq(
+        Seq("Ikhtisar fiskal",
+          "Defisit neto (150)")))),
+    // m23 — the pre-2015 simple-font shape: base encodings (MacRoman/
+    // WinAnsi/Standard) + /Differences, NO /ToUnicode; lines cycle F1
+    // (MacRoman+Differences) → F2 (WinAnsi name) → F3 (Differences
+    // only), so Latin-1 passthrough garbles every non-ASCII character
+    PdfTextGate("m23_pdf_differences", "pdf_diff", encodedWith(Pdf.writePdfDifferences)(
+      "legacy_2014.pdf" -> Seq(
+        Seq("Ekuitas — modal disetor €500 •",        // F1: é-free MacRoman+diffs
+          "Mata uang € dan ± 25° «résumé»",          // F2: WinAnsi upper half
+          "ringkasan ‘ﬁskal’ àé",                    // F3: Standard + Differences
+          "Laba ditahan (déﬁsit) €25 ﬁnal —",        // F1 again: é 0x8E, ﬁ 245
+          "Beban pokok — selisih kurs €3"),          // F2: — at 0x97
+        Seq("Catatan atas laporan",                  // F1 ASCII through MacRoman
+          "posisi keuangan • arus kas €1",           // F2? no: index 1 → F2
+          "tahun ﬁskal ‘berjalan’")),                // F3
+      "legacy_2013.pdf" -> Seq(
+        Seq("Ikhtisar — éﬁsiensi €7 •",
+          "«Neraca» per 31° Desember",
+          "catatan ‘umum’ àé")))),
+    // m25 — Form XObjects: each page's letterhead is a `Do`-invoked
+    // form with its own WinAnsi font and a translating /Matrix, and
+    // the audit stamp nests INSIDE it with a scaling matrix and no
+    // resources or Tf of its own (both inherited through the Do); the
+    // em-dash and € are cp1252 bytes that only decode through the
+    // inherited font. Each page reads header, stamp, then body lines.
+    PdfTextGate("m25_pdf_form_xobject", "pdf_form", Seq(
+      "form_2015.pdf" -> Seq(
+        Seq("Pendapatan usaha 7500", "Beban umum (2100)"),
+        Seq("Catatan 3: piutang usaha 430")),
+      "form_2016.pdf" -> Seq(
+        Seq("Ikhtisar arus kas 990"))).map { case (name, pages) =>
+      new PdfTextFile(name, pages.map(Seq(pdfFormHeader, pdfFormStamp) ++ _),
+        Pdf.writePdfForm(pages, pdfFormHeader, pdfFormStamp))
+    }),
+    // m26 — §7.6.3 standard security handler, EMPTY user password: one
+    // file per method, a REAL owner password on /O, per-object RC4/AES
+    // encrypted Flate content, /ID-dependent key derivation (the
+    // writer's algorithms are pinned to known-answer vectors in PdfSpec)
+    PdfTextGate("m26_pdf_encrypted", "pdf_enc", Seq(
+      ("enc_rc4_40_2023.pdf", "rc4-40", Seq(
+        Seq("LAPORAN KEUANGAN (terenkripsi)", "PT Contoh Tbk"),
+        Seq("Kas dan setara kas 1500.5", "Jumlah aset 2300.5"))),
+      ("enc_rc4_128_2024.pdf", "rc4-128", Seq(
+        Seq("Ikhtisar saldo terenkripsi", "Laba bersih 88"))),
+      ("enc_aes_2025.pdf", "aesv2", Seq(
+        Seq("CATATAN TERENKRIPSI", "Piutang usaha (neto) 800"),
+        Seq("2,3b"))),
+      ("enc_aes256_2026.pdf", "aesv3", Seq(
+        Seq("LAMPIRAN TERENKRIPSI AES-256", "Liabilitas jangka pendek 410"),
+        Seq("Catatan 7: pinjaman bank 95")))).map { case (name, method, pages) =>
+      new PdfTextFile(name, pages, Pdf.writePdfEncrypted(pages, method))
+    }),
+    // m27 — a /ToUnicode CMap with a 1-byte ASCII codespace AND a
+    // Shift-JIS-style 2-byte codespace <8140><FFFC>: show strings mix
+    // widths, so byte-by-byte codespace matching (§9.7.6.2) is
+    // load-bearing
+    PdfTextGate("m27_pdf_mixed_cmap", "pdf_mixed", encodedWith(Pdf.writePdfCidMixed)(
+      "mixed_2023.pdf" -> Seq(
+        Seq("Ekuitas — modal €500", "Laba (rugi) bersih ±25",
+          "ringkasan ﬁskal • «résumé»"),
+        Seq("Catatan ‘umum’ tahun 2023", "Beban pokok — selisih €3")),
+      "mixed_2024.pdf" -> Seq(
+        Seq("Ikhtisar — éﬁsiensi €7", "per 31° Desember")))))
+
+  def pdfTextGate(query: String): PdfTextGate =
+    pdfTextGates.find(_.query == query).getOrElse(
+      throw new NoSuchElementException(s"no PDF text gate $query"))
+
+  private def writeGate(g: PdfTextGate): String =
+    writeFiles(graft.util.Scratch.dir(g.dir), g.files.map(f => f.name -> f.bytes))
+
+  /** A gate's expected (file, page, line_no, text) rows, straight from
+    * its files' pages — the parser never touches these. */
+  def pdfTextExpected(s: SparkSession, g: PdfTextGate): DataFrame = {
     import s.implicits._
     (for {
-      (file, pages) <- pdfFixtureData
-      (lines, pi) <- pages.zipWithIndex
+      f <- g.files
+      (lines, pi) <- f.pages.zipWithIndex
       (text, li) <- lines.zipWithIndex
-    } yield (file, (pi + 1).toLong, li.toLong, text))
+    } yield (f.name, (pi + 1).toLong, li.toLong, text))
       .toDF("file", "page", "line_no", "text")
   }
 
-  private def pdfDir: String = graft.util.Scratch.dir("pdf")
-
-  /** m05 — full binary page-text scan through the Flate+Tj parser;
-    * oracle replays the expected lines (same certification pattern as
-    * m03). */
-  private def m05(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfFixture(pdfDir)
-    graft.sources.Pdf.read(s, dir).toDF()
+  /** The text gates' one query: write the fixture, scan it back. */
+  private def pdfTextQuery(g: PdfTextGate): QueryFn = (s, _) =>
+    Pdf.read(s, writeGate(g)).toDF()
       .orderBy("file", "page", "line_no")
-  }
+
+  private def pdfTextSql(g: PdfTextGate): String =
+    s"""SELECT file, page, line_no, text
+       FROM read_parquet('__FIXTURES__/${g.dir}_expected/*.parquet')
+       ORDER BY file, page, line_no"""
 
   /** m06 — keyword page search over real bytes (the reference's
     * per-page `kata_kunci in teks.lower()` filter, mainTesting.py:
     * 217-254): first matching page per file. */
   private def m06(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfFixture(pdfDir)
-    graft.sources.Pdf.searchPages(s, dir, "laba")
+    val dir = writeGate(pdfTextGate("m05_pdf_lines"))
+    Pdf.searchPages(s, dir, "laba")
   }
-
-  /** MODERN PDF fixture (PDF 1.5 shapes): kerned TJ arrays, hex
-    * strings, Tm/TD/T-star/quote positioning, /Contents arrays, a nested page
-    * tree, object streams, and a PNG-predicted xref STREAM — written
-    * by `Pdf.writePdfModern`, an encoder deliberately different from
-    * `writePdf`, so m20 certifies the parser against file shapes it
-    * did not produce (real IDX filings are PDF 1.5+ with exactly these
-    * structures). */
-  def pdfTjFixtureData: Seq[(String, Seq[Seq[String]])] = Seq(
-    "modern_2023.pdf" -> Seq(
-      Seq("LAPORAN POSISI KEUANGAN KONSOLIDASIAN",
-        "Kas dan setara kas 1500.5",
-        "Jumlah aset 2300.5"),
-      Seq("1. UMUM",
-        "Perusahaan didirikan tahun 1946.",
-        "a. Pendirian dan informasi umum"),
-      Seq("CATATAN ATAS LAPORAN KEUANGAN",
-        "Piutang usaha (neto) 800",
-        "2,3b"),
-      Seq("Lihat catatan terlampir")),
-    "modern_2024.pdf" -> Seq(
-      Seq("Ikhtisar \\ saldo (awal)", "Laba bersih 88"),
-      Seq("Pendapatan 9000", "Beban pokok (6500)")))
-
-  def writePdfTjFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfTjFixtureData.foreach { case (name, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfModern(pages))
-    }
-    d.getAbsolutePath
-  }
-
-  /** Expected line rows straight from the fixture definition — the
-    * parser never touches these. */
-  def pdfTjExpected(s: SparkSession): DataFrame = {
-    import s.implicits._
-    (for {
-      (file, pages) <- pdfTjFixtureData
-      (lines, pi) <- pages.zipWithIndex
-      (text, li) <- lines.zipWithIndex
-    } yield (file, (pi + 1).toLong, li.toLong, text))
-      .toDF("file", "page", "line_no", "text")
-  }
-
-  private def pdfTjDir: String = graft.util.Scratch.dir("pdf_tj")
-
-  /** m20 — full-spec binary scan through the xref-stream/ObjStm/TJ
-    * parser; oracle replays the expected lines (same certification
-    * pattern as m05, against the INDEPENDENT modern encoder). */
-  private def m20(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfTjFixture(pdfTjDir)
-    graft.sources.Pdf.read(s, dir).toDF()
-      .orderBy("file", "page", "line_no")
-  }
-  private val m20Sql =
-    """SELECT file, page, line_no, text
-       FROM read_parquet('__FIXTURES__/pdf_tj_expected/*.parquet')
-       ORDER BY file, page, line_no"""
 
   /** p04 — the reference's E2 HEADLINE WORKFLOW end-to-end
     * (test_uploadPDF.py: `tabula.read_pdf(..., area=[…])` :31-34 →
@@ -423,7 +425,7 @@ object Media extends QueryModule {
   private def p04(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dir = writePdfPosFixture(pdfPosDir)
-    val grid = graft.sources.Pdf.tableRegion(s, dir, 60, 570, 400, 650)
+    val grid = Pdf.tableRegion(s, dir, 60, 570, 400, 650)
     val wide = grid.groupBy($"file", $"page", $"row_idx")
       .agg(
         max(when($"col_idx" === 1, $"value")).as("c1"),
@@ -466,185 +468,6 @@ object Media extends QueryModule {
          CAST(c AS BIGINT) AS col_idx, value
        FROM cells ORDER BY row_idx, col_idx"""
 
-  /** CID-FONT fixture: subsetted-font text a real filing embeds — the
-    * content-stream bytes are 2-byte private CIDs readable ONLY through
-    * the /ToUnicode CMap, lines alternate with a no-CMap Type1 font,
-    * and /Resources live on the root page-tree node (inheritance).
-    * Written by `Pdf.writePdfCid`, an encoder independent of the
-    * parser (see its scaladoc for the coding scheme). */
-  def pdfCidFixtureData: Seq[(String, Seq[Seq[String]])] = Seq(
-    "cid_2023.pdf" -> Seq(
-      Seq("LAPORAN LABA RUGI KONSOLIDASIAN",       // F2 plain
-        "Pendapatan bersih efisiensi 12500",       // F1 CID (kerned TJ)
-        "Beban pokok pendapatan (8200)",           // F2
-        "Laba kotor final 4300"),                  // F1 CID, "fi" ligature
-      Seq("CATATAN 12: Informasi segmen",
-        "Aset segmen konsolidasian 99100")),
-    "cid_2024.pdf" -> Seq(
-      Seq("Ikhtisar fiskal",
-        "Defisit neto (150)")))
-
-  def writePdfCidFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfCidFixtureData.foreach { case (name, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfCid(pages))
-    }
-    d.getAbsolutePath
-  }
-
-  /** Expected rows straight from the fixture definition — the parser
-    * never touches these. */
-  def pdfCidExpected(s: SparkSession): DataFrame = {
-    import s.implicits._
-    (for {
-      (file, pages) <- pdfCidFixtureData
-      (lines, pi) <- pages.zipWithIndex
-      (text, li) <- lines.zipWithIndex
-    } yield (file, (pi + 1).toLong, li.toLong, text))
-      .toDF("file", "page", "line_no", "text")
-  }
-
-  private def pdfCidDir: String = graft.util.Scratch.dir("pdf_cid")
-
-  /** m22 — CID/ToUnicode text extraction: the binary scan decodes
-    * subsetted-font show strings through the font's CMap; oracle
-    * replays the expected lines (same certification pattern as m20,
-    * against the independent CID encoder). */
-  private def m22(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfCidFixture(pdfCidDir)
-    graft.sources.Pdf.read(s, dir).toDF()
-      .orderBy("file", "page", "line_no")
-  }
-  private val m22Sql =
-    """SELECT file, page, line_no, text
-       FROM read_parquet('__FIXTURES__/pdf_cid_expected/*.parquet')
-       ORDER BY file, page, line_no"""
-
-  /** SIMPLE-FONT fixture: the pre-2015 filing shape — base encodings
-    * (MacRoman/WinAnsi/Standard) + /Differences arrays, NO /ToUnicode.
-    * Lines cycle F1(MacRoman+Differences) → F2(WinAnsi name) →
-    * F3(Differences-only, StandardEncoding fallback); every byte the
-    * parser sees went through `Pdf.writePdfDifferences`'s own inverse
-    * of the published Appendix-D tables, so Latin-1 passthrough would
-    * garble every non-ASCII character below. */
-  def pdfDiffFixtureData: Seq[(String, Seq[Seq[String]])] = Seq(
-    "legacy_2014.pdf" -> Seq(
-      Seq("Ekuitas — modal disetor €500 •",        // F1: é-free MacRoman+diffs
-        "Mata uang € dan ± 25° «résumé»",          // F2: WinAnsi upper half
-        "ringkasan ‘ﬁskal’ àé",                    // F3: Standard + Differences
-        "Laba ditahan (déﬁsit) €25 ﬁnal —",        // F1 again: é 0x8E, ﬁ 245
-        "Beban pokok — selisih kurs €3"),          // F2: — at 0x97
-      Seq("Catatan atas laporan",                  // F1 ASCII through MacRoman
-        "posisi keuangan • arus kas €1",           // F2? no: index 1 → F2
-        "tahun ﬁskal ‘berjalan’")),                // F3
-    "legacy_2013.pdf" -> Seq(
-      Seq("Ikhtisar — éﬁsiensi €7 •",
-        "«Neraca» per 31° Desember",
-        "catatan ‘umum’ àé")))
-
-  def writePdfDiffFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfDiffFixtureData.foreach { case (name, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfDifferences(pages))
-    }
-    d.getAbsolutePath
-  }
-
-  /** Expected rows straight from the fixture definition — the parser
-    * never touches these. */
-  def pdfDiffExpected(s: SparkSession): DataFrame = {
-    import s.implicits._
-    (for {
-      (file, pages) <- pdfDiffFixtureData
-      (lines, pi) <- pages.zipWithIndex
-      (text, li) <- lines.zipWithIndex
-    } yield (file, (pi + 1).toLong, li.toLong, text))
-      .toDF("file", "page", "line_no", "text")
-  }
-
-  private def pdfDiffDir: String = graft.util.Scratch.dir("pdf_diff")
-
-  /** m23 — simple-font /Encoding + /Differences text extraction (no
-    * /ToUnicode): the binary scan decodes single-byte show strings
-    * through base-encoding tables with Differences overrides; oracle
-    * replays the expected lines (same certification pattern as
-    * m20/m22, against the independent legacy encoder). */
-  private def m23(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfDiffFixture(pdfDiffDir)
-    graft.sources.Pdf.read(s, dir).toDF()
-      .orderBy("file", "page", "line_no")
-  }
-  private val m23Sql =
-    """SELECT file, page, line_no, text
-       FROM read_parquet('__FIXTURES__/pdf_diff_expected/*.parquet')
-       ORDER BY file, page, line_no"""
-
-  /** ENCRYPTED fixture (§7.6.3 standard security handler, EMPTY user
-    * password — the shape the reference's fitz path reads
-    * transparently, mainTesting.py:273-285): one file per supported
-    * method, each with a REAL owner password on /O, per-object
-    * RC4/AES-encrypted Flate content, and /ID-dependent key
-    * derivation. The writer's algorithm transcriptions are anchored
-    * against independently computed known-answer vectors in PdfSpec. */
-  def pdfEncFixtureData: Seq[(String, String, Seq[Seq[String]])] = Seq(
-    ("enc_rc4_40_2023.pdf", "rc4-40", Seq(
-      Seq("LAPORAN KEUANGAN (terenkripsi)", "PT Contoh Tbk"),
-      Seq("Kas dan setara kas 1500.5", "Jumlah aset 2300.5"))),
-    ("enc_rc4_128_2024.pdf", "rc4-128", Seq(
-      Seq("Ikhtisar saldo terenkripsi", "Laba bersih 88"))),
-    ("enc_aes_2025.pdf", "aesv2", Seq(
-      Seq("CATATAN TERENKRIPSI", "Piutang usaha (neto) 800"),
-      Seq("2,3b"))),
-    ("enc_aes256_2026.pdf", "aesv3", Seq(
-      Seq("LAMPIRAN TERENKRIPSI AES-256", "Liabilitas jangka pendek 410"),
-      Seq("Catatan 7: pinjaman bank 95"))))
-
-  def writePdfEncFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfEncFixtureData.foreach { case (name, method, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfEncrypted(pages, method))
-    }
-    d.getAbsolutePath
-  }
-
-  /** Expected rows straight from the fixture definition — the parser
-    * never touches these. */
-  def pdfEncExpected(s: SparkSession): DataFrame = {
-    import s.implicits._
-    (for {
-      (file, _, pages) <- pdfEncFixtureData
-      (lines, pi) <- pages.zipWithIndex
-      (text, li) <- lines.zipWithIndex
-    } yield (file, (pi + 1).toLong, li.toLong, text))
-      .toDF("file", "page", "line_no", "text")
-  }
-
-  private def pdfEncDir: String = graft.util.Scratch.dir("pdf_enc")
-
-  /** m26 — encrypted-PDF text extraction: RC4-40, RC4-128, AESV2, and
-    * AES-256 R6 (AESV3) files (empty user password) decrypt and read
-    * through the same scan; oracle replays the expected lines
-    * (m20/m22/m23/m25 discipline, against the independent
-    * encryptor). */
-  private def m26(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfEncFixture(pdfEncDir)
-    graft.sources.Pdf.read(s, dir).toDF()
-      .orderBy("file", "page", "line_no")
-  }
-  private val m26Sql =
-    """SELECT file, page, line_no, text
-       FROM read_parquet('__FIXTURES__/pdf_enc_expected/*.parquet')
-       ORDER BY file, page, line_no"""
-
   /** PASSWORD-protected fixture: files whose USER password is real
     * (non-empty) — unreadable without credentials, across the legacy
     * RC4 path and AES-256 R6. Both share one user password so a single
@@ -660,17 +483,11 @@ object Media extends QueryModule {
   /** The shared user password of [[pdfPwdFixtureData]]. */
   val pdfPwdUserPassword = "buka-rahasia"
 
-  def writePdfPwdFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfPwdFixtureData.foreach { case (name, method, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfEncrypted(pages, method,
-          userPassword = pdfPwdUserPassword))
-    }
-    d.getAbsolutePath
-  }
+  def writePdfPwdFixture(dir: String): String =
+    writeFiles(dir, pdfPwdFixtureData.map { case (name, method, pages) =>
+      name -> Pdf.writePdfEncrypted(pages, method,
+        userPassword = pdfPwdUserPassword)
+    })
 
   /** Expected rows × both credentials, straight from the fixture
     * definition — the parser never touches these. */
@@ -696,7 +513,7 @@ object Media extends QueryModule {
     val dir = writePdfPwdFixture(graft.util.Scratch.dir("pdf_pwd"))
     def failsWith(pwd: Option[String], marker: String): Unit = {
       val loud =
-        try { graft.sources.Pdf.read(s, dir, pwd).count(); false }
+        try { Pdf.read(s, dir, pwd).count(); false }
         catch {
           case e: Throwable =>
             Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8)
@@ -707,9 +524,9 @@ object Media extends QueryModule {
     }
     failsWith(None, "password-protected")
     failsWith(Some("salah-total"), "matches neither")
-    val user = graft.sources.Pdf.read(s, dir, Some(pdfPwdUserPassword))
+    val user = Pdf.read(s, dir, Some(pdfPwdUserPassword))
       .toDF().withColumn("cred", lit("user"))
-    val owner = graft.sources.Pdf.read(s, dir, Some("graft-owner"))
+    val owner = Pdf.read(s, dir, Some("graft-owner"))
       .toDF().withColumn("cred", lit("owner"))
     user.unionByName(owner)
       .select($"cred", $"file", $"page", $"line_no", $"text")
@@ -733,14 +550,8 @@ object Media extends QueryModule {
     (3, "LAPORAN ARUS KAS"),
     (3, "Saldo akhir 88"))
 
-  def writePdfFontProgFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    java.nio.file.Files.write(
-      new java.io.File(d, "font_prog.pdf").toPath,
-      graft.sources.Pdf.writePdfFontProg(pdfFontProgFixture))
-    d.getAbsolutePath
-  }
+  def writePdfFontProgFixture(dir: String): String =
+    writeFiles(dir, Seq("font_prog.pdf" -> Pdf.writePdfFontProg(pdfFontProgFixture)))
 
   /** Expected rows straight from the fixture definition. */
   def pdfFontProgExpected(s: SparkSession): DataFrame = {
@@ -763,7 +574,7 @@ object Media extends QueryModule {
   private def m31(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dir = writePdfFontProgFixture(graft.util.Scratch.dir("pdf_fontprog"))
-    graft.sources.Pdf.read(s, dir)
+    Pdf.read(s, dir)
       .select($"file", $"page", $"line_no", $"text")
       .orderBy("file", "page", "line_no")
   }
@@ -784,8 +595,8 @@ object Media extends QueryModule {
     *     LOCAL path coordinates, drawn as thin FILLED bars (`re f`);
     *   page 3: no rulings at all — [[tableAuto]]'s stream fallback.
     * Cell map: (row, col) → tokens, 1-based from the top-left. */
-  def pdfLatticeFixture: Seq[graft.sources.Pdf.RuledPageSpec] = Seq(
-    graft.sources.Pdf.RuledPage(
+  def pdfLatticeFixture: Seq[Pdf.RuledPageSpec] = Seq(
+    Pdf.RuledPage(
       left = 72, top = 700,
       colWidths = Seq(120, 90, 90), rowHeights = Seq(20, 20, 20),
       cells = Map(
@@ -794,14 +605,14 @@ object Media extends QueryModule {
         (2, 3) -> Seq("200.25"),
         (3, 1) -> Seq("Piutang"), (3, 2) -> Seq("80"), (3, 3) -> Seq("95")),
       inlineImage = true),
-    graft.sources.Pdf.RuledPage(
+    Pdf.RuledPage(
       left = 10, top = 100, // LOCAL coords; cm shifts to (100, 400)
       colWidths = Seq(100, 100), rowHeights = Seq(18, 18),
       cells = Map(
         (1, 1) -> Seq("Modal"), (1, 2) -> Seq("950"),
         (2, 1) -> Seq("Laba"), (2, 2) -> Seq("88")),
       thinFill = true, translate = Some((90.0, 300.0))),
-    graft.sources.Pdf.PlainPage(Seq(
+    Pdf.PlainPage(Seq(
       (72, 700, "CATATAN UMUM"), (72, 686, "tanpa tabel"),
       (200, 686, "kolom dua"))))
 
@@ -811,7 +622,7 @@ object Media extends QueryModule {
   def pdfLatticeExpected(s: SparkSession): DataFrame = {
     import s.implicits._
     val lattice = pdfLatticeFixture.zipWithIndex.collect {
-      case (p: graft.sources.Pdf.RuledPage, pi) =>
+      case (p: Pdf.RuledPage, pi) =>
         p.cells.toSeq.map { case ((r, c), toks) =>
           ("ruled_tables.pdf", (pi + 1).toLong, r.toLong, c.toLong,
             toks.mkString(" "))
@@ -825,14 +636,8 @@ object Media extends QueryModule {
     (lattice ++ stream).toDF("file", "page", "row_idx", "col_idx", "value")
   }
 
-  def writePdfLatticeFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    java.nio.file.Files.write(
-      new java.io.File(d, "ruled_tables.pdf").toPath,
-      graft.sources.Pdf.writePdfRuled(pdfLatticeFixture))
-    d.getAbsolutePath
-  }
+  def writePdfLatticeFixture(dir: String): String =
+    writeFiles(dir, Seq("ruled_tables.pdf" -> Pdf.writePdfRuled(pdfLatticeFixture)))
 
   /** m29 — LATTICE table extraction (tabula's default when rulings
     * exist, test_uploadPDF.py:31-34): drawn rulings — stroked grids
@@ -846,7 +651,7 @@ object Media extends QueryModule {
     // sort over the scan itself (range partitioning SAMPLES its child,
     // i.e. would parse every PDF a second time): shuffle the finished
     // cells — tiny — to one partition, then sort within it.
-    graft.sources.Pdf.tableAuto(s, dir)
+    Pdf.tableAuto(s, dir)
       .repartition(1)
       .sortWithinPartitions("file", "page", "row_idx", "col_idx")
   }
@@ -919,16 +724,11 @@ object Media extends QueryModule {
     }.toDF("file", "sheet", "sheet_idx", "row_idx", "col_idx", "value")
   }
 
-  def writeXlsFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    xlsFixtureData.foreach { case (name, d1904, split, pad, sheets) =>
-      java.nio.file.Files.write(new java.io.File(d, name).toPath,
-        graft.sources.Xls.writeXls(sheets, date1904 = d1904,
-          splitSst = split, padTo = pad))
-    }
-    d.getAbsolutePath
-  }
+  def writeXlsFixture(dir: String): String =
+    writeFiles(dir, xlsFixtureData.map { case (name, d1904, split, pad, sheets) =>
+      name -> graft.sources.Xls.writeXls(sheets, date1904 = d1904,
+        splitSst = split, padTo = pad)
+    })
 
   /** m30 — legacy .xls (BIFF8): both CFB placements (mini stream +
     * regular FAT), SST CONTINUE stitching, RK/MULRK, FORMULA cached
@@ -945,57 +745,6 @@ object Media extends QueryModule {
     """SELECT file, sheet, sheet_idx, row_idx, col_idx, value
        FROM read_parquet('__FIXTURES__/xls_expected/*.parquet')
        ORDER BY file, sheet_idx, row_idx, col_idx"""
-
-  /** MIXED-WIDTH CMap fixture: a /ToUnicode CMap with a 1-byte ASCII
-    * codespace AND a Shift-JIS-style 2-byte codespace <8140><FFFC> in
-    * the same font — show strings interleave widths, so byte-by-byte
-    * codespace matching (§9.7.6.2) is load-bearing: a whole-value
-    * comparator misframes every 2-byte code and garbles these lines. */
-  def pdfMixedFixtureData: Seq[(String, Seq[Seq[String]])] = Seq(
-    "mixed_2023.pdf" -> Seq(
-      Seq("Ekuitas — modal €500", "Laba (rugi) bersih ±25",
-        "ringkasan ﬁskal • «résumé»"),
-      Seq("Catatan ‘umum’ tahun 2023", "Beban pokok — selisih €3")),
-    "mixed_2024.pdf" -> Seq(
-      Seq("Ikhtisar — éﬁsiensi €7", "per 31° Desember")))
-
-  def writePdfMixedFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfMixedFixtureData.foreach { case (name, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfCidMixed(pages))
-    }
-    d.getAbsolutePath
-  }
-
-  /** Expected rows straight from the fixture definition. */
-  def pdfMixedExpected(s: SparkSession): DataFrame = {
-    import s.implicits._
-    (for {
-      (file, pages) <- pdfMixedFixtureData
-      (lines, pi) <- pages.zipWithIndex
-      (text, li) <- lines.zipWithIndex
-    } yield (file, (pi + 1).toLong, li.toLong, text))
-      .toDF("file", "page", "line_no", "text")
-  }
-
-  private def pdfMixedDir: String = graft.util.Scratch.dir("pdf_mixed")
-
-  /** m27 — mixed-width CMap text extraction: 1-byte and 2-byte codes
-    * interleaved in the same show strings; oracle replays the
-    * expected lines (against the independent mixed-codespace
-    * encoder). */
-  private def m27(s: SparkSession, d: String): DataFrame = {
-    val dir = writePdfMixedFixture(pdfMixedDir)
-    graft.sources.Pdf.read(s, dir).toDF()
-      .orderBy("file", "page", "line_no")
-  }
-  private val m27Sql =
-    """SELECT file, page, line_no, text
-       FROM read_parquet('__FIXTURES__/pdf_mixed_expected/*.parquet')
-       ORDER BY file, page, line_no"""
 
   // ---- positioned PDF: table-region scan (S5-S7) --------------------
 
@@ -1039,17 +788,10 @@ object Media extends QueryModule {
   def pdfPosRotates: Map[String, Seq[Int]] =
     Map("tbl_rot_2025.pdf" -> Seq(90))
 
-  def writePdfPosFixture(dir: String): String = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    pdfPosFixtureData.foreach { case (name, pages) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath,
-        graft.sources.Pdf.writePdfPositioned(pages,
-          pdfPosRotates.getOrElse(name, Seq.empty)))
-    }
-    d.getAbsolutePath
-  }
+  def writePdfPosFixture(dir: String): String =
+    writeFiles(dir, pdfPosFixtureData.map { case (name, pages) =>
+      name -> Pdf.writePdfPositioned(pages, pdfPosRotates.getOrElse(name, Seq.empty))
+    })
 
   /** Expected positioned cells straight from the fixture definition. */
   def pdfPosExpected(s: SparkSession): DataFrame = {
@@ -1071,7 +813,7 @@ object Media extends QueryModule {
     * the area and must not appear. */
   private def m07(s: SparkSession, d: String): DataFrame = {
     val dir = writePdfPosFixture(pdfPosDir)
-    graft.sources.Pdf.tableRegion(s, dir, 60, 570, 400, 650)
+    Pdf.tableRegion(s, dir, 60, 570, 400, 650)
   }
 
   /** m08 — ORC sink + source round-trip (the second columnar format a
@@ -1664,24 +1406,17 @@ object Media extends QueryModule {
     "m02_png_metadata" -> m02 _,
     "m03_xlsx_cells" -> m03 _,
     "m04_sheet_discovery" -> m04 _,
-    "m05_pdf_lines" -> m05 _,
     "m06_pdf_page_search" -> m06 _,
     "m07_pdf_table_region" -> m07 _,
-    "m20_pdf_tj" -> m20 _,
     "m21_xlsx_roundtrip" -> m21 _,
-    "m22_pdf_cid" -> m22 _,
-    "m23_pdf_differences" -> m23 _,
     "m24_xlsx_merged" -> m24 _,
-    "m25_pdf_form_xobject" -> m25 _,
-    "m26_pdf_encrypted" -> m26 _,
-    "m27_pdf_mixed_cmap" -> m27 _,
     "m28_pdf_password" -> m28 _,
     "m29_pdf_lattice" -> m29 _,
     "m30_xls_legacy" -> m30 _,
     "m31_pdf_fontprog" -> m31 _,
     "m32_jpeg_decode" -> m32 _,
     "p04_pdf_report" -> p04 _,
-  )
+  ) ++ pdfTextGates.map(g => g.query -> pdfTextQuery(g))
 
   // DuckDB reads the payload as BLOB; hex() gives the uppercase hex
   // string, so byte offset k maps to hex chars (k-1)*2+1 .. len*2.
@@ -1722,11 +1457,6 @@ object Media extends QueryModule {
          GROUP BY file, sheet, sheet_idx
          ORDER BY file, sheet_idx LIMIT 1)"""
 
-  private val m05Sql =
-    """SELECT file, page, line_no, text
-       FROM read_parquet('__FIXTURES__/pdf_expected/*.parquet')
-       ORDER BY file, page, line_no"""
-
   private val m06Sql =
     """SELECT file, page, n_hits FROM (
          SELECT file, page, n_hits,
@@ -1766,22 +1496,33 @@ object Media extends QueryModule {
     "m02_png_metadata" -> m02Sql,
     "m03_xlsx_cells" -> m03Sql,
     "m04_sheet_discovery" -> m04Sql,
-    "m05_pdf_lines" -> m05Sql,
     "m06_pdf_page_search" -> m06Sql,
     "m07_pdf_table_region" -> m07Sql,
-    "m20_pdf_tj" -> m20Sql,
     "m21_xlsx_roundtrip" -> m21Sql,
-    "m22_pdf_cid" -> m22Sql,
-    "m23_pdf_differences" -> m23Sql,
     "m24_xlsx_merged" -> m24Sql,
-    "m25_pdf_form_xobject" -> m25Sql,
-    "m26_pdf_encrypted" -> m26Sql,
-    "m27_pdf_mixed_cmap" -> m27Sql,
     "m28_pdf_password" -> m28Sql,
     "m29_pdf_lattice" -> m29Sql,
     "m30_xls_legacy" -> m30Sql,
     "m31_pdf_fontprog" -> m31Sql,
     "m32_jpeg_decode" -> m32Sql,
     "p04_pdf_report" -> p04Sql,
-  )
+  ) ++ pdfTextGates.map(g => g.query -> pdfTextSql(g))
+
+  /** Every parquet fixture the oracles above read, by `__FIXTURES__`
+    * dir name: what `graft.Verify` dumps. */
+  val parquetFixtures: Seq[(String, SparkSession => DataFrame)] = Seq(
+    "media" -> fixture _,
+    "xlsx_expected" -> xlsxExpected _,
+    "pdf_pos_expected" -> pdfPosExpected _,
+    "pdf_pwd_expected" -> pdfPwdExpected _,
+    "pdf_lattice_expected" -> pdfLatticeExpected _,
+    "pdf_fontprog_expected" -> pdfFontProgExpected _,
+    "xls_expected" -> xlsExpected _,
+    "pixels_expected" -> pixelsExpected _,
+    "audio_expected" -> audioExpected _,
+    "frame_pixels_expected" -> framePixelsExpected _,
+    "jpeg_pixels_expected" -> jpegPixelsExpected _,
+    "tar_expected" -> tarExpected _,
+  ) ++ pdfTextGates.map(g =>
+    s"${g.dir}_expected" -> ((s: SparkSession) => pdfTextExpected(s, g)))
 }

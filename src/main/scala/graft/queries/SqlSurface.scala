@@ -188,11 +188,10 @@ object SqlSurface extends QueryModule {
     * resolved snapshot registers as a view and plain SQL aggregates
     * it. The oracle recomputes the post-merge state relationally, so
     * the hash certifies merge arithmetic AND the SQL read path. */
-  private val x06RunId = new java.util.concurrent.atomic.AtomicLong
   private def x06(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     open(s, d)
-    val table = graft.util.Scratch.dir(s"x06_vtab_${x06RunId.incrementAndGet()}")
+    val table = graft.util.Scratch.fresh("x06_vtab")
     val base = Tables.orders(s, d).select($"o_orderkey".as("k"),
       round($"o_totalprice" * 100).cast("long").as("cents"))
     graft.sources.VersionedTable.merge(s, table, base, Seq("k"), numBuckets = 8)
@@ -286,11 +285,10 @@ object SqlSurface extends QueryModule {
     * oracle recomputes each state relationally, certifying the
     * provider plans the same FileIndex read as the programmatic
     * surface. */
-  private val x10RunId = new java.util.concurrent.atomic.AtomicLong
   private def x10(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     open(s, d)
-    val table = graft.util.Scratch.dir(s"x10_graft_${x10RunId.incrementAndGet()}")
+    val table = graft.util.Scratch.fresh("x10_graft")
     val base = Tables.customer(s, d).select($"c_custkey".as("k"),
       $"c_nationkey".as("nat"),
       round($"c_acctbal" * 100).cast("long").as("bal"))
@@ -340,12 +338,9 @@ object SqlSurface extends QueryModule {
     * the refusal fires, names the honest alternative (`write.format
     * ("graft").mode("append")` = key-scoped MERGE), leaves ZERO bytes
     * behind, and the named alternative actually lands the same rows. */
-  private val x15RunId = new java.util.concurrent.atomic.AtomicLong
   private def x15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val table = graft.util.Scratch.dir(
-      s"x15_graft_${x15RunId.incrementAndGet()}")
-    graft.util.Scratch.deleteRecursively(new java.io.File(table))
+    val table = graft.util.Scratch.fresh("x15_graft")
     Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .write.format("graft").option("keyCols", "k")
       .option("numBuckets", 2).mode("append").save(table)

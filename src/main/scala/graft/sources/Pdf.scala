@@ -2585,39 +2585,21 @@ object Pdf {
     val pageNums = (0 until n).map(3 + _)
     val contNums = (0 until n).map(3 + n + _)
     val f1Num = 3 + 2 * n; val cmapNum = 4 + 2 * n; val f2Num = 5 + 2 * n
-    val body = new StringBuilder
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    body.append("%PDF-1.4\n")
-    def obj(num: Int, content: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n$content\nendobj\n")
-    }
-    def streamObj(num: Int, data: Array[Byte]): Unit = {
-      val d = deflate(data)
-      offsets += body.length
-      body.append(s"$num 0 obj\n<< /Length ${d.length} /Filter /FlateDecode >>\nstream\n")
-      body.append(new String(d, ISO_8859_1))
-      body.append("\nendstream\nendobj\n")
-    }
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, s"<< /Type /Pages /Kids [${pageNums.map(p => s"$p 0 R").mkString(" ")}] " +
+    val pdf = new ClassicPdf
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Kids [${pageNums.map(p => s"$p 0 R").mkString(" ")}] " +
       s"/Count $n /Resources << /Font << /F1 $f1Num 0 R /F2 $f2Num 0 R >> >> >>")
     pageNums.zip(contNums).foreach { case (p, c) =>
-      obj(p, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R >>")
+      pdf.obj(p, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R >>")
     }
     pages.zip(contNums).foreach { case (lines, c) =>
-      streamObj(c, contentFor(lines).getBytes(ISO_8859_1))
+      pdf.flate(c, contentFor(lines).getBytes(ISO_8859_1))
     }
-    obj(f1Num, "<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+Subset " +
+    pdf.obj(f1Num, "<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+Subset " +
       s"/Encoding /Identity-H /ToUnicode $cmapNum 0 R >>")
-    streamObj(cmapNum, cmapText.getBytes(ISO_8859_1))
-    obj(f2Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    val xrefPos = body.length
-    val nObjs = f2Num
-    body.append(s"xref\n0 ${nObjs + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => body.append(f"$o%010d 00000 n \n"))
-    body.append(s"trailer\n<< /Size ${nObjs + 1} /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    body.toString.getBytes(ISO_8859_1)
+    pdf.flate(cmapNum, cmapText.getBytes(ISO_8859_1))
+    pdf.obj(f2Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    pdf.finish()
   }
 
   /** Independent SIMPLE-FONT encoder: pre-2015 IDX filings routinely
@@ -2683,40 +2665,25 @@ object Pdf {
     val contNums = (0 until n).map(3 + n + _)
     val f1Num = 3 + 2 * n; val enc1Num = 4 + 2 * n
     val f2Num = 5 + 2 * n; val f3Num = 6 + 2 * n
-    val body = new StringBuilder
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    body.append("%PDF-1.4\n")
-    def obj(num: Int, content: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n$content\nendobj\n")
-    }
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, s"<< /Type /Pages /Kids [${pageNums.map(p => s"$p 0 R").mkString(" ")}] /Count $n >>")
+    val pdf = new ClassicPdf
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Kids [${pageNums.map(p => s"$p 0 R").mkString(" ")}] /Count $n >>")
     pageNums.zip(contNums).foreach { case (p, c) =>
-      obj(p, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R " +
+      pdf.obj(p, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R " +
         s"/Resources << /Font << /F1 $f1Num 0 R /F2 $f2Num 0 R /F3 $f3Num 0 R >> >> >>")
     }
     pages.zip(contNums).foreach { case (lines, c) =>
-      val s = contentFor(lines)
-      offsets += body.length
-      body.append(s"$c 0 obj\n<< /Length ${s.length} >>\nstream\n")
-      body.append(s)
-      body.append("\nendstream\nendobj\n")
+      pdf.stream(c, contentFor(lines).getBytes(ISO_8859_1))(len => s"<< /Length $len >>")
     }
-    obj(f1Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Times-Roman " +
+    pdf.obj(f1Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Times-Roman " +
       s"/Encoding $enc1Num 0 R >>")
-    obj(enc1Num, "<< /Type /Encoding /BaseEncoding /MacRomanEncoding " +
+    pdf.obj(enc1Num, "<< /Type /Encoding /BaseEncoding /MacRomanEncoding " +
       "/Differences [ 219 /Euro 245 /fi /uni2014 /bullet ] >>")
-    obj(f2Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
+    pdf.obj(f2Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
       "/Encoding /WinAnsiEncoding >>")
-    obj(f3Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Courier " +
+    pdf.obj(f3Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Courier " +
       "/Encoding << /Differences [ 65 /agrave /eacute ] >> >>")
-    val xrefPos = body.length
-    val nObjs = f3Num
-    body.append(s"xref\n0 ${nObjs + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => body.append(f"$o%010d 00000 n \n"))
-    body.append(s"trailer\n<< /Size ${nObjs + 1} /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    body.toString.getBytes(ISO_8859_1)
+    pdf.finish()
   }
 
   /** Independent FORM-XOBJECT encoder (§8.10): every page stamps a
@@ -2737,23 +2704,13 @@ object Pdf {
     val contNums = (0 until n).map(3 + n + _)
     val hdrNum = 3 + 2 * n; val stampNum = 4 + 2 * n
     val f1Num = 5 + 2 * n; val f2Num = 6 + 2 * n
-    val body = new StringBuilder
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    body.append("%PDF-1.4\n")
-    def obj(num: Int, content: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n$content\nendobj\n")
-    }
-    def streamObj(num: Int, dict: String, data: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n<< $dict /Length ${data.length} >>\nstream\n")
-      body.append(data)
-      body.append("\nendstream\nendobj\n")
-    }
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, s"<< /Type /Pages /Kids [${pageNums.map(p => s"$p 0 R").mkString(" ")}] /Count $n >>")
+    val pdf = new ClassicPdf
+    def streamObj(num: Int, dict: String, data: String): Unit =
+      pdf.stream(num, data.getBytes(ISO_8859_1))(len => s"<< $dict /Length $len >>")
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Kids [${pageNums.map(p => s"$p 0 R").mkString(" ")}] /Count $n >>")
     pageNums.zip(contNums).foreach { case (p, c) =>
-      obj(p, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R " +
+      pdf.obj(p, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R " +
         s"/Resources << /Font << /F1 $f1Num 0 R >> /XObject << /Hdr $hdrNum 0 R >> >> >>")
     }
     pages.zip(contNums).foreach { case (lines, c) =>
@@ -2783,15 +2740,10 @@ object Pdf {
     streamObj(stampNum,
       "/Type /XObject /Subtype /Form /BBox [0 0 100 20] /Matrix [2 0 0 2 100 30]",
       s"BT 5 5 Td (${esc(win(stamp))}) Tj ET")
-    obj(f1Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    obj(f2Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Times-Roman " +
+    pdf.obj(f1Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    pdf.obj(f2Num, "<< /Type /Font /Subtype /Type1 /BaseFont /Times-Roman " +
       "/Encoding /WinAnsiEncoding >>")
-    val xrefPos = body.length
-    val nObjs = f2Num
-    body.append(s"xref\n0 ${nObjs + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => body.append(f"$o%010d 00000 n \n"))
-    body.append(s"trailer\n<< /Size ${nObjs + 1} /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    body.toString.getBytes(ISO_8859_1)
+    pdf.finish()
   }
 
   /** Independent ENCRYPTED-PDF encoder (§7.6.3 standard security
@@ -2869,37 +2821,22 @@ object Pdf {
     val pageNums = (0 until nPages).map(3 + _)
     val contNums = (0 until nPages).map(3 + nPages + _)
     val encNum = 3 + 2 * nPages
-    val body = new StringBuilder
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    body.append("%PDF-1.4\n")
-    def obj(num: Int, content: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n$content\nendobj\n")
-    }
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, s"<< /Type /Pages /Kids [${pageNums.map(x => s"$x 0 R").mkString(" ")}] /Count $nPages >>")
+    val pdf = new ClassicPdf
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Kids [${pageNums.map(x => s"$x 0 R").mkString(" ")}] /Count $nPages >>")
     pageNums.zip(contNums).foreach { case (pg, c) =>
-      obj(pg, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R >>")
+      pdf.obj(pg, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R >>")
     }
     pages.zip(contNums).foreach { case (lines, c) =>
       val text = "BT /F1 12 Tf 72 720 Td\n" +
         lines.map(l => s"(${esc(l)}) Tj 0 -14 Td").mkString("\n") + "\nET"
       // order per §7.6.2: compress first, encrypt last — /Length is
       // the stored (encrypted) byte count
-      val enc = encrypt(c, deflate(text.getBytes(ISO_8859_1)))
-      offsets += body.length
-      body.append(s"$c 0 obj\n<< /Length ${enc.length} /Filter /FlateDecode >>\nstream\n")
-      body.append(new String(enc, ISO_8859_1))
-      body.append("\nendstream\nendobj\n")
+      pdf.stream(c, encrypt(c, deflate(text.getBytes(ISO_8859_1))))(flateDict)
     }
-    obj(encNum, s"<< /Filter /Standard /V $v /R $r /Length $bits$cfExtra" +
+    pdf.obj(encNum, s"<< /Filter /Standard /V $v /R $r /Length $bits$cfExtra" +
       s" /O ${hx(o)} /U ${hx(u)} /P $p$v5Extra >>")
-    val xrefPos = body.length
-    body.append(s"xref\n0 ${encNum + 1}\n0000000000 65535 f \n")
-    offsets.foreach(off => body.append(f"$off%010d 00000 n \n"))
-    body.append(s"trailer\n<< /Size ${encNum + 1} /Root 1 0 R /Encrypt $encNum 0 R" +
-      s" /ID [${hx(id0)} ${hx(id0)}] >>\nstartxref\n$xrefPos\n%%EOF\n")
-    body.toString.getBytes(ISO_8859_1)
+    pdf.finish(s" /Encrypt $encNum 0 R /ID [${hx(id0)} ${hx(id0)}]")
   }
 
   /** Independent MIXED-WIDTH CMap encoder: a Type0 font whose
@@ -2942,25 +2879,12 @@ object Pdf {
     val pageNums = (0 until nPages).map(3 + _)
     val contNums = (0 until nPages).map(3 + nPages + _)
     val fontNum = 3 + 2 * nPages; val cmapNum = 4 + 2 * nPages
-    val body = new StringBuilder
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    body.append("%PDF-1.4\n")
-    def obj(num: Int, content: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n$content\nendobj\n")
-    }
-    def streamObj(num: Int, data: Array[Byte]): Unit = {
-      val d = deflate(data)
-      offsets += body.length
-      body.append(s"$num 0 obj\n<< /Length ${d.length} /Filter /FlateDecode >>\nstream\n")
-      body.append(new String(d, ISO_8859_1))
-      body.append("\nendstream\nendobj\n")
-    }
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, s"<< /Type /Pages /Kids [${pageNums.map(x => s"$x 0 R").mkString(" ")}] " +
+    val pdf = new ClassicPdf
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Kids [${pageNums.map(x => s"$x 0 R").mkString(" ")}] " +
       s"/Count $nPages /Resources << /Font << /F1 $fontNum 0 R >> >> >>")
     pageNums.zip(contNums).foreach { case (pg, c) =>
-      obj(pg, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R >>")
+      pdf.obj(pg, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents $c 0 R >>")
     }
     pages.zip(contNums).foreach { case (lines, c) =>
       val ops = Seq.newBuilder[String]
@@ -2969,17 +2893,12 @@ object Pdf {
       ops += "72 720 Td"
       lines.foreach { l => ops += s"${hexShow(l)} Tj"; ops += "0 -14 Td" }
       ops += "ET"
-      streamObj(c, ops.result().mkString("\n").getBytes(ISO_8859_1))
+      pdf.flate(c, ops.result().mkString("\n").getBytes(ISO_8859_1))
     }
-    obj(fontNum, "<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+Mixed " +
+    pdf.obj(fontNum, "<< /Type /Font /Subtype /Type0 /BaseFont /GRAFT+Mixed " +
       s"/Encoding /Identity-H /ToUnicode $cmapNum 0 R >>")
-    streamObj(cmapNum, cmapText.getBytes(ISO_8859_1))
-    val xrefPos = body.length
-    val nObjs = cmapNum
-    body.append(s"xref\n0 ${nObjs + 1}\n0000000000 65535 f \n")
-    offsets.foreach(off => body.append(f"$off%010d 00000 n \n"))
-    body.append(s"trailer\n<< /Size ${nObjs + 1} /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    body.toString.getBytes(ISO_8859_1)
+    pdf.flate(cmapNum, cmapText.getBytes(ISO_8859_1))
+    pdf.finish()
   }
 
   /** One page of the ruled-table fixture ([[writePdfRuled]]). A
@@ -3169,63 +3088,44 @@ object Pdf {
       ops += "ET"
       ops.result().mkString("\n")
     }
-    val body = new StringBuilder
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    body.append("%PDF-1.4\n")
-    def obj(num: Int, c: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n$c\nendobj\n")
-    }
-    def streamObj(num: Int, dict: String, data: Array[Byte]): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n<< /Length ${data.length} $dict >>\nstream\n")
-      body.append(new String(data, ISO_8859_1))
-      body.append("\nendstream\nendobj\n")
-    }
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R " +
+    val pdf = new ClassicPdf
+    def streamObj(num: Int, dict: String, data: Array[Byte]): Unit =
+      pdf.stream(num, data)(len => s"<< /Length $len $dict >>")
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
+    pdf.obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R " +
       "/Resources << /Font << /F1 5 0 R /F2 8 0 R /F3 11 0 R >> >> >>")
     streamObj(4, "", content.getBytes(ISO_8859_1))
-    obj(5, "<< /Type /Font /Subtype /TrueType /BaseFont /AAAAAA+GraftTTF " +
+    pdf.obj(5, "<< /Type /Font /Subtype /TrueType /BaseFont /AAAAAA+GraftTTF " +
       "/FirstChar 2 /LastChar 255 /FontDescriptor 6 0 R >>")
-    obj(6, "<< /Type /FontDescriptor /FontName /AAAAAA+GraftTTF /Flags 4 " +
+    pdf.obj(6, "<< /Type /FontDescriptor /FontName /AAAAAA+GraftTTF /Flags 4 " +
       "/FontFile2 7 0 R >>")
     streamObj(7, s"/Length1 ${ttfSimple.length}", ttfSimple)
-    obj(8, "<< /Type /Font /Subtype /Type1 /BaseFont /BBBBBB+GraftT1 " +
+    pdf.obj(8, "<< /Type /Font /Subtype /Type1 /BaseFont /BBBBBB+GraftT1 " +
       "/FontDescriptor 9 0 R >>")
-    obj(9, "<< /Type /FontDescriptor /FontName /BBBBBB+GraftT1 /Flags 4 " +
+    pdf.obj(9, "<< /Type /FontDescriptor /FontName /BBBBBB+GraftT1 /Flags 4 " +
       "/FontFile 10 0 R >>")
     streamObj(10, s"/Length1 ${t1.length} /Length2 0 /Length3 0", t1)
-    obj(11, "<< /Type /Font /Subtype /Type0 /BaseFont /CCCCCC+GraftCID " +
+    pdf.obj(11, "<< /Type /Font /Subtype /Type0 /BaseFont /CCCCCC+GraftCID " +
       "/Encoding /Identity-H /DescendantFonts [12 0 R] >>")
-    obj(12, "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /CCCCCC+GraftCID " +
+    pdf.obj(12, "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /CCCCCC+GraftCID " +
       "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) /Supplement 0 >> " +
       "/FontDescriptor 13 0 R >>")
-    obj(13, "<< /Type /FontDescriptor /FontName /CCCCCC+GraftCID /Flags 4 " +
+    pdf.obj(13, "<< /Type /FontDescriptor /FontName /CCCCCC+GraftCID /Flags 4 " +
       "/FontFile2 14 0 R >>")
     streamObj(14, s"/Length1 ${ttfCid.length}", ttfCid)
-    val xrefPos = body.length
-    body.append("xref\n0 15\n0000000000 65535 f \n")
-    offsets.foreach(o => body.append(f"$o%010d 00000 n \n"))
-    body.append(s"trailer\n<< /Size 15 /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    body.toString.getBytes(ISO_8859_1)
+    pdf.finish()
   }
 
+  /** The one-content-stream-per-page layout of [[writePdf]],
+    * [[writePdfPositioned]] and [[writePdfRuled]]: 1 catalog, 2 pages,
+    * then page (3+2i) and its Flate content (4+2i) per page. */
   private def assemblePdf(streams: Seq[String],
       rotates: Seq[Int] = Seq.empty): Array[Byte] = {
     val nPages = streams.size
-    // object numbering: 1 catalog, 2 pages, then (3+2i) page / (4+2i) content
-    val pageObjNums = (0 until nPages).map(i => 3 + 2 * i)
-    val body = new StringBuilder
-    val offsets = scala.collection.mutable.ArrayBuffer[Int]()
-    body.append("%PDF-1.4\n")
-    def obj(num: Int, content: String): Unit = {
-      offsets += body.length
-      body.append(s"$num 0 obj\n$content\nendobj\n")
-    }
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, s"<< /Type /Pages /Kids [${pageObjNums.map(n => s"$n 0 R").mkString(" ")}] /Count $nPages >>")
+    val pdf = new ClassicPdf
+    pdf.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    pdf.obj(2, s"<< /Type /Pages /Kids [${(0 until nPages).map(i => s"${3 + 2 * i} 0 R").mkString(" ")}] /Count $nPages >>")
     streams.zipWithIndex.foreach { case (streamText, i) =>
       val pageNum = 3 + 2 * i
       val contNum = 4 + 2 * i
@@ -3233,20 +3133,60 @@ object Pdf {
         case 0 => ""
         case r => s"/Rotate $r "
       }
-      obj(pageNum, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] $rot/Contents $contNum 0 R >>")
-      val deflated = deflate(streamText.getBytes(ISO_8859_1))
+      pdf.obj(pageNum, s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] $rot/Contents $contNum 0 R >>")
+      pdf.flate(contNum, streamText.getBytes(ISO_8859_1))
+    }
+    pdf.finish()
+  }
+
+  /** The classic PDF file every fixture encoder but [[writePdfModern]]
+    * writes: a `%PDF-1.4` header, objects numbered 1..N and emitted in
+    * that order, a classic xref table and a trailer. One char per byte
+    * (ISO-8859-1), so the body's length is the byte offset the xref
+    * records. An object emitted out of number order fails loudly: the
+    * xref lists offsets in emission order, so it would silently point
+    * each number at the wrong object. Shares no code with the reader. */
+  private[graft] final class ClassicPdf {
+    private val body = new StringBuilder("%PDF-1.4\n")
+    private val offsets = scala.collection.mutable.ArrayBuffer[Int]()
+
+    private def begin(num: Int): Unit = {
+      require(num == offsets.size + 1,
+        s"object $num emitted out of order: object ${offsets.size + 1} is next")
       offsets += body.length
-      body.append(s"$contNum 0 obj\n<< /Length ${deflated.length} /Filter /FlateDecode >>\nstream\n")
-      body.append(new String(deflated, ISO_8859_1))
+    }
+
+    def obj(num: Int, content: String): Unit = {
+      begin(num)
+      body.append(s"$num 0 obj\n$content\nendobj\n")
+    }
+
+    /** A stream object holding `data` as stored; `dict` renders the
+      * exact dictionary text from the stored byte count. */
+    def stream(num: Int, data: Array[Byte])(dict: Int => String): Unit = {
+      begin(num)
+      body.append(s"$num 0 obj\n${dict(data.length)}\nstream\n")
+      body.append(new String(data, ISO_8859_1))
       body.append("\nendstream\nendobj\n")
     }
-    val xrefPos = body.length
-    val nObjs = 2 + 2 * nPages
-    body.append(s"xref\n0 ${nObjs + 1}\n0000000000 65535 f \n")
-    offsets.foreach(o => body.append(f"$o%010d 00000 n \n"))
-    body.append(s"trailer\n<< /Size ${nObjs + 1} /Root 1 0 R >>\nstartxref\n$xrefPos\n%%EOF\n")
-    body.toString.getBytes(ISO_8859_1)
+
+    /** A stream object holding `data` deflated. */
+    def flate(num: Int, data: Array[Byte]): Unit =
+      stream(num, deflate(data))(flateDict)
+
+    /** The xref table and trailer; `trailerTail` follows `/Root 1 0 R`
+      * (e.g. ` /Encrypt 9 0 R /ID [...]`). */
+    def finish(trailerTail: String = ""): Array[Byte] = {
+      val xrefPos = body.length
+      val size = offsets.size + 1
+      body.append(s"xref\n0 $size\n0000000000 65535 f \n")
+      offsets.foreach(o => body.append(f"$o%010d 00000 n \n"))
+      body.append(s"trailer\n<< /Size $size /Root 1 0 R$trailerTail >>\nstartxref\n$xrefPos\n%%EOF\n")
+      body.toString.getBytes(ISO_8859_1)
+    }
   }
+
+  private def flateDict(n: Int): String = s"<< /Length $n /Filter /FlateDecode >>"
 
   private def deflate(data: Array[Byte]): Array[Byte] = {
     val d = new Deflater(Deflater.BEST_COMPRESSION)

@@ -206,7 +206,7 @@ object Sources {
       s"updates must not carry a '$kb' column — it is the table's bucket key")
     deleteCol.foreach(c => require(updates.columns.contains(c),
       s"deleteCol '$c' not in updates schema ${updates.columns.mkString(",")}"))
-    val bucket = pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong)).cast("int")
+    val bucket = VersionedTable.bucketOf(keyCols, numBuckets)
     // the update plan feeds the contract check, the anti-join, and the
     // write — persist it so an expensive upstream (typically a fact
     // aggregate) runs once, not once per consumer

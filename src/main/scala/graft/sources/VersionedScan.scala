@@ -81,8 +81,10 @@ object VersionedScan {
     * key intersect; multi-key tables prune only when every key is
     * constrained (the bucket is a hash of ALL keys), via the cartesian
     * of the per-key sets, capped at [[maxCombos]] combos. Contradictory
-    * equalities yield Some(Set.empty) — a scan of zero files. */
-  private[sources] def candidateBuckets(filters: Seq[Expression],
+    * equalities yield Some(Set.empty) — a scan of zero files. The
+    * per-tuple hash is the driver-side twin of
+    * [[VersionedTable.bucketOf]], evaluated on the literals. */
+  private[graft] def candidateBuckets(filters: Seq[Expression],
       keyCols: Seq[String], keyTypes: Map[String, org.apache.spark.sql.types.DataType],
       numBuckets: Int): Option[Set[Int]] = {
     val conjuncts = filters.flatMap(splitAnd)

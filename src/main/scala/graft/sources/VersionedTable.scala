@@ -84,6 +84,14 @@ object VersionedTable {
   /** Bucket column name — an internal layout column, never part of the
     * user schema (reads drop it; updates must not carry it). */
   val KB = "kb"
+
+  /** A row's key-hash bucket, `pmod(xxhash64(keys), numBuckets)` as an
+    * int: the one bucket expression of the table layout, shared by
+    * merge, lookup, compaction, [[partitionForWriters]] and
+    * `Sources.mergeParquet`. `VersionedScan.candidateBuckets` evaluates
+    * the same hash on literals, driver-side. */
+  def bucketOf(keyCols: Seq[String], numBuckets: Int): Column =
+    pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong)).cast("int")
   private val LOG = "_log"
   private val FEED = "_feed"
   /** Delta-layer internals (merge-on-read): `_mor_del` marks a
@@ -635,8 +643,7 @@ object VersionedTable {
     require(numBuckets > 0, "numBuckets must be positive")
     (0 until writers).map { w =>
       updates.filter(
-        pmod(pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)),
-          lit(writers)) === lit(w))
+        pmod(bucketOf(keyCols, numBuckets), lit(writers)) === lit(w))
     }
   }
 
@@ -706,8 +713,7 @@ object VersionedTable {
           }
         }: _*)
     }
-    val bucket =
-      pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong)).cast("int")
+    val bucket = bucketOf(keyCols, numBuckets)
     val u = alignedUpdates.persist()
     try {
       // one job: per-key multiplicity, null keys, and the affected
@@ -1093,8 +1099,7 @@ object VersionedTable {
           s"by $tt — key types feed the bucket hash, so only a lossless " +
           "upcast of the key batch is accepted")
     }: _*)
-    val bucket = pmod(xxhash64(sn.keyCols.map(col): _*),
-      lit(sn.numBuckets.toLong)).cast("int")
+    val bucket = bucketOf(sn.keyCols, sn.numBuckets)
     val wanted = alignedKeys.select(bucket.as(KB)).distinct()
       .collect().map(_.getInt(0)).toSet
     resolved(spark, path, sn, Some(wanted))
@@ -1245,8 +1250,15 @@ object VersionedTable {
       val dataCols = unionDataCols(
         fs.flatMap(_._3.fields).filterNot(_.name == "change"), keys,
         s"between the feeds of versions $fromV and $toV")
-      def readFeed(v: Long, dir: String, sch: StructType): DataFrame =
-        spark.read.schema(sch).parquet(s"$path/$dir")
+      // the feed's listed part files, not its `_cdc` dir: Spark warns
+      // "All paths were ignored" for a `_`-prefixed root on every read
+      val (hfs, root) = fsOf(spark, path)
+      def readFeed(v: Long, dir: String, sch: StructType): DataFrame = {
+        val parts = hfs.listStatus(new HPath(root, dir)).map(_.getPath)
+          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+          .map(_.toString)
+        spark.read.schema(sch).parquet(parts.toIndexedSeq: _*)
+      }
       if (fs.size == 1) {
         // one commit: its feed IS the diff — no collapse, no shuffle
         val (v, dir, sch) = fs.head
@@ -1972,8 +1984,7 @@ object VersionedTable {
     val b = newB.getOrElse(sn.numBuckets)
     val v = sn.version + 1
     val dir = f"d$v%08d_" + java.util.UUID.randomUUID().toString.take(8)
-    val bucket = pmod(xxhash64(sn.keyCols.map(col): _*),
-      lit(b.toLong)).cast("int")
+    val bucket = bucketOf(sn.keyCols, b)
     // the index path: a compaction of an N-commit table reads ONE scan
     // over all live files instead of N union branches; resolved() also
     // FOLDS any live MoR delta layers into the rewrite — compaction is

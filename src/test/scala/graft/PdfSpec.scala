@@ -5,13 +5,15 @@ import graft.sources.Pdf
 
 class PdfSpec extends SparkSpec {
 
-  private def dir = Media.writePdfFixture("/tmp/graft-pdf-spec")
+  private val linesGate = Media.pdfTextGate("m05_pdf_lines")
+  private def dir = Media.writeFiles("/tmp/graft-pdf-spec",
+    linesGate.files.map(f => f.name -> f.bytes))
 
   test("parser round-trips the writer's PDFs line-for-line") {
     val got = Pdf.read(spark, dir).toDF()
       .orderBy("file", "page", "line_no")
       .collect().map(_.toSeq).toSeq
-    val want = Media.pdfExpected(spark)
+    val want = Media.pdfTextExpected(spark, linesGate)
       .orderBy("file", "page", "line_no")
       .collect().map(_.toSeq).toSeq
     assert(got == want)
@@ -72,7 +74,7 @@ class PdfSpec extends SparkSpec {
   // ---- full-spec (PDF 1.5) shapes: the m20 surface -------------------
 
   test("modern encoder (xref stream, ObjStm, TJ, /Contents array, nested tree) round-trips line-for-line") {
-    Media.pdfTjFixtureData.foreach { case (_, pages) =>
+    Media.pdfTextGate("m20_pdf_tj").files.map(_.pages).foreach { pages =>
       val bytes = Pdf.writePdfModern(pages)
       val raw = new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
       // the fixture genuinely exercises the modern structures
@@ -173,8 +175,7 @@ class PdfSpec extends SparkSpec {
   }
 
   test("CID encoder round-trips through the /ToUnicode CMap, fonts alternating per line") {
-    val pages = Media.pdfCidFixtureData
-    pages.foreach { case (_, ps) =>
+    Media.pdfTextGate("m22_pdf_cid").files.map(_.pages).foreach { ps =>
       val got = Pdf.parsePdf(Pdf.writePdfCid(ps))
       val want = for {
         (lines, pi) <- ps.zipWithIndex
@@ -353,7 +354,7 @@ class PdfSpec extends SparkSpec {
   }
 
   test("simple-font /Encoding + /Differences round-trips the legacy fixture") {
-    Media.pdfDiffFixtureData.foreach { case (_, pages) =>
+    Media.pdfTextGate("m23_pdf_differences").files.map(_.pages).foreach { pages =>
       val got = Pdf.parsePdf(Pdf.writePdfDifferences(pages))
       val want = for {
         (lines, pi) <- pages.zipWithIndex
@@ -981,6 +982,25 @@ class PdfSpec extends SparkSpec {
         |<8140> <20AC>
         |endbfchar""".stripMargin)
     assert(cm.decode("A@B") == "A€B")
+  }
+
+  test("the classic-xref assembler rejects objects emitted out of number order") {
+    val skip = new Pdf.ClassicPdf
+    skip.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    val e = intercept[IllegalArgumentException](skip.obj(3, "<< >>"))
+    assert(e.getMessage.contains("object 3 emitted out of order"))
+    val back = new Pdf.ClassicPdf
+    back.obj(1, "<< >>")
+    back.obj(2, "<< >>")
+    intercept[IllegalArgumentException](back.stream(2, Array[Byte](1))(n => s"<< /Length $n >>"))
+    intercept[IllegalArgumentException](new Pdf.ClassicPdf().flate(2, Array[Byte](1)))
+    // in order, the xref's entries are the objects' byte offsets
+    val ok = new Pdf.ClassicPdf
+    ok.obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
+    ok.obj(2, "<< /Type /Pages /Kids [] /Count 0 >>")
+    val raw = new String(ok.finish(), java.nio.charset.StandardCharsets.ISO_8859_1)
+    assert(raw.contains(f"${raw.indexOf("2 0 obj")}%010d 00000 n \n"))
+    assert(raw.contains("trailer\n<< /Size 3 /Root 1 0 R >>"))
   }
 
   /** Minimal single-page classic PDF around a raw content stream —

@@ -449,4 +449,22 @@ class VersionedScanSpec extends SparkSpec {
     assert(graft.util.PlanMetrics.filesRead(shuffled) >= 4L,
       "filesRead must see through ShuffleQueryStageExec")
   }
+
+  test("candidateBuckets' driver-side hash equals VersionedTable.bucketOf for int, long, string and two-column keys") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
+    val nb = 16
+    val df = Seq((7, 7L, "tujuh"), (-3, 1L << 40, ""), (1024, -9L, "ß€"))
+      .toDF("i", "l", "s")
+    Seq(Seq("i"), Seq("l"), Seq("s"), Seq("i", "s")).foreach { keys =>
+      val types = keys.map(k => k -> df.schema(k).dataType).toMap
+      df.select(keys.map(col) :+ VersionedTable.bucketOf(keys, nb): _*)
+        .collect().foreach { r =>
+          val filters = keys.zipWithIndex.map { case (k, i) =>
+            EqualTo(AttributeReference(k, types(k))(), Literal.create(r.get(i), types(k)))
+          }
+          assert(VersionedScan.candidateBuckets(filters, keys, types, nb) ===
+            Some(Set(r.getInt(keys.size))), s"keys $keys, row $r")
+        }
+    }
+  }
 }
