@@ -158,32 +158,71 @@ object Dedup extends QueryModule {
        GROUP BY h ORDER BY kept_doc"""
 
   /** d02 — exact n-gram Jaccard near-dup pairs (the correctness baseline
-    * the LSH variant approximates): distinct 3-shingles, inverted-index
-    * self-join on the shingle, |A∩B| / (|A|+|B|-|A∩B|) >= 0.6.
-    * Scale note: cost concentrates on high-document-frequency shingles;
-    * at real scale run d06 instead — the same exact check composed onto
+    * the LSH variant approximates): distinct 3-shingles, |A∩B| /
+    * (|A|+|B|-|A∩B|) >= 0.6 over every document pair that shares one,
+    * counted by [[jaccardPairs]] without materializing the pair space.
+    * Scale note: the overlap kernel's work is Σ over shingles of df²
+    * (2.8M increments at sf0.1, 27.9M at sf1; no shingle is in more
+    * than 25 documents) and its driver side holds the corpus's
+    * (doc_id, shingle) rows, so it holds to about sf15 (the bounds in
+    * [[SetOverlap]]'s scaladoc); a corpus with stop-shingles or beyond
+    * that scale runs d06 instead — the same exact check composed onto
     * d03's LSH candidates. This exhaustive form stays as the oracle
     * baseline the composition is validated against.
     */
-  private def d02(s: SparkSession, d: String): DataFrame = {
+  private def d02(s: SparkSession, d: String): DataFrame =
+    jaccardPairs(shingles(s, d))
+
+  /** `(doc_a, doc_b, jaccard)`, doc_a < doc_b, of the documents in a
+    * distinct `(doc_id, sh)` table whose rounded shingle-set Jaccard is
+    * at least 0.6, sorted by both ids. One plain collect brings the rows
+    * to the driver, which groups them per document (null ids dropped,
+    * as the equi-join on ids drops them); [[SetOverlap]] counts each
+    * pair's shared shingles and emits the pairs the integer pre-filter
+    * [[mayReach]] admits; the declared column arithmetic then decides
+    * on those few rows, so the result is the oracle's to the bit. The
+    * join key is the 60-bit shingle hash, not the ~90-byte string (the
+    * oracle hashes identically; a collision would have to defeat md5
+    * inside one corpus). */
+  private[graft] def jaccardPairs(sh: DataFrame): DataFrame = {
+    val s = sh.sparkSession
     import s.implicits._
-    // join key is the 60-bit shingle hash, not the ~90-byte string —
-    // an order of magnitude less shuffle volume at identical results
-    // (the oracle hashes identically; a collision would have to defeat
-    // md5 inside one corpus). Three consumers — materialize once.
-    val sh = slots.swap("d02", shingles(s, d))
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"),
-        $"a.sh" === $"b.sh" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    sortedSmall(inter
-      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
-      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
+    import scala.collection.mutable.{ArrayBuilder, LongMap}
+    val idType = sh.schema("doc_id").dataType
+    val byDoc = new LongMap[ArrayBuilder.ofLong]()
+    sh.where($"doc_id".isNotNull).select($"doc_id".cast("long"), $"sh")
+      .as[(Long, Long)].collect()
+      .foreach { case (doc, h) => byDoc.getOrElseUpdate(doc, new ArrayBuilder.ofLong) += h }
+    val docs = byDoc.iterator.map { case (doc, b) => (doc, b.result()) }.toArray
+    val pairs = SetOverlap.overlaps(s, docs)(jaccardCandidates)(_.collect())
+    sortedSmall(pairs.toSeq.toDF("doc_a", "doc_b", "n_inter", "na", "nb")
       .withColumn("jaccard", round($"n_inter" / ($"na" + $"nb" - $"n_inter"), 6))
       .filter($"jaccard" >= 0.6)
-      .select($"doc_a", $"doc_b", $"jaccard"),
+      .select($"doc_a".cast(idType).as("doc_a"), $"doc_b".cast(idType).as("doc_b"),
+        $"jaccard"),
       $"doc_a", $"doc_b")
+  }
+
+  /** Whether a pair sharing `n` of its `ni` and `nj` shingles can reach
+    * `round(n / (ni + nj - n), 6) >= 0.6`: exact integer arithmetic for
+    * n / union >= 0.599999, below the rounding's 0.5999995 cut, so it
+    * admits a superset of the pairs the declared filter keeps. */
+  private[graft] def mayReach(n: Long, ni: Long, nj: Long): Boolean =
+    10000000L * n >= 5999990L * (ni + nj - n)
+
+  /** d02's emit rule: `(doc_a, doc_b, n_inter, na, nb)` for each `j > i`
+    * that [[mayReach]] admits. */
+  private val jaccardCandidates: SetOverlap.Emit[(Long, Long, Long, Long, Long)] = {
+    (a, i, js, ns, m) =>
+      val out = Seq.newBuilder[(Long, Long, Long, Long, Long)]
+      var p = 0
+      while (p < m) {
+        val j = js(p)
+        if (j > i && mayReach(ns(p), a.sizes(i), a.sizes(j)))
+          out += ((a.keys(i), a.keys(j), ns(p).toLong, a.sizes(i).toLong, a.sizes(j).toLong))
+        p += 1
+      }
+      out.result()
   }
   private val d02Sql =
     s"""WITH sh0 AS ($shinglesSql),

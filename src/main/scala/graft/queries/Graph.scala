@@ -16,7 +16,8 @@ import graft.sources.Tables
   * the cached partitioning and only the node-sized rank table moves.
   * At 100 TB the iterations cost |edges| ≪ |lineitem| regardless of
   * iteration count, and nothing ever reaches the driver — except the
-  * co-trading adjacency, whose driver bound `buildCoTradingEdges` states.
+  * co-trading adjacency, whose driver bound `graft.ext.SetOverlap`'s
+  * scaladoc states.
   *
   * Determinism: ranks are kept in integer micro-units (1e6 = mass 1.0)
   * and every step is BIGINT multiply / integer-divide / sum — exact and
@@ -241,14 +242,6 @@ object Graph extends QueryModule {
     slots.swap("coedges", s.read.parquet(path))
   }
 
-  /** `buildCoTradingEdges`'s broadcast: every customer's distinct
-    * suppliers as dense supplier indices, CSR-packed. The customer with
-    * dense index `i` trades with suppliers `adj(off(i))` until
-    * `adj(off(i + 1))`; dense supplier index `j` stands for key `sup(j)`,
-    * and `sup` is sorted, so index order is key order. */
-  private[graft] final class CoAdjacency(val off: Array[Int],
-      val adj: Array[Int], val sup: Array[Long]) extends Serializable
-
   /** Undirected 5-NN co-trading edges `(a, b)`, a < b: each supplier
     * keeps its 5 co-suppliers with the most shared customers (ties by
     * smaller key), over the distinct non-null (o_custkey, l_suppkey)
@@ -257,50 +250,18 @@ object Graph extends QueryModule {
     * returns, so `use` must consume the edges (write, collect), not
     * return them lazily.
     *
-    * The build never materializes the supplier-pair space:
-    *  1. one collect_set shuffle of the fact join groups each supplier's
-    *     distinct customers, and the driver collects those lists;
-    *  2. the driver maps both key spaces to dense indices and inverts the
-    *     lists into each customer's suppliers ([[CoAdjacency]]), which it
-    *     broadcasts;
-    *  3. the per-supplier customer lists go back out as the partitions of
-    *     the kernel job (no second pass over the fact tables);
-    *  4. one mapPartitions kernel walks, for each supplier s1, its
-    *     customers' supplier lists, adding co-customer counts into a
-    *     primitive `int[#suppliers]` reused for every s1 of the task
-    *     (4 KB at sf0.1's 1,000 suppliers, 40 KB at sf1's 10,000, so
-    *     L1/L2-resident), and emits the top 5 by (shared desc, s2 asc)
-    *     without s1 itself; then `(least, greatest)` and `distinct`.
-    * Work is Σ over customers of k² array increments (k = the
-    * customer's supplier count) and 5 output rows per supplier.
-    *
-    * Broadcast bound: 4 bytes per distinct (customer, supplier) pair,
-    * plus 4 per customer and 8 per supplier: ~2.4 MB at sf0.1 (586,988
-    * pairs, 15,000 customers), 24.2 MB at sf1 (5,868,710 pairs, 149,990
-    * customers). The kernel tasks carry the per-supplier lists, another
-    * 4 bytes per pair split over the tasks. The driver peaks at ~24
-    * bytes per pair while it builds them (the collected long keys, one
-    * flattened copy to sort the customers, both int lists), and the
-    * collect (8 bytes per pair) meets the default 1 GiB
-    * `spark.driver.maxResultSize` at ~1.3·10^8 pairs (about sf23 of
-    * this corpus); past that the adjacency must be partitioned by
-    * customer range, not broadcast.
-    *
-    * MEASURED NEGATIVE RESULT, kept as history: an earlier imperative
-    * kernel (repartition by customer, count supplier PAIRS into a
-    * packed-long LongMap, emit per-task partials) ran 5,861 s CPU at sf1
-    * (1,931 s with a splitmix64 key mix) against 580 s for the
-    * declarative self-join + hash aggregate it tried to replace. Its pair
-    * keys (C(10k, 2) ≈ 50M) were within 10× of its 125M increments, so
-    * map-side combining removed little, every probe hashed into a map
-    * far larger than cache, and every partial paid boxing and encoder
-    * costs. This kernel escapes all three: it has no pair keys and no
-    * hash map (a supplier's counts live in a dense array indexed by the
-    * co-supplier), its increments hit that cache-resident array, and it
-    * emits 5 rows per supplier instead of one partial per pair. The
-    * declarative form it replaces (half self-join on `a.sup < b.sup`,
-    * mirror, TopKPerKey) aggregated 12.5M half pairs into 499,500 keys
-    * at sf0.1; GraphSpec keeps it as the parity oracle. */
+    * The build never materializes the supplier-pair space: one
+    * collect_set shuffle of the fact join groups each supplier's
+    * distinct customers, the driver collects those lists, and
+    * [[graft.ext.SetOverlap]] counts each supplier's co-customers into a
+    * dense per-task array (customers as tokens, suppliers as entities;
+    * its scaladoc states the work, broadcast and driver bounds, and the
+    * LongMap kernel not to retry). The emit rule keeps the top 5 by
+    * (shared desc, s2 asc) without s1 itself, as `(least, greatest)`;
+    * then `distinct`. The declarative form it replaces (half self-join
+    * on `a.sup < b.sup`, mirror, TopKPerKey) aggregated 12.5M half pairs
+    * into 499,500 keys at sf0.1; GraphSpec keeps it as the parity
+    * oracle. */
   private[graft] def buildCoTradingEdges[T](lineitem: DataFrame,
       orders: DataFrame)(use: DataFrame => T): T = {
     val s = lineitem.sparkSession
@@ -310,73 +271,40 @@ object Graph extends QueryModule {
       .where($"o_custkey".isNotNull && $"l_suppkey".isNotNull)
       .groupBy($"l_suppkey".cast("long"))
       .agg(collect_set($"o_custkey".cast("long")))
-      .as[(Long, Array[Long])].collect().sortBy(_._1)
-    val sup = bySup.map(_._1)
-    val cust = sortedDistinct(bySup.flatMap(_._2))
-    val custsOf = bySup.map(_._2.map(java.util.Arrays.binarySearch(cust, _)))
-    val off = new Array[Int](cust.length + 1)
-    custsOf.foreach(_.foreach(c => off(c + 1) += 1))
-    for (c <- cust.indices) off(c + 1) += off(c)
-    val adj = new Array[Int](off(cust.length))
-    val fill = off.clone()
-    for (j <- custsOf.indices; c <- custsOf(j)) { adj(fill(c)) = j; fill(c) += 1 }
-    val bc = s.sparkContext.broadcast(new CoAdjacency(off, adj, sup))
-    val k = 5
-    val top = s.sparkContext.parallelize(custsOf.indices.map(j => (j, custsOf(j))))
-      .mapPartitions { rows =>
-        val a = bc.value
-        val shared = new Array[Int](a.sup.length) // all zero between suppliers
-        val seen = new Array[Int](a.sup.length) // the indices shared holds non-zero
-        val best = new Array[Int](k)
-        val bestN = new Array[Int](k)
-        rows.flatMap { case (s1, custs) =>
-          var nSeen = 0
-          var i = 0
-          while (i < custs.length) {
-            var j = a.off(custs(i))
-            val end = a.off(custs(i) + 1)
-            while (j < end) {
-              val s2 = a.adj(j)
-              if (shared(s2) == 0) { seen(nSeen) = s2; nSeen += 1 }
-              shared(s2) += 1
-              j += 1
-            }
-            i += 1
-          }
-          // insertion into best/bestN, ordered by (shared desc, index asc)
-          var n = 0
-          i = 0
-          while (i < nSeen) {
-            val s2 = seen(i)
-            val m = shared(s2)
-            shared(s2) = 0
-            def before(p: Int) = m > bestN(p) || (m == bestN(p) && s2 < best(p))
-            if (s2 != s1 && (n < k || before(k - 1))) {
-              var p = if (n < k) { n += 1; n - 1 } else k - 1
-              while (p > 0 && before(p - 1)) {
-                best(p) = best(p - 1)
-                bestN(p) = bestN(p - 1)
-                p -= 1
-              }
-              best(p) = s2
-              bestN(p) = m
-            }
-            i += 1
-          }
-          Array.tabulate(n)(p => (a.sup(math.min(s1, best(p))), a.sup(math.max(s1, best(p)))))
-        }
-      }
-    val edges = top.toDF("a", "b").distinct()
-      .select($"a".cast(keyType).as("a"), $"b".cast(keyType).as("b"))
-    try use(edges) finally bc.destroy()
+      .as[(Long, Array[Long])].collect()
+    graft.ext.SetOverlap.overlaps(s, bySup)(top5) { top =>
+      use(top.toDF("a", "b").distinct()
+        .select($"a".cast(keyType).as("a"), $"b".cast(keyType).as("b")))
+    }
   }
 
-  /** The distinct values of `a`, ascending; sorts `a` in place. */
-  private def sortedDistinct(a: Array[Long]): Array[Long] = {
-    java.util.Arrays.sort(a)
+  /** g03's emit rule: supplier `s1`'s 5 co-suppliers with the most
+    * shared customers, ties by smaller index (= smaller key), as
+    * `(least, greatest)` key pairs. */
+  private val top5: graft.ext.SetOverlap.Emit[(Long, Long)] = { (a, s1, js, ns, m) =>
+    val k = 5
+    val best = new Array[Int](k)
+    val bestN = new Array[Int](k)
+    // insertion into best/bestN, ordered by (shared desc, index asc)
     var n = 0
-    for (x <- a) if (n == 0 || x != a(n - 1)) { a(n) = x; n += 1 }
-    java.util.Arrays.copyOf(a, n)
+    var i = 0
+    while (i < m) {
+      val s2 = js(i)
+      val c = ns(i)
+      def before(p: Int) = c > bestN(p) || (c == bestN(p) && s2 < best(p))
+      if (s2 != s1 && (n < k || before(k - 1))) {
+        var p = if (n < k) { n += 1; n - 1 } else k - 1
+        while (p > 0 && before(p - 1)) {
+          best(p) = best(p - 1)
+          bestN(p) = bestN(p - 1)
+          p -= 1
+        }
+        best(p) = s2
+        bestN(p) = c
+      }
+      i += 1
+    }
+    Seq.tabulate(n)(p => (a.keys(math.min(s1, best(p))), a.keys(math.max(s1, best(p)))))
   }
 
   /** g03 — TRIANGLE COUNT + global clustering coefficient over the

@@ -1611,20 +1611,30 @@ object VersionedTable {
   }
 
   /** One micro-batch of the published feed: rows of every commit in
-    * (fromExclusive, toInclusive] — a partition-pruned batch read of
-    * `_feed` (feed dirs are immutable once published, so a checkpoint
-    * replay of the same offset range reads identical rows). */
-  private[sources] def feedBatch(spark: SparkSession, path: String,
+    * (fromExclusive, toInclusive] — a read of exactly those published
+    * `_feed/commit_version=N` dirs (feed dirs are immutable once
+    * published, so a checkpoint replay of the same offset range reads
+    * identical rows). The dirs are listed leaves under
+    * `basePath = _feed`, so partition discovery still yields
+    * `commit_version`; a read of the `_feed` root itself would make
+    * Spark's path filter log "All paths were ignored" for the
+    * `_`-prefixed root. An empty range is an empty frame. */
+  private[graft] def feedBatch(spark: SparkSession, path: String,
       fromExclusive: Long, toInclusive: Long,
-      schema: Option[StructType] = None): DataFrame =
+      schema: Option[StructType] = None): DataFrame = {
     // the schema is stable for a source's lifetime (the file-source
     // contract: restart after a widening commit) — a long-lived stream
     // passes its construction-time schema instead of paying the
     // reverse manifest walk again on every micro-batch
-    spark.read.schema(schema.getOrElse(feedStreamSchema(spark, path)))
-      .parquet(s"$path/$FEED")
-      .filter(col("commit_version") > fromExclusive &&
-        col("commit_version") <= toInclusive)
+    val sch = schema.getOrElse(feedStreamSchema(spark, path))
+    val dirs = publishedFeedVersions(spark, path)
+      .filter(v => v > fromExclusive && v <= toInclusive)
+      .map(v => s"$path/$FEED/commit_version=$v")
+    if (dirs.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
+    else spark.read.schema(sch).option("basePath", s"$path/$FEED")
+      .parquet(dirs: _*)
+  }
 
   /** Column types the data-skipping stats cover: types whose internal
     * value is a number (ints, longs, doubles, date days, timestamp

@@ -1,7 +1,10 @@
 package graft
 
-import graft.ext.Dedup
+import graft.ext.{Dedup, SetOverlap}
+import org.apache.spark.graft.SparkProbe
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.Random
 
 class DedupSpec extends SparkSpec {
 
@@ -304,5 +307,161 @@ class DedupSpec extends SparkSpec {
     // not a gap. The oracle checks both counts exactly at every SF.)
     assert(rows.map(_.getAs[Long]("n_exact_dropped")).sum > 0)
     assert(rows.map(_.getAs[Long]("n_kept")).sum > 0)
+  }
+
+  test("d02 overlap kernel equals the declarative shingle self-join on seeded fixtures") {
+    (1 to 5).foreach { seed =>
+      val sh = jaccardFixture(seed)
+      val got = Dedup.jaccardPairs(sh)
+      val want = declarativeJaccard(sh)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)), s"seed $seed: ${got.schema}")
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g == w, s"seed $seed: kernel only ${g diff w}, declarative only ${w diff g}")
+    }
+  }
+
+  test("the d02 fixtures cover every case the parity claim rests on") {
+    import spark.implicits._
+    val texts = (1 to 5).flatMap(jaccardTexts)
+    assert(texts.exists(_._2 == null), "null text")
+    assert(texts.exists(_._2 == ""), "empty text")
+    assert(texts.exists(t => t._2 != null && t._2.nonEmpty && t._2.split(" ").length < 3),
+      "a document with fewer than 3 tokens")
+    assert(texts.exists { case (_, t) => t != null && {
+      val w = t.split(" ")
+      val shs = w.indices.dropRight(2).map(i => w.slice(i, i + 3).mkString(" "))
+      shs.length > shs.distinct.length } }, "a shingle repeated within a document")
+    assert(texts.groupBy(_._1).exists(_._2.length > 1), "duplicate doc_id rows")
+    val rows = (1 to 5).flatMap { seed =>
+      declarativeCounts(jaccardFixture(seed)).select($"n_inter", $"na", $"nb")
+        .as[(Long, Long, Long)].collect() }
+    assert(rows.exists { case (n, na, nb) => n * 5 == 3 * (na + nb - n) },
+      "a pair at exactly 0.6 (3 shared of 5)")
+    assert(rows.exists { case (n, na, nb) => !Dedup.mayReach(n, na, nb) &&
+      round6(n, na + nb - n) == 0.599999 }, "a pair just under the pre-filter bound")
+    assert(rows.exists { case (n, na, nb) => Dedup.mayReach(n, na, nb) &&
+      round6(n, na + nb - n) < 0.6 }, "a pair the pre-filter admits and the filter drops")
+    assert(rows.count { case (n, na, nb) => round6(n, na + nb - n) >= 0.6 } > 10,
+      "pairs above the threshold")
+  }
+
+  test("the d02 pre-filter admits every pair the declared round(x, 6) >= 0.6 keeps") {
+    import spark.implicits._
+    // every union size up to 400,000 with the three overlaps nearest 0.6
+    // of it: the declared filter's own arithmetic against mayReach
+    val cases = spark.range(1, 400001).select($"id".as("u"))
+      .select($"u", explode(array(floor($"u" * 0.6) - 1, floor($"u" * 0.6),
+        ceil($"u" * 0.6))).as("n"))
+      .where($"n".between(0, $"u"))
+      .select($"n", $"u", (round($"n" / $"u", 6) >= 0.6).as("kept"))
+      .where($"kept").as[(Long, Long, Boolean)].collect()
+    assert(cases.length > 300000)
+    // (ni, nj) = (u, n) gives union ni + nj - n = u
+    val lost = cases.filterNot { case (n, u, _) => Dedup.mayReach(n, u, n) }
+    assert(lost.isEmpty, s"kept pairs the pre-filter drops: ${lost.take(5).toSeq}")
+  }
+
+  test("d02 runs no document-pair shuffle and destroys its broadcast") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    def adjacencies() = SparkProbe.broadcastValues().count(_.isInstanceOf[SetOverlap.CoAdjacency])
+    val shuffled = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    val sh = jaccardFixture(1).persist()
+    sh.count()
+    SparkProbe.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try Dedup.jaccardPairs(sh).collect() finally {
+      SparkProbe.drainListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+      sh.unpersist()
+    }
+    assert(rows.nonEmpty)
+    // the final sort moves only the result rows; the candidate pairs never shuffle
+    assert(shuffled.get() <= rows.length, s"${shuffled.get()} shuffled records")
+    eventually(timeout(30.seconds), interval(50.millis)) {
+      assert(adjacencies() == 0, "the adjacency broadcast outlived d02")
+    }
+  }
+
+  private def round6(n: Long, u: Long): Double =
+    BigDecimal(n.toDouble / u).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The declarative d02 the overlap kernel replaced, kept as its
+    * oracle: the inverted-index self-join on the shingle hash, counted
+    * per document pair, joined to both sizes, the declared filter. */
+  private def declarativeJaccard(sh: DataFrame): DataFrame = {
+    import spark.implicits._
+    declarativeCounts(sh)
+      .withColumn("jaccard", round($"n_inter" / ($"na" + $"nb" - $"n_inter"), 6))
+      .filter($"jaccard" >= 0.6)
+      .select($"doc_a", $"doc_b", $"jaccard")
+      .orderBy($"doc_a", $"doc_b")
+  }
+
+  /** (n_inter, na, nb, doc_a, doc_b) of every document pair sharing a
+    * shingle, by the declarative self-join. */
+  private def declarativeCounts(sh: DataFrame): DataFrame = {
+    import spark.implicits._
+    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
+    sh.as("a").join(sh.as("b"), $"a.sh" === $"b.sh" && $"a.doc_id" < $"b.doc_id")
+      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
+      .agg(count(lit(1)).as("n_inter"))
+      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
+      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
+      .select($"n_inter", $"na", $"nb", $"doc_a", $"doc_b")
+  }
+
+  /** The distinct (doc_id, sh) table of seed's fixture: the shingles of
+    * [[jaccardTexts]], plus (seed 1) two pairs of large hash sets near
+    * the pre-filter bound, which text fixtures cannot reach cheaply:
+    *  - 80,002 shared of a 133,337 union, 0.59999850…: rounds to
+    *    0.599999, below the pre-filter's 0.599999 cut;
+    *  - 120,001 shared of a 200,002 union, 0.59999900…: admitted by the
+    *    pre-filter, dropped by the rounded filter. */
+  private def jaccardFixture(seed: Int): DataFrame = {
+    import spark.implicits._
+    val docs = jaccardTexts(seed).toDF("doc_id", "text")
+    val text = Dedup.shingleHashes(docs, $"doc_id", $"text")
+    if (seed != 1) text
+    else {
+      def sets(a: Long, b: Long, shared: Int, onlyA: Int, onlyB: Int, base: Long) =
+        (0 until shared).flatMap(i => Seq((a, base + i), (b, base + i))) ++
+          (0 until onlyA).map(i => (a, base + shared + i)) ++
+          (0 until onlyB).map(i => (b, base + shared + onlyA + i))
+      val big = sets(1001L, 1002L, 80002, 26667, 26668, 1L << 40) ++
+        sets(1003L, 1004L, 120001, 40000, 40001, 1L << 41)
+      text.unionByName(big.toDF("doc_id", "sh"))
+    }
+  }
+
+  /** (doc_id, text) rows of a small corpus over a 10-word vocabulary, so
+    * shingles recur across documents: random documents, near-copies with
+    * one or two words changed, a pair at exactly 0.6 ("a b c d e f" vs
+    * "a b c d e g": 3 shared of 5 shingles), documents of 0-2 tokens,
+    * null text, a document repeating its shingles and a doc_id carried
+    * by two rows. */
+  private def jaccardTexts(seed: Int): Seq[(Long, String)] = {
+    val rnd = new Random(seed)
+    val vocab = (0 until 10).map(i => s"w$i")
+    def doc(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val base = (0 until 40).map(_ => doc(4 + rnd.nextInt(12)))
+    val copies = base.take(25).map { d =>
+      val w = d.toArray
+      (0 until 1 + rnd.nextInt(2)).foreach(_ => w(rnd.nextInt(w.length)) = vocab(rnd.nextInt(10)))
+      w.toSeq
+    }
+    val random = (base ++ copies).map(_.mkString(" "))
+    val fixed = Seq("a b c d e f", "a b c d e g", "x", "x y", "", null,
+      "r s t r s t r s t", "r s t r s t u", "w1 w2 w3 w4 w5")
+    val ids = rnd.shuffle((0 until random.size + fixed.size).map(_ * 3L + 5))
+    val rows = ids.zip(random ++ fixed)
+    // a second row for one id: its shingles join the first row's set
+    rows :+ (rows.head._1, "w1 w2 w3 w4 w5 w6")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.TopKPerKey
+import graft.ext.SetOverlap
 import graft.queries.Graph
 import org.apache.spark.graft.SparkProbe
 import org.apache.spark.sql.DataFrame
@@ -221,7 +222,7 @@ class GraphSpec extends SparkSpec {
   test("the co-trading build destroys its broadcast and runs no supplier-pair aggregate") {
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
-    def adjacencies() = SparkProbe.broadcastValues().count(_.isInstanceOf[Graph.CoAdjacency])
+    def adjacencies() = SparkProbe.broadcastValues().count(_.isInstanceOf[SetOverlap.CoAdjacency])
     val (li, ord) = coTables(1)
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
     val listener = new QueryExecutionListener {

@@ -399,6 +399,62 @@ class VersionedTableSpec extends SparkSpec {
     assert(got.toSet === expected)
   }
 
+  test("a feed batch reads its listed commit dirs: same rows, no 'All paths were ignored' WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = freshDir("feed_batch")
+    VersionedTable.merge(spark, dir,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    VersionedTable.merge(spark, dir,
+      Seq((2L, "B", false), (3L, "", true), (4L, "d", false)).toDF("k", "v", "del"),
+      Seq("k"), Some("del"), numBuckets = 4)
+    VersionedTable.merge(spark, dir,
+      Seq((5L, "e", false)).toDF("k", "v", "del"), Seq("k"), Some("del"), numBuckets = 4)
+    VersionedTable.merge(spark, dir,
+      Seq((1L, "A", false)).toDF("k", "v", "del"), Seq("k"), Some("del"), numBuckets = 4)
+    val ignored = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("feed-batch-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith(".DataSource") &&
+            e.getMessage.getFormattedMessage.contains("All paths were ignored"))
+          ignored.add(e.getMessage.getFormattedMessage)
+    }
+    probe.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(probe, Level.WARN, null)
+    ctx.updateLoggers()
+    def rows(from: Long, to: Long) = VersionedTable.feedBatch(spark, dir, from, to)
+      .select($"commit_version", $"change", $"k", $"v")
+      .as[(Long, String, Long, String)].collect().toSet
+    val (mid, all, empty, rootWarns) = try {
+      val got = (rows(1L, 3L), rows(-1L, 3L), VersionedTable.feedBatch(spark, dir, 3L, 3L))
+      val before = ignored.size
+      // the guard sees the WARN a read of the feed root logs
+      spark.read.parquet(s"$dir/_feed").count()
+      (got._1, got._2, got._3, ignored.size - before)
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(probe.getName)
+      ctx.updateLoggers()
+      probe.stop()
+    }
+    def expected(vs: Seq[Long]) = vs.flatMap { v =>
+      VersionedTable.changes(spark, dir, v - 1, v)
+        .select(lit(v), $"change", $"k", $"v")
+        .as[(Long, String, Long, String)].collect()
+    }.toSet
+    assert(mid === expected(Seq(2L, 3L)))
+    assert(all === expected(Seq(1L, 2L, 3L)))
+    assert(all.map(_._1) === Set(1L, 2L, 3L))
+    assert(empty.count() === 0L)
+    assert(empty.schema === VersionedTable.feedBatch(spark, dir, 0L, 3L).schema)
+    assert(empty.schema.last.name === "commit_version")
+    assert(rootWarns === 1, "the probe must see the root read's WARN")
+    assert(ignored.size === 1, s"feed batches logged: $ignored")
+  }
+
   test("readStream.format(\"graft\"): provider stream equals the programmatic feed stream; offsets resume by commit version") {
     val dir = freshDir("graft_source_stream")
     VersionedTable.merge(spark, dir,
