@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 import graft.functions.Hashing.{h60, h60jvm}
 import graft.queries.QueryModule
 import graft.sources.Tables
@@ -57,71 +58,57 @@ object Dedup extends QueryModule {
       905850131L, 347807633L, 772091503L, 534610127L, 198653699L,
       860498681L, 611452397L)
 
-  /** Word 3-shingles as an array column (1-based positions). Documents
-    * with fewer than 3 tokens yield an empty array — without the guard,
-    * sequence(1, size-2) turns DESCENDING for size<3 and element_at
-    * throws on index 0 (the DuckDB generate_series is simply empty). */
-  private def shingleArr(text: Column): Column =
-    shingleArrFromToks(split(text, " "))
-
-  /** Same, over a BOUND token-array column. The distinction is the hot
-    * path's whole cost model: `transform`'s lambda is interpreted (no
-    * codegen for higher-order functions), and an expression nested in
-    * the lambda body is re-evaluated on EVERY element — with `toks` =
-    * `split(text)` inline, the three `element_at`s re-split the
-    * document ~3x per shingle (~280 splits/doc, measured 40+ s CPU at
-    * sf0.1 for a job whose real work is ~5 s). Callers project the
-    * token array into a column first so the lambda sees a bound
-    * attribute and `split` runs once per row; the optimizer keeps that
-    * Project below the Generate (verified on the optimized plan). */
-  private def shingleArrFromToks(toks: Column): Column =
-    when(size(toks) >= 3,
-      transform(sequence(lit(1), size(toks) - 2), i =>
-        concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))))
-      .otherwise(array())
-
-  /** Distinct (doc_id, 60-bit shingle hash) pairs. The hash is applied
-    * MAP-SIDE, before the distinct: deduping on the ~90-byte shingle
-    * strings shuffled ~10x more bytes than the (8+8)-byte hashed rows
-    * and dominated every shingle consumer's wall time (measured ~7 s of
-    * d02/d06 at sf0.1). Hash-then-distinct equals distinct-then-hash
-    * absent md5 collisions — the same assumption every join here
-    * already makes, and the oracle hash-check would expose a violation.
-    */
   /** PUBLIC operator: distinct (doc_id, 60-bit shingle hash) pairs for
     * any corpus with an id and a text column — the shared front end of
-    * the Jaccard/minhash family. */
+    * the Jaccard/minhash family. A shingle is 3 consecutive tokens of
+    * `split(text, ' ')` joined by ' '; a text with fewer than 3 tokens
+    * (or null) has none, and an id carried by several rows gets the
+    * union of their sets. One [[DocText]] pass: each id's shingles are
+    * hashed (`h60jvm`, one digest per partition), deduplicated inside
+    * the id's group and emitted in ascending hash order, so only the
+    * documents shuffle, never the ~290k shingle rows, and the rows come
+    * out in a reproducible order. Hashing before deduplicating equals
+    * deduplicating the strings absent md5 collisions (the bound in
+    * `graft.functions.Hashing`). DedupSpec keeps the declarative
+    * explode + md5 + distinct plan as this kernel's reference. */
   def shingleHashes(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("doc_id"), split(text, " ").as("toks"))
-      .select(col("doc_id"), explode(shingleArrFromToks(col("toks"))).as("shs"))
-      .select(col("doc_id"), h60(col("shs")).as("sh"))
-      .distinct()
+    DocText.perDoc(docs, id, text, StructField("sh", LongType)) { () =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      (key, texts) => {
+        val hs = new scala.collection.mutable.ArrayBuilder.ofLong
+        texts.foreach(toks => hs ++= windowHashes(md, toks))
+        val a = hs.result()
+        java.util.Arrays.sort(a)
+        a.indices.iterator.filter(i => i == 0 || a(i) != a(i - 1)).map(i => Row(key, a(i)))
+      }
+    }
+
+  /** The h60 hash of every 3-token window of `toks`, in window order
+    * (none under 3 tokens). */
+  private def windowHashes(md: java.security.MessageDigest, toks: Array[String]): Array[Long] = {
+    val out = new Array[Long](math.max(toks.length - 2, 0))
+    val sb = new java.lang.StringBuilder(64)
+    var i = 0
+    while (i < out.length) {
+      sb.setLength(0)
+      sb.append(toks(i)).append(' ').append(toks(i + 1)).append(' ').append(toks(i + 2))
+      out(i) = h60jvm(md, sb.toString)
+      i += 1
+    }
+    out
+  }
 
   /** The distinct (doc_id, sh) table of the corpus at `d`, a derived
-    * artifact: seven queries (d02, d06, d07, d13, d16, d17, d18) share the
-    * explode+md5+distinct pipeline, and its output is hashes only
-    * (224k rows, ~3.6 MB parquet at sf0.1), never text. */
+    * artifact: eight queries (d02, d03, d06, d07, d13, d16, d17, d18)
+    * read it, and its output is hashes only (224k rows, ~3.6 MB parquet
+    * at sf0.1), never text. */
   private[graft] def shingles(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     s.read.parquet(graft.util.Scratch.derived(s, "shingles", d,
         Seq(Tables.path(d, "documents"))) { out =>
-      shingleHashes(Tables.documents(s, d), $"doc_id", $"text")
+      shingleHashes(Tables.table(s, d, "documents"), $"doc_id", $"text")
         .write.parquet(out)
     })
-  }
-
-  /** Non-distinct shingle hashes for minhash-only consumers: min() is
-    * duplicate-insensitive, so the (doc_id, sh) distinct's full-width
-    * exchange (~1M rows at sf0.1) buys nothing there — the signature
-    * build aggregates map-side straight off the exploded hashes and
-    * shuffles only |docs| x 12 partial minima. Jaccard consumers (d02,
-    * d06's exact check) still need the distinct form. */
-  private def shinglesRaw(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .select($"doc_id", split($"text", " ").as("toks"))
-      .select($"doc_id", explode(shingleArrFromToks($"toks")).as("shs"))
-      .select($"doc_id", h60($"shs").as("sh"))
   }
 
   private val shinglesSql =
@@ -319,15 +306,7 @@ object Dedup extends QueryModule {
             // distinct shingle hashes, first-occurrence order (the
             // array_distinct contract)
             val seen = new java.util.LinkedHashSet[java.lang.Long]()
-            val sb = new java.lang.StringBuilder(64)
-            var i = 0
-            while (i + 2 < n) {
-              sb.setLength(0)
-              sb.append(toks(i)).append(' ').append(toks(i + 1))
-                .append(' ').append(toks(i + 2))
-              seen.add(h60jvm(md, sb.toString))
-              i += 1
-            }
+            windowHashes(md, toks).foreach(h => seen.add(h))
             val sh = new Array[Long](seen.size)
             val itr = seen.iterator(); var k = 0
             while (itr.hasNext) { sh(k) = itr.next(); k += 1 }
@@ -365,7 +344,9 @@ object Dedup extends QueryModule {
 
   private def d03(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val withBands = minhashBands(shinglesRaw(s, d), "d03")
+    // min() is duplicate-insensitive: the distinct artifact gives the
+    // same signatures as every window's hash would
+    val withBands = minhashBands(shingles(s, d), "d03")
     // signatures ride THROUGH the band joins (13 longs per side instead
     // of 1 — pair rows are few, so bytes are trivial), and est_sim is
     // computed map-side inside each join stage; the dedup across bands
@@ -1376,9 +1357,10 @@ object Dedup extends QueryModule {
     // probe branches) — unpersisted, the explode+md5+distinct DAG
     // re-executed once per consumer (measured 3x the pipeline cost,
     // the slowest query of round 5 at 59 s driver-side; ~1/3 of that
-    // with the cache). toks is BOUND in its own projection so the
-    // interpreted gram lambda doesn't re-split the document per
-    // element (shingleArrFromToks rationale).
+    // with the cache). toks is BOUND in its own projection: the gram
+    // lambda is interpreted (no codegen for higher-order functions) and
+    // re-evaluates an expression nested in its body on every element,
+    // so an inline split(text) would re-split the document per gram.
     val grams = slots.swap("d10", Tables.documents(s, d)
       .select($"doc_id", split($"text", " ").as("toks"))
       .select($"doc_id", explode(

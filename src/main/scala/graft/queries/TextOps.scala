@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -10,14 +9,16 @@ import graft.sources.Tables
   * The reference's text plane is ordered PDF lines; here the `documents`
   * table supplies the text and token position (1-based `pos` from
   * posexplode) supplies the explicit order — document order is data, not
-  * a side effect (SURVEY §1.1). Everything below is built from
-  * `spark.sql.functions` only, so WholeStageCodegen covers the full
-  * pipeline; there is deliberately no UDF in this module.
+  * a side effect (SURVEY §1.1). Most queries are built from
+  * `spark.sql.functions` only, so WholeStageCodegen covers them. The
+  * exception is segmentation (t06/t07): one JVM kernel per document
+  * through `graft.ext.DocText`, where the window form exploded,
+  * shuffled and re-collected every token.
   *
-  * Scale notes: the explode/segmentation queries shuffle on doc_id only
-  * (window partition key); per-doc state is one document's tokens.
-  * Cleaning/predicate queries are map-only — zero shuffles before the
-  * final ordered write.
+  * Scale notes: segmentation shuffles the documents once, hash
+  * partitioned on doc_id (one row per document, never per token);
+  * per-doc state is one document's tokens. Cleaning/predicate queries
+  * are map-only — zero shuffles before the final ordered write.
   */
 object TextOps extends QueryModule {
 
@@ -133,24 +134,54 @@ object TextOps extends QueryModule {
        FROM documents, unnest(generate_series(1, len(string_split(text, ' ')))) AS t(i)
        WHERE doc_id % 100 = 0 ORDER BY doc_id, pos"""
 
-  /** t06 — window-formulation segmentation (SURVEY §2.5 W3(a): heading
-    * flag → running sum = segment id → ordered concat per segment). The
-    * marker word 'table' plays the heading role; segment 0 is the
-    * pre-first-heading preamble. Order inside a segment is recovered
-    * with array_sort over (pos, word) structs — collect_list order is
-    * never relied upon (SURVEY §7.4 non-determinism rule).
-    */
+  /** Heading-driven segmentation (SURVEY §2.5 W3) of `(doc_id, text)`
+    * rows, one [[DocText]] pass per document: the heading word 'table'
+    * opens a new segment and belongs to it; segment 0 is the preamble
+    * before the first heading, present only when that preamble has
+    * tokens. Per segment:
+    *  - `n_words`, its tokens, heading included;
+    *  - `content`, those tokens joined by ' ';
+    *  - `repaired`, t07's forward repair: the body (the tokens without
+    *    the heading, joined by ' '; an empty body, or a lone empty
+    *    token, is null) else the next segment's body else '-'.
+    * The declarative forms (posexplode → running sum of the heading
+    * flag over a doc_id window → `collect_list` per segment → `lead`)
+    * shuffled every token row; TextOpsSpec keeps them as the kernel's
+    * reference. doc_id is the documents' key: an id carried by several
+    * rows segments their texts one after another, in text order. */
+  private[graft] def segments(docs: DataFrame): DataFrame = {
+    import graft.ext.DocText
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    DocText.perDoc(docs, col("doc_id"), col("text"),
+      StructField("seg", LongType), StructField("n_words", LongType, nullable = false),
+      StructField("content", StringType), StructField("repaired", StringType)) { () =>
+      (key, texts) => {
+        val toks = texts.flatten.toArray
+        // segment k spans toks(starts(k)) until the next start
+        val starts = toks.indices.filter(i => i == 0 || toks(i) == "table")
+        val segs = starts.indices.map { k =>
+          val seg = toks.slice(starts(k), if (k + 1 < starts.size) starts(k + 1) else toks.size)
+          val body = (if (seg.head == "table") seg.tail else seg).mkString(" ")
+          (seg, if (body.isEmpty) null else body)
+        }
+        val firstSeg = if (toks.nonEmpty && toks.head == "table") 1L else 0L
+        segs.indices.iterator.map { k =>
+          val (seg, body) = segs(k)
+          val next = if (k + 1 < segs.size) segs(k + 1)._2 else null
+          Row(key, firstSeg + k, seg.size.toLong, seg.mkString(" "),
+            Option(body).orElse(Option(next)).getOrElse("-"))
+        }
+      }
+    }
+  }
+
+  /** t06 — segmentation (SURVEY §2.5 W3(a): heading flag → segment id
+    * → ordered concat per segment), from [[segments]]. */
   private def t06(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy($"doc_id").orderBy($"pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tokens(s, d)
-      .withColumn("is_head", when($"word" === "table", 1L).otherwise(0L))
-      .withColumn("seg", sum($"is_head").over(w))
-      .groupBy($"doc_id", $"seg")
-      .agg(count(lit(1)).as("n_words"),
-        array_join(transform(array_sort(collect_list(struct($"pos", $"word"))),
-          x => x.getField("word")), " ").as("content"))
+    segments(Tables.table(s, d, "documents"))
+      .select($"doc_id", $"seg", $"n_words", $"content")
       .orderBy($"doc_id", $"seg")
   }
   private val t06Sql =
@@ -169,23 +200,11 @@ object TextOps extends QueryModule {
   /** t07 — forward content repair (SURVEY §2.5 W4, mainTesting.py:648-658):
     * a segment whose body (tokens minus the heading itself) is empty
     * borrows the next segment's body; the final fallback is the '-'
-    * sentinel (P12, fillna("-")). lead() over the per-doc segment order.
+    * sentinel (P12, fillna("-")). From [[segments]]'s `repaired`.
     */
   private def t07(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy($"doc_id").orderBy($"pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val segs = tokens(s, d)
-      .withColumn("is_head", when($"word" === "table", 1L).otherwise(0L))
-      .withColumn("seg", sum($"is_head").over(w))
-      .groupBy($"doc_id", $"seg")
-      .agg(array_join(transform(array_sort(collect_list(
-          when($"is_head" === 0, struct($"pos", $"word")))),
-          x => x.getField("word")), " ").as("body"))
-      .withColumn("body", nullif($"body", lit("")))
-    val segW = Window.partitionBy($"doc_id").orderBy($"seg")
-    segs
-      .withColumn("repaired", coalesce($"body", lead($"body", 1).over(segW), lit("-")))
+    segments(Tables.table(s, d, "documents"))
       .select($"doc_id", $"seg", $"repaired")
       .orderBy($"doc_id", $"seg")
   }

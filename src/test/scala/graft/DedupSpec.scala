@@ -389,6 +389,77 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("the shingle kernel equals the declarative explode + md5 + distinct plan") {
+    import spark.implicits._
+    def check(docs: DataFrame, what: String): Unit = {
+      val got = Dedup.shingleHashes(docs, $"doc_id", $"text")
+      val want = declarativeShingles(docs)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)), s"$what: ${got.schema}")
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g.size == g.distinct.size, s"$what: duplicate rows")
+      assert(g.toSet == w.toSet, s"$what: kernel only ${g diff w}, declarative only ${w diff g}")
+    }
+    (1 to 5).foreach(seed => check(jaccardTexts(seed).toDF("doc_id", "text"), s"seed $seed"))
+    val odd = oddTexts.toDF("doc_id", "text")
+    check(odd, "odd texts")
+    check(odd.select($"doc_id".cast("string").as("doc_id"), $"text"), "string ids")
+  }
+
+  test("the shingle fixtures cover null ids, stray spaces and surrogate pairs") {
+    val texts = oddTexts.map(_._2)
+    assert(oddTexts.count(_._1.isEmpty) >= 2, "two rows of a null doc_id")
+    assert(oddTexts.flatMap(_._1).groupBy(identity).exists(_._2.size > 1), "a duplicate doc_id")
+    assert(texts.exists(t => t != null && t.startsWith(" ") && t.endsWith(" ")),
+      "leading and trailing spaces")
+    assert(texts.exists(t => t != null && t.contains("  ")), "a double space")
+    assert(texts.exists(t => t != null && t.exists(Character.isSurrogate)), "a surrogate pair")
+    assert(texts.exists(t => t != null && t.exists(c => c > 127 && !Character.isSurrogate(c))),
+      "non-ASCII text")
+  }
+
+  test("shingleHashes groups binary ids by value and emits ascending hashes per id") {
+    import spark.implicits._
+    val docs = Seq((Array[Byte](1, 2), "a b c d"), (Array[Byte](1, 2), "b c d e"),
+      (Array[Byte](3), "a b c a b c")).toDF("doc_id", "text")
+    val got = Dedup.shingleHashes(docs, $"doc_id", $"text").collect().toSeq
+      .map(r => (r.getAs[Array[Byte]](0).toSeq, r.getLong(1)))
+    val want = declarativeShingles(docs).collect().toSeq
+      .map(r => (r.getAs[Array[Byte]](0).toSeq, r.getLong(1)))
+    assert(got.sortBy(x => (x._1.toString, x._2)) == want.sortBy(x => (x._1.toString, x._2)))
+    assert(got.count(_._1 == Seq[Byte](1, 2)) == 3, "one group: a b c, b c d, c d e")
+    got.groupBy(_._1).values.foreach(rows => assert(rows.map(_._2) == rows.map(_._2).sorted))
+  }
+
+  /** The declarative shingle front end the kernel replaced: split, the
+    * 3-token window array (empty under 3 tokens), explode, md5 → h60,
+    * distinct. */
+  private def declarativeShingles(docs: DataFrame): DataFrame = {
+    val toks = col("toks")
+    val windows = when(size(toks) >= 3,
+      transform(sequence(lit(1), size(toks) - 2), i =>
+        concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))))
+      .otherwise(array())
+    docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), explode(windows).as("shs"))
+      .select(col("doc_id"), graft.functions.Hashing.h60(col("shs")).as("sh"))
+      .distinct()
+  }
+
+  /** (doc_id, text) rows the d02 fixtures lack: null ids, leading,
+    * trailing and double spaces, non-ASCII words and surrogate pairs. */
+  private val oddTexts: Seq[(Option[Long], String)] = Seq(
+    (None, "null id one two three"),
+    (None, "one two three four"),
+    (Some(1L), " lead and trail "),
+    (Some(2L), "double  space  here now"),
+    (Some(3L), "  "),
+    (Some(4L), "caf\u00e9 na\u00efve \u00fcber caf\u00e9 na\u00efve"),
+    (Some(5L), "\ud83d\ude00 \ud83d\ude01 x \ud83d\ude00 \ud83d\ude01"),
+    (Some(5L), "x \ud83d\ude00 \ud83d\ude01 y"),
+    (Some(6L), null),
+    (Some(7L), "a b"))
+
   private def round6(n: Long, u: Long): Double =
     BigDecimal(n.toDouble / u).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Summarize a Spark event log per SQL execution.
 
-Usage: python3 tools/joblog.py <event log> [--stages] [--json] [--top N]
+Usage: python3 tools/joblog.py <event log> [--stages | --recompute] [--json] [--top N]
 
 The log is Spark's JSON-lines event log (spark.eventLog.enabled=true);
 a `.zstd`/`.zst` file is read through `zstd -dc`. For every root SQL
@@ -17,6 +17,19 @@ stage id, attempt, root execution, tasks, executor CPU ms, input
 records, shuffle read and write records, and the first `graft` frame of
 the stage's call site (the stage name when no frame names the engine).
 This attributes a query's cost to the operators that paid it.
+
+With --recompute it lists, per root execution, each stage that reads
+records of a shuffle another stage of the same execution also reads
+records of, and writes no shuffle output itself: the pipeline after that shuffle ran twice. The
+common cause is a range-partitioned exchange (a global orderBy) whose
+bounds-sampling job runs the post-shuffle pipeline once to sample it,
+then again to write the range shuffle. A shuffle is identified by the
+map-side RDD its shuffled RDD reads (the shuffled RDD's parent id), so
+stages of different jobs that read one shuffle are matched; a stage
+whose lineage names the shuffle but reads no records of it (it was
+served from a persisted copy) is not a reader. One line
+per (recomputing stage, other reader): both stages' CPU ms, the shuffle
+records the recomputing stage read and the other stage's shuffle write.
 """
 import argparse
 import json
@@ -54,6 +67,7 @@ def scan(evs):
     tasks = defaultdict(int)        # (stage, attempt) -> finished tasks
     cpu_ns = defaultdict(int)       # (stage, attempt) -> summed executor CPU
     records = defaultdict(lambda: [0, 0, 0])  # (stage, attempt) -> input, shuffle read, shuffle write
+    reads = {}                      # (stage, attempt) -> map-side RDD ids of the shuffles it reads
     for e in evs:
         kind = e.get("Event")
         if kind == SQL_START:
@@ -78,6 +92,8 @@ def scan(evs):
             key = (si["Stage ID"], si.get("Stage Attempt ID", 0))
             submitted[key] = si.get("Submission Time")
             info[key] = (si.get("Number of Tasks", 0), si.get("Stage Name", ""), si.get("Details", ""))
+            reads[key] = {p for r in si.get("RDD Info", []) if "Shuffled" in r.get("Name", "")
+                          for p in r.get("Parent IDs", [])}
         elif kind == "SparkListenerTaskStart":
             key = (e["Stage ID"], e.get("Stage Attempt ID", 0))
             t = e["Task Info"]["Launch Time"]
@@ -92,7 +108,8 @@ def scan(evs):
             r[1] += (m.get("Shuffle Read Metrics") or {}).get("Total Records Read", 0)
             r[2] += (m.get("Shuffle Write Metrics") or {}).get("Shuffle Records Written", 0)
     return dict(execs=execs, stage_exec=stage_exec, job_exec=job_exec, submitted=submitted,
-                first_launch=first_launch, info=info, tasks=tasks, cpu_ns=cpu_ns, records=records)
+                first_launch=first_launch, info=info, tasks=tasks, cpu_ns=cpu_ns, records=records,
+                reads=reads)
 
 
 def summarize(evs):
@@ -142,6 +159,56 @@ def stage_rows(evs):
     return out
 
 
+def recompute_rows(evs):
+    """Stages that re-run a pipeline another stage of their execution
+    runs off the same shuffle, paired with each such other stage."""
+    st = scan(evs)
+    stages = defaultdict(lambda: {"cpu_ms": 0, "tasks": 0, "shuffle_read_records": 0,
+                                  "shuffle_write_records": 0, "reads": set(), "call_site": ""})
+    for key in sorted(st["submitted"]):
+        r = stages[key[0]]
+        n_tasks, name, details = st["info"][key]
+        _, sh_r, sh_w = st["records"][key]
+        r["cpu_ms"] += st["cpu_ns"][key] // 1000000
+        r["tasks"] += n_tasks
+        r["shuffle_read_records"] += sh_r
+        r["shuffle_write_records"] += sh_w
+        r["reads"] |= st["reads"][key]
+        r["call_site"] = r["call_site"] or call_site(name, details)
+    by_exec = defaultdict(list)
+    for sid in sorted(stages):
+        by_exec[st["stage_exec"].get(sid, NO_EXEC)].append(sid)
+    out = []
+    for ex, sids in by_exec.items():
+        for sid in sids:
+            r = stages[sid]
+            if r["shuffle_write_records"] or not r["shuffle_read_records"]:
+                continue
+            for other in sids:
+                o = stages[other]
+                if other != sid and o["shuffle_read_records"] and r["reads"] & o["reads"]:
+                    out.append(dict(execution=ex, stage=sid, cpu_ms=r["cpu_ms"], tasks=r["tasks"],
+                                    shuffle_read_records=r["shuffle_read_records"],
+                                    other_stage=other, other_cpu_ms=o["cpu_ms"],
+                                    other_shuffle_write_records=o["shuffle_write_records"],
+                                    call_site=r["call_site"]))
+    return out
+
+
+def print_recompute(rows, as_json):
+    if as_json:
+        for r in rows:
+            print(json.dumps(r))
+        return
+    fmt = "{:>5} {:>5} {:>6} {:>8} {:>10}  {:>5} {:>8} {:>10}  {}"
+    print(fmt.format("exec", "stage", "tasks", "cpu_ms", "sh_r_rec", "other", "o_cpu_ms", "o_sh_w_rec",
+                     "call site"))
+    for r in rows:
+        print(fmt.format(r["execution"], r["stage"], r["tasks"], r["cpu_ms"], r["shuffle_read_records"],
+                         r["other_stage"], r["other_cpu_ms"], r["other_shuffle_write_records"],
+                         r["call_site"]))
+
+
 def print_stages(rows, as_json):
     if as_json:
         for r in rows:
@@ -162,7 +229,12 @@ def main():
     ap.add_argument("--top", type=int, default=0,
                     help="only the N executions with the most jobs (with --stages: the N stages with the most CPU)")
     ap.add_argument("--stages", action="store_true", help="one line per stage attempt")
+    ap.add_argument("--recompute", action="store_true",
+                    help="stages that re-run a pipeline another stage of their execution runs off one shuffle")
     a = ap.parse_args()
+    if a.recompute:
+        print_recompute(recompute_rows(events(a.log)), a.json)
+        return
     if a.stages:
         rows = stage_rows(events(a.log))
         if a.top:

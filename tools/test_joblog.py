@@ -80,6 +80,47 @@ def synthetic_log():
     return evs
 
 
+def shuffled(rdd_id, parent):
+    return {"RDD ID": rdd_id, "Name": "ShuffledRowRDD", "Parent IDs": [parent]}
+
+
+def mapped(rdd_id, parent):
+    return {"RDD ID": rdd_id, "Name": "MapPartitionsRDD", "Parent IDs": [parent]}
+
+
+def recompute_log():
+    """Execution 5 writes shuffle A (map-side RDD 10) in stage 20; job 2
+    samples the range bounds in stage 22 (reads A, writes nothing); job
+    3 runs the same pipeline in stage 24 (reads A, writes the range
+    shuffle, map-side RDD 13); stage 25 reads that range shuffle and
+    writes nothing, but no other stage reads it; stage 26 names A in
+    its lineage but reads no record of it (a persisted copy served it).
+    Execution 6 reads A once (stage 30): one reader per execution is no
+    recompute."""
+    def submit(sid, rdds, tasks=2):
+        return {"Event": "SparkListenerStageSubmitted",
+                "Stage Info": dict(stage_info(sid, tasks=tasks, submitted=100), **{"RDD Info": rdds})}
+    def job(jid, eid, sids):
+        return {"Event": "SparkListenerJobStart", "Job ID": jid,
+                "Properties": {"spark.sql.execution.id": eid}, "Stage Infos": [stage_info(s) for s in sids]}
+    evs = [{"Event": SQL_START, "executionId": 5, "rootExecutionId": 5, "description": "t06", "time": 0},
+           job(1, "5", [20]), submit(20, [mapped(10, 9)])]
+    evs += task(20, 0, 101, 300, inp=5000, sh_w=299775)
+    evs += [job(2, "5", [21, 22]), submit(22, [shuffled(11, 10), mapped(12, 11)])]
+    evs += task(22, 0, 102, 1000, sh_r=150000) + task(22, 0, 102, 1016, sh_r=149775)
+    evs += [job(3, "5", [23, 24]), submit(24, [shuffled(11, 10), mapped(13, 12)])]
+    evs += task(24, 0, 103, 788, sh_r=299775, sh_w=14970)
+    evs += [job(4, "5", [25]), submit(25, [shuffled(14, 13)])]
+    evs += task(25, 0, 104, 40, sh_r=14970)
+    evs += [job(5, "5", [26]), submit(26, [shuffled(11, 10), mapped(15, 11)])]
+    evs += task(26, 0, 105, 20, sh_w=7)
+    evs += [{"Event": SQL_END, "executionId": 5, "time": 900},
+            {"Event": SQL_START, "executionId": 6, "rootExecutionId": 6, "description": "x", "time": 1000},
+            job(6, "6", [30]), submit(30, [shuffled(11, 10)])]
+    evs += task(30, 0, 1001, 50, sh_r=299775)
+    return evs
+
+
 class JobLog(unittest.TestCase):
     def setUp(self):
         self.tmp = tempfile.TemporaryDirectory()
@@ -135,6 +176,21 @@ class JobLog(unittest.TestCase):
         out = [json.loads(x) for x in self.cli("--json").splitlines()]
         self.assertEqual(out[-1]["total"]["stages"], 4)
         self.assertEqual(out[-1]["total"]["jobs"], 2)
+
+    def test_recompute_pairs_the_sampling_stage_with_the_shuffle_write(self):
+        path = os.path.join(self.tmp.name, "recompute.json")
+        with open(path, "w") as fh:
+            for e in recompute_log():
+                fh.write(json.dumps(e) + "\n")
+        rows = joblog.recompute_rows(joblog.events(path))
+        self.assertEqual([(r["execution"], r["stage"], r["other_stage"]) for r in rows], [("5", 22, 24)])
+        r = rows[0]
+        self.assertEqual((r["cpu_ms"], r["tasks"], r["shuffle_read_records"]), (2016, 2, 299775))
+        self.assertEqual((r["other_cpu_ms"], r["other_shuffle_write_records"]), (788, 14970))
+        out = subprocess.run([sys.executable, os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                                           "joblog.py"), path, "--recompute"],
+                             check=True, capture_output=True, text=True).stdout.splitlines()
+        self.assertEqual(out[1].split()[:8], ["5", "22", "2", "2016", "299775", "24", "788", "14970"])
 
 
 if __name__ == "__main__":
