@@ -897,7 +897,7 @@ object Dedup extends QueryModule {
 
   /** d05 — embedding-cosine near-dup with sign-bit LSH pruning:
     * `planes` hyperplane sign bits (dims 1..planes) bucket the vectors;
-    * exact cosine (double precision, sequential fold — bit-stable
+    * exact cosine (`cosine_sim`: double precision, sequential — bit-stable
     * across engines) is evaluated within buckets only. At n vectors the
     * pair space shrinks from n^2 to sum of bucket^2 ~= n^2 / 2^planes,
     * so the plane count is the knob that must GROW with the corpus —
@@ -927,6 +927,14 @@ object Dedup extends QueryModule {
       bucket)
   }
 
+  /** Multi-probe fan-out of a sign bucket over `planes` bits: one row per
+    * probed cell (explode), the bucket itself first, then its `planes`
+    * Hamming-1 neighbours (bucket XOR 1, 2, 4, ...). The cell set does
+    * not depend on which plane owns which bit. */
+  def hamming1Cells(bucket: Column, planes: Int): Column =
+    explode(array((0L +: (0 until planes).map(1L << _))
+      .map(m => bucket.bitwiseXOR(lit(m))): _*))
+
   /** PUBLIC operator: embedding-cosine near-duplicate pairs for any
     * corpus with an id and a vector column — sign-plane buckets prune
     * the pair space, the exact cosine check runs in-bucket only.
@@ -948,15 +956,8 @@ object Dedup extends QueryModule {
       threshold: Double, planes: Int = 4, multiProbe: Boolean = false): DataFrame = {
     val e = emb.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
       .withColumn("bucket", signBucket(col("v"), planes))
-    val probe =
-      if (!multiProbe) e.withColumn("cell", col("bucket"))
-      else e.withColumn("flip",
-          explode(array((lit(0L) +: (0 until planes).map(i => lit(1L << i))): _*)))
-        .withColumn("cell", col("bucket").bitwiseXOR(col("flip")))
-        .drop("flip")
-    // native codegen'd expression on the hot pair loop (same fold
-    // order/values as the higher-order-function form — see
-    // graft.functions.CosineSimilarity)
+    val probe = e.withColumn("cell",
+      if (multiProbe) hamming1Cells(col("bucket"), planes) else col("bucket"))
     probe.as("a").join(e.as("b"),
         col("a.cell") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos", graft.functions.CosineSimilarity.cosineSim(col("a.v"), col("b.v")))

@@ -3,6 +3,10 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import graft.functions.CosineSimilarity
+import graft.functions.CosineSimilarity.cosineSim
+import graft.plans.TopKPerKey
 import graft.queries.QueryModule
 import graft.sources.Tables
 
@@ -11,10 +15,11 @@ import graft.sources.Tables
   * partitioned search as the scale path.
   *
   * Numerics: all arithmetic is double precision — the float32 input is
-  * cast up first (exact), and cosine is a sequential left fold over the
-  * array (`aggregate`), so the value is deterministic and reproducible;
-  * outputs are rounded to 1e-6 so engine-internal expression-order
-  * differences (dot/(sqrt*sqrt) vs dot/sqrt(product)) cannot surface.
+  * cast up first (exact), and every cosine is `cosine_sim`
+  * (graft.functions.CosineSimilarity), one sequential left-to-right
+  * loop, so the value is deterministic and reproducible; outputs are
+  * rounded to 1e-6 so engine-internal expression-order differences
+  * (dot/(sqrt*sqrt) vs dot/sqrt(product)) cannot surface.
   *
   * Scale design:
   *  - s01 brute force is a map-only scan + TakeOrderedAndProject: the
@@ -28,18 +33,136 @@ import graft.sources.Tables
   *    k-means assignment precomputed by the data, the IVF shape): each
   *    probe searches one partition, cutting scanned vectors ~10x here
   *    and |partitions|x in general.
+  *
+  * The IVF and PQ steps are written once, below, and every query, the
+  * public operators and the stored index are compositions of them.
   */
 object Similarity extends QueryModule {
 
-  /** cosine(a, b) in double precision as a sequential fold. */
-  private def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x)
-    val nb = aggregate(transform(b, x => x * x), lit(0.0), (acc, x) => acc + x)
-    dot / (sqrt(na) * sqrt(nb))
+  private val slots = new graft.util.PersistSlots
+
+  /** The corpus as (vec_id, `extra`..., v: array<double>). */
+  private def vectors(s: SparkSession, d: String, extra: Column*): DataFrame =
+    Tables.embeddings(s, d).select((col("vec_id") +: extra :+
+      col("embedding").cast("array<double>").as("v")): _*)
+
+  /** The s-family probe set: vectors with vec_id < 10, as (probe_id, pv). */
+  private def probeSet(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 10).select(col("vec_id").as("probe_id"), col("v").as("pv"))
+
+  /** Mean vector per `key` (the coarse quantizer's cells): `vecs` holds
+    * (`key`, v); returns (`key`, cv), cv in dimension order. */
+  private def centroids(vecs: DataFrame, key: String): DataFrame =
+    vecs.select(col(key), posexplode(col("v")).as(Seq("p", "x")))
+      .groupBy(col(key), col("p")).agg(avg(col("x")).as("cx"))
+      .groupBy(col(key))
+      .agg(transform(array_sort(collect_list(struct(col("p"), col("cx")))),
+        c => c.getField("cx")).as("cv"))
+
+  /** The corpus rows (vec_id, cell, ...) of each probe's `nprobe`
+    * nearest cells, the probe itself excluded, joined to the probe's
+    * (probe_id, pv). `cents` holds (cell, cv); cells rank by
+    * round(cos, 9) descending, lowest cell first on ties. Probes and
+    * centroids are broadcast; the corpus is scanned once. A corpus
+    * vector lives in exactly one cell, so probed cells contribute
+    * disjoint candidates. */
+  private def probeCells(corpus: DataFrame, cents: DataFrame,
+      probes: DataFrame, nprobe: Int): DataFrame = {
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(round(col("ccos"), 9).desc, col("cell"))
+    val assign = probes
+      .select(col("probe_id"), col("pv").cast("array<double>").as("pv"))
+      .crossJoin(broadcast(cents))
+      .withColumn("ccos", cosineSim(col("pv"), col("cv")))
+      .withColumn("arn", row_number().over(w))
+      .filter(col("arn") <= nprobe)
+      .select(col("probe_id"), col("pv"), col("cell").as("pcell"))
+    corpus.join(broadcast(assign),
+      col("cell") === col("pcell") && col("vec_id") =!= col("probe_id"))
   }
 
-  private val slots = new graft.util.PersistSlots
+  /** The top `k` rows per probe of `scored` (probe_id, vec_id, cos, ...)
+    * by round(cos, 9) descending, vec_id ascending: TopKPerKey's partial
+    * heaps cap each partition at k rows per probe BEFORE the exchange
+    * (never a window sort over the match product), and the rank window
+    * runs over at most k rows per probe. Returns (probe_id, `keep`...,
+    * neighbor_id, rank, cos_sim). */
+  private def rankTopK(scored: DataFrame, k: Int, keep: Column*): DataFrame = {
+    val order = Seq(round(col("cos"), 9).desc, col("vec_id"))
+    TopKPerKey.topKPerKey(scored, k, Seq(col("probe_id")), order)
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(order: _*)).cast("long"))
+      .select((col("probe_id") +: keep :+ col("vec_id").as("neighbor_id") :+
+        col("rank") :+ round(col("cos"), 6).as("cos_sim")): _*)
+  }
+
+  // ---- product quantization: the analytic sign codebook and its ADC.
+  // All profile/LUT/ADC arithmetic is integer micro-units (g01's
+  // determinism discipline): sums commute, so every engine and every
+  // partitioning agrees.
+
+  /** Per-dimension magnitude profile of the vectors (v): (i, si, n) with
+    * S_i = sum round(|x_i| * 1e6) and n the vectors counted. */
+  private def dimProfile(vecs: DataFrame): DataFrame =
+    vecs.select(posexplode(col("v")).as(Seq("i", "x")))
+      .groupBy(col("i"))
+      .agg(sum(expr("CAST(round(abs(x) * 1000000) AS BIGINT)")).as("si"),
+        count(lit(1)).as("n"))
+
+  /** Per-probe query weights (probe_id, i, wi) from a profile (i, si, n):
+    * w_i = round(pv_i * (S_i / (n * 1e6)) * 1e9), the factor an agreeing
+    * sign bit contributes to the ADC score. */
+  private def queryWeights(profile: DataFrame, probes: DataFrame): DataFrame =
+    profile.crossJoin(broadcast(probes))
+      .select(col("probe_id"), col("i"), expr(
+        "CAST(round((element_at(pv, i + 1) * (si / (n * 1000000.0))) * 1000000000.0) AS BIGINT)")
+        .as("wi"))
+
+  /** The ADC lookup table (probe_id, sp, code, wsc) of the weights: the
+    * score of code c in 8-dim subspace sp is sum_j ±w_{sp*8+j}, plus
+    * where bit j of c is set — 2,048 (sp, code) rows per probe. */
+  private def adcLut(weights: DataFrame): DataFrame = {
+    val s = weights.sparkSession
+    s.range(0, 2048)
+      .select(floor(col("id") / 256).cast("long").as("sp"),
+        (col("id") % 256).cast("long").as("code"))
+      .crossJoin(s.range(0, 8).select(col("id").cast("long").as("j")))
+      .withColumn("i", (col("sp") * 8 + col("j")).cast("int"))
+      .join(broadcast(weights), "i")
+      .withColumn("t", when(
+        expr("shiftright(code, CAST(j AS INT)) & 1") === 1L, col("wi"))
+        .otherwise(-col("wi")))
+      .groupBy(col("probe_id"), col("sp"), col("code")).agg(sum(col("t")).as("wsc"))
+  }
+
+  /** The sign codes of `v` over its first `nsp` 8-dim subspaces: bit j
+    * of code sp is set when v[sp*8+j] > 0 (packed little-endian) — the
+    * 8-byte compressed form a PQ index stores per 64-dim vector. */
+  private def signCodes(v: Column, nsp: Int): Column =
+    array((0 until nsp).map(sp => (0 until 8)
+      .map(j => when(element_at(v, sp * 8 + j + 1) > 0, lit(1L << j)).otherwise(lit(0L)))
+      .reduce(_ + _)): _*)
+
+  /** PQ-ADC search with exact re-rank: candidates (probe_id, vec_id,
+    * codes) score through `lut` as one table probe per subspace — never
+    * a full dot product — the top `depth` per probe by (adc desc,
+    * vec_id) pay the only exact cosines against `vecs` (vec_id, v, ...),
+    * and `rankTopK` keeps `k`. Returns rankTopK's columns with
+    * adc_score first among the kept ones. */
+  private def adcSearch(cands: DataFrame, lut: DataFrame, depth: Int,
+      vecs: DataFrame, probes: DataFrame, k: Int, keep: Column*): DataFrame = {
+    val adc = cands.select(col("probe_id"), col("vec_id"),
+        posexplode(col("codes")).as(Seq("sp", "cd")))
+      .select(col("probe_id"), col("vec_id"), col("sp").cast("long").as("sp"),
+        col("cd").cast("long").as("code"))
+      .join(broadcast(lut), Seq("probe_id", "sp", "code"))
+      .groupBy(col("probe_id"), col("vec_id")).agg(sum(col("wsc")).as("adc"))
+    val short = TopKPerKey.topKPerKey(adc, depth,
+      Seq(col("probe_id")), Seq(col("adc").desc, col("vec_id")))
+    val exact = short.join(vecs, "vec_id").join(broadcast(probes), "probe_id")
+      .withColumn("cos", cosineSim(col("v"), col("pv")))
+    rankTopK(exact, k, (round(col("adc") / 1e9, 6).as("adc_score") +: keep): _*)
+  }
 
   /** PUBLIC operator: exact cosine top-k of a corpus against a 1-row
     * query-vector DataFrame (broadcast; TakeOrderedAndProject keeps the
@@ -49,7 +172,7 @@ object Similarity extends QueryModule {
       query: DataFrame, k: Int): DataFrame =
     corpus.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
       .crossJoin(broadcast(query))
-      .withColumn("cos", cosine(col("v"), col("qv")))
+      .withColumn("cos", cosineSim(col("v"), col("qv").cast("array<double>")))
       .select(col("vec_id"), round(col("cos"), 6).as("cos_sim"))
       .orderBy(round(col("cos"), 9).desc, col("vec_id"))
       .limit(k)
@@ -62,14 +185,8 @@ object Similarity extends QueryModule {
       probes: DataFrame, k: Int): DataFrame = {
     val scored = corpus.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
       .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", cosine(col("v"), col("pv")))
-    val top = graft.plans.TopKPerKey.topKPerKey(scored, k,
-      Seq(col("probe_id")), Seq(round(col("cos"), 9).desc, col("vec_id")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(round(col("cos"), 9).desc, col("vec_id"))
-    top.withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos_sim"))
+      .withColumn("cos", cosineSim(col("v"), col("pv").cast("array<double>")))
+    rankTopK(scored, k)
   }
 
   /** s01 — exact cosine top-k against a fixed query vector (vec_id 0).
@@ -78,8 +195,7 @@ object Similarity extends QueryModule {
     */
   private def s01(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val e = vectors(s, d)
     val q = e.filter($"vec_id" === 0).select($"v".as("qv"))
     cosineTopK(e.filter($"vec_id" =!= 0), $"vec_id", $"v", q, 10)
   }
@@ -103,11 +219,8 @@ object Similarity extends QueryModule {
     */
   private def s02(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val probes = e.filter($"vec_id" < 10)
-      .select($"vec_id".as("probe_id"), $"v".as("pv"))
-    knn(e, $"vec_id", $"v", probes, 3)
+    val e = vectors(s, d)
+    knn(e, $"vec_id", $"v", probeSet(e), 3)
       .orderBy($"probe_id", $"rank")
   }
   private val s02Sql =
@@ -127,38 +240,16 @@ object Similarity extends QueryModule {
     * aggregate (|labels| rows) — broadcast both ways; the corpus is
     * scanned once, partitioned by label.
     */
-  private def s03(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
-    val cent = e
-      .select($"label", posexplode($"v").as(Seq("p", "x")))
-      .groupBy($"label", $"p").agg(avg($"x").as("cx"))
-      .groupBy($"label")
-      .agg(transform(array_sort(collect_list(struct($"p", $"cx"))),
-        c => c.getField("cx")).as("cv"))
-    val probes = e.filter($"vec_id" < 10)
-      .select($"vec_id".as("probe_id"), $"v".as("pv"))
-    val wAssign = Window.partitionBy($"probe_id")
-      .orderBy(round($"ccos", 9).desc, $"label")
-    val assign = probes.crossJoin(broadcast(cent))
-      .withColumn("ccos", cosine($"pv", $"cv"))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter($"arn" === 1)
-      .select($"probe_id", $"pv", $"label".as("cell"))
-    val scored = e.join(broadcast(assign),
-        $"label" === $"cell" && $"vec_id" =!= $"probe_id")
-      .withColumn("cos", cosine($"v", $"pv"))
-    // cell-pruned corpus scan still ranks through TopKPerKey (see s02):
-    // partial heaps bound the exchange at k rows per probe per partition
-    val top = graft.plans.TopKPerKey.topKPerKey(scored, 3,
-      Seq($"probe_id"), Seq(round($"cos", 9).desc, $"vec_id"))
-    val wRank = Window.partitionBy($"probe_id")
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-    top.withColumn("rank", row_number().over(wRank).cast("long"))
-      .select($"probe_id", $"cell", $"vec_id".as("neighbor_id"), $"rank",
-        round($"cos", 6).as("cos_sim"))
-      .orderBy($"probe_id", $"rank")
+  private def s03(s: SparkSession, d: String): DataFrame =
+    labelIvf(s, d, nprobe = 1).orderBy(col("probe_id"), col("rank"))
+
+  /** The in-memory IVF search of s03 and s06: the label centroids are
+    * the cells, each probe (vec_id < 10) searches its `nprobe` nearest,
+    * top-3 per probe with the searched cell kept. */
+  private def labelIvf(s: SparkSession, d: String, nprobe: Int): DataFrame = {
+    val e = vectors(s, d, col("label").as("cell"))
+    rankTopK(probeCells(e, centroids(e, "cell"), probeSet(e), nprobe)
+      .withColumn("cos", cosineSim(col("v"), col("pv"))), 3, col("cell"))
   }
   private val s03Sql =
     """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -190,41 +281,10 @@ object Similarity extends QueryModule {
     * a cell boundary recovers neighbors the single-cell search loses;
     * cost grows linearly with nprobe, still |cells|/nprobe-fold less
     * than the full corpus). Ranking is global per probe across both
-    * cells, through TopKPerKey like s02/s03. A corpus vector lives in
-    * exactly one cell, so the two probed cells contribute disjoint
-    * candidates — no dedup needed.
+    * cells, through TopKPerKey like s02/s03 (`labelIvf`).
     */
-  private def s06(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
-    val cent = e
-      .select($"label", posexplode($"v").as(Seq("p", "x")))
-      .groupBy($"label", $"p").agg(avg($"x").as("cx"))
-      .groupBy($"label")
-      .agg(transform(array_sort(collect_list(struct($"p", $"cx"))),
-        c => c.getField("cx")).as("cv"))
-    val probes = e.filter($"vec_id" < 10)
-      .select($"vec_id".as("probe_id"), $"v".as("pv"))
-    val wAssign = Window.partitionBy($"probe_id")
-      .orderBy(round($"ccos", 9).desc, $"label")
-    val assign = probes.crossJoin(broadcast(cent))
-      .withColumn("ccos", cosine($"pv", $"cv"))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter($"arn" <= 2)
-      .select($"probe_id", $"pv", $"label".as("cell"))
-    val scored = e.join(broadcast(assign),
-        $"label" === $"cell" && $"vec_id" =!= $"probe_id")
-      .withColumn("cos", cosine($"v", $"pv"))
-    val top = graft.plans.TopKPerKey.topKPerKey(scored, 3,
-      Seq($"probe_id"), Seq(round($"cos", 9).desc, $"vec_id"))
-    val wRank = Window.partitionBy($"probe_id")
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-    top.withColumn("rank", row_number().over(wRank).cast("long"))
-      .select($"probe_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"cos", 6).as("cos_sim"))
-      .orderBy($"probe_id", $"rank")
-  }
+  private def s06(s: SparkSession, d: String): DataFrame =
+    labelIvf(s, d, nprobe = 2).drop("cell").orderBy(col("probe_id"), col("rank"))
   private val s06Sql =
     """WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
        cent AS (
@@ -250,27 +310,11 @@ object Similarity extends QueryModule {
          FROM e JOIN assign a ON e.label = a.cell AND e.vec_id <> a.probe_id)
        WHERE rank <= 3 ORDER BY probe_id, rank"""
 
-  /** s04 — s01 again through the native codegen'd `cosine_sim`
-    * Expression (graft.functions.CosineSimilarity) instead of the
-    * higher-order-function fold: same accumulation order, same values,
-    * one tight primitive loop inside WholeStageCodegen and no
-    * per-row intermediate array. The oracle is the same cosine —
-    * proving the custom expression against DuckDB, not just against
-    * the fold.
-    */
-  private def s04(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.CosineSimilarity.cosineSim
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val q = e.filter($"vec_id" === 0).select($"v".as("qv"))
-    e.filter($"vec_id" =!= 0)
-      .crossJoin(broadcast(q))
-      .withColumn("cos", cosineSim($"v", $"qv"))
-      .select($"vec_id", round($"cos", 6).as("cos_sim"))
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-      .limit(10)
-  }
+  /** s04 — s01's exact cosine top-k under its own name: with
+    * `cosine_sim` the only cosine the two are one body, and s04 stays a
+    * named query of the catalogue (`SparkEntry.queries`), checked
+    * against s01's oracle. */
+  private def s04(s: SparkSession, d: String): DataFrame = s01(s, d)
 
   /** s05 — int8 quantized cosine (the memory-bound scale path: 4x
     * smaller vectors, SIMD-able integer dot products). Per-vector
@@ -287,8 +331,7 @@ object Similarity extends QueryModule {
       transform(v, x => greatest(lit(-127L), least(lit(127L),
         round(x / scale).cast("long"))).cast("double"))
     }
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val e = vectors(s, d)
       // all-zero vectors have no defined cosine and a zero quantization
       // scale (division blows up differently per engine) — exclude them
       .filter(array_max(transform($"v", x => abs(x))) > 0)
@@ -296,8 +339,8 @@ object Similarity extends QueryModule {
     val q = e.filter($"vec_id" === 0).select($"v".as("q_v"), $"qv".as("q_qv"))
     e.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
-      .withColumn("approx_cos", cosine($"qv", $"q_qv"))
-      .withColumn("exact_cos", cosine($"v", $"q_v"))
+      .withColumn("approx_cos", cosineSim($"qv", $"q_qv"))
+      .withColumn("exact_cos", cosineSim($"v", $"q_v"))
       .select($"vec_id", round($"approx_cos", 6).as("approx_cos"),
         round($"exact_cos", 6).as("exact_cos"),
         round(abs($"approx_cos" - $"exact_cos"), 6).as("quant_err"))
@@ -336,8 +379,7 @@ object Similarity extends QueryModule {
     * semantic-dedup pair check by it. */
   private def kmeansAssignments(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val e = vectors(s, d)
     val seeds = e.filter($"vec_id" < 8)
       .select($"vec_id".as("cl"), $"v".as("cv"))
     def assign(cents: DataFrame): DataFrame = {
@@ -357,7 +399,7 @@ object Similarity extends QueryModule {
           struct(lit(Double.NegativeInfinity).as("key"),
             lit(Long.MaxValue).as("cl"), lit(0.0).as("cc")),
           (acc, c) => {
-            val cc = cosine($"v", c.getField("cv"))
+            val cc = cosineSim($"v", c.getField("cv"))
             val key = round(cc, 9)
             when(key > acc.getField("key") ||
                  (key === acc.getField("key") && c.getField("cl") < acc.getField("cl")),
@@ -366,13 +408,7 @@ object Similarity extends QueryModule {
           }))
         .select($"vec_id", $"v", $"best.cl".as("cl"), $"best.cc".as("cc"))
     }
-    val a1 = assign(seeds)
-    val cent1 = a1.select($"cl", posexplode($"v").as(Seq("p", "x")))
-      .groupBy($"cl", $"p").agg(avg($"x").as("cx"))
-      .groupBy($"cl")
-      .agg(transform(array_sort(collect_list(struct($"p", $"cx"))),
-        c => c.getField("cx")).as("cv"))
-    assign(cent1)
+    assign(centroids(assign(seeds), "cl"))
   }
 
   private def s07(s: SparkSession, d: String): DataFrame = {
@@ -453,7 +489,7 @@ object Similarity extends QueryModule {
       .select($"cl", $"bi", $"blk".as("bj"), $"vec_id".as("ib"), $"v".as("vb"))
     val dropped = aSide.join(bSide, Seq("cl", "bi", "bj"))
       .filter($"bi" < $"bj" || $"ia" < $"ib")
-      .withColumn("cos", graft.functions.CosineSimilarity.cosineSim($"va", $"vb"))
+      .withColumn("cos", cosineSim($"va", $"vb"))
       .filter(round($"cos", 6) >= 0.4)
       .select($"cl", greatest($"ia", $"ib").as("ib")).distinct()
       .groupBy($"cl").agg(count(lit(1)).as("n_dropped"))
@@ -516,27 +552,16 @@ object Similarity extends QueryModule {
     */
   private def s08(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    def bucketOf(v: Column): Column =
-      (0 until 6).map(i => (element_at(v, i + 1) >= 0).cast("int") * (1 << i))
-        .reduce(_ + _)
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("bucket", bucketOf($"v"))
-    val probeCells = e.filter($"vec_id" < 10)
-      .select($"vec_id".as("probe_id"), $"v".as("pv"), $"bucket",
-        explode(array((lit(0) +: (0 until 6).map(i => lit(1 << i))): _*)).as("flip"))
-      .select($"probe_id", $"pv", $"bucket".bitwiseXOR($"flip").as("cell"))
-    val scored = e.join(broadcast(probeCells),
+    // the sign bucket's bit order differs from the oracle's spelling,
+    // but the Hamming-1 cell set of a bucket does not depend on it
+    val e = vectors(s, d).withColumn("bucket", Dedup.signBucket($"v", 6))
+    val fanout = e.filter($"vec_id" < 10)
+      .select($"vec_id".as("probe_id"), $"v".as("pv"),
+        Dedup.hamming1Cells($"bucket", 6).as("cell"))
+    val scored = e.join(broadcast(fanout),
         $"bucket" === $"cell" && $"vec_id" =!= $"probe_id")
-      .withColumn("cos", cosine($"v", $"pv"))
-    val top = graft.plans.TopKPerKey.topKPerKey(scored, 3,
-      Seq($"probe_id"), Seq(round($"cos", 9).desc, $"vec_id"))
-    val w = Window.partitionBy($"probe_id")
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-    top.withColumn("rank", row_number().over(w).cast("long"))
-      .select($"probe_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"cos", 6).as("cos_sim"))
-      .orderBy($"probe_id", $"rank")
+      .withColumn("cos", cosineSim($"v", $"pv"))
+    rankTopK(scored, 3).orderBy($"probe_id", $"rank")
   }
   private val s08Sql =
     """WITH e AS (
@@ -569,13 +594,9 @@ object Similarity extends QueryModule {
     */
   private def s09(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import graft.functions.CosineSimilarity.cosineSim
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val probes = e.filter($"vec_id" < 10)
-      .select($"vec_id".as("probe_id"), $"v".as("pv"))
+    val e = vectors(s, d)
     e.filter($"vec_id" >= 10)
-      .join(broadcast(probes))
+      .join(broadcast(probeSet(e)))
       .withColumn("cos", cosineSim($"v", $"pv"))
       .filter($"cos" >= 0.35)
       .select($"probe_id", $"vec_id".as("neighbor_id"),
@@ -698,49 +719,13 @@ object Similarity extends QueryModule {
     * an exact cosine. */
   private def s13(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = slots.swap("s13e", Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val e = slots.swap("s13e", vectors(s, d)
       .filter(array_max(transform($"v", x => abs(x))) > 0))
-    // per-dim magnitude profile: S_i in integer micro-units, c_i = S_i/(n*1e6)
-    val stats = e.select(posexplode($"v").as(Seq("i", "x")))
-      .groupBy($"i")
-      .agg(sum(expr("CAST(round(abs(x) * 1000000) AS BIGINT)")).as("si"),
-        count(lit(1)).as("n"))
-    val q = e.filter($"vec_id" === 0).select($"v".as("qv"))
-    // query-side weight per dim: w_i = round(q_i * c_i * 1e9) — the
-    // factor an agreeing sign bit contributes to the ADC score
-    val wtab = stats.crossJoin(broadcast(q))
-      .select($"i", expr(
-        "CAST(round((element_at(qv, i + 1) * (si / (n * 1000000.0))) * 1000000000.0) AS BIGINT)")
-        .as("wi"))
-    // the ADC lookup table: score of code c in subspace s = sum_j ±w_{s*8+j}
-    val lut = s.range(0, 2048)
-      .select(floor($"id" / 256).cast("long").as("sp"),
-        ($"id" % 256).cast("long").as("code"))
-      .crossJoin(s.range(0, 8).select($"id".cast("long").as("j")))
-      .withColumn("i", ($"sp" * 8 + $"j").cast("int"))
-      .join(broadcast(wtab), "i")
-      .withColumn("t", when(
-        expr("shiftright(code, CAST(j AS INT)) & 1") === 1L, $"wi")
-        .otherwise(-$"wi"))
-      .groupBy($"sp", $"code").agg(sum($"t").as("wsc"))
-    // encode: 8 sign bits per subspace, packed little-endian — the
-    // 8-byte compressed representation a PQ index stores per vector
-    val codes = e.filter($"vec_id" =!= 0)
-      .select($"vec_id", expr(
-        """transform(sequence(0, 7), s -> aggregate(sequence(0, 7), 0L,
-           (acc, j) -> acc + IF(element_at(v, s * 8 + j + 1) > 0,
-                                shiftleft(1L, CAST(j AS INT)), 0L)))""").as("codes"))
-    val adc = codes.select($"vec_id", posexplode($"codes").as(Seq("sp", "code")))
-      .join(broadcast(lut), Seq("sp", "code"))
-      .groupBy($"vec_id").agg(sum($"wsc").as("adc"))
-    val short = adc.orderBy($"adc".desc, $"vec_id").limit(40)
-    short.join(e, "vec_id").crossJoin(broadcast(q))
-      .withColumn("cos", cosine($"v", $"qv"))
-      .select($"vec_id", round($"adc" / 1e9, 6).as("adc_score"),
-        round($"cos", 6).as("cos_sim"))
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-      .limit(10)
+    val q = e.filter($"vec_id" === 0).select(lit(0L).as("probe_id"), $"v".as("pv"))
+    val cands = e.filter($"vec_id" =!= 0)
+      .select(lit(0L).as("probe_id"), $"vec_id", signCodes($"v", 8).as("codes"))
+    adcSearch(cands, adcLut(queryWeights(dimProfile(e), q)), 40, e, q, 10)
+      .orderBy($"rank").select($"neighbor_id".as("vec_id"), $"adc_score", $"cos_sim")
   }
   private val s13Sql =
     """WITH e AS (
@@ -794,59 +779,17 @@ object Similarity extends QueryModule {
     */
   private def s14(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = slots.swap("s14e", Tables.embeddings(s, d)
-      .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
+    val e = slots.swap("s14e", vectors(s, d, $"label".as("cell"))
       .filter(array_max(transform($"v", x => abs(x))) > 0))
-    // coarse quantizer: label centroids; the probe searches its 2
-    // nearest cells (s03/s06's assignment, single probe = vec 0)
-    val cent = e.select($"label", posexplode($"v").as(Seq("p", "x")))
-      .groupBy($"label", $"p").agg(avg($"x").as("cx"))
-      .groupBy($"label")
-      .agg(transform(array_sort(collect_list(struct($"p", $"cx"))),
-        c => c.getField("cx")).as("cv"))
-    val q = e.filter($"vec_id" === 0).select($"v".as("qv"))
-    val wAssign = Window.orderBy(round($"ccos", 9).desc, $"label")
-    val cells = cent.crossJoin(broadcast(q))
-      .withColumn("ccos", cosine($"qv", $"cv"))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter($"arn" <= 2)
-      .select($"label".as("cell"))
-    // PQ plane: s13's corpus dim-stats, query weights, 2048-entry LUT
-    val stats = e.select(posexplode($"v").as(Seq("i", "x")))
-      .groupBy($"i")
-      .agg(sum(expr("CAST(round(abs(x) * 1000000) AS BIGINT)")).as("si"),
-        count(lit(1)).as("n"))
-    val wtab = stats.crossJoin(broadcast(q))
-      .select($"i", expr(
-        "CAST(round((element_at(qv, i + 1) * (si / (n * 1000000.0))) * 1000000000.0) AS BIGINT)")
-        .as("wi"))
-    val lut = s.range(0, 2048)
-      .select(floor($"id" / 256).cast("long").as("sp"),
-        ($"id" % 256).cast("long").as("code"))
-      .crossJoin(s.range(0, 8).select($"id".cast("long").as("j")))
-      .withColumn("i", ($"sp" * 8 + $"j").cast("int"))
-      .join(broadcast(wtab), "i")
-      .withColumn("t", when(
-        expr("shiftright(code, CAST(j AS INT)) & 1") === 1L, $"wi")
-        .otherwise(-$"wi"))
-      .groupBy($"sp", $"code").agg(sum($"t").as("wsc"))
+    // coarse quantizer: label centroids; the single probe (vec 0)
+    // searches its 2 nearest cells (s03/s06's assignment)
+    val q = e.filter($"vec_id" === 0).select(lit(0L).as("probe_id"), $"v".as("pv"))
     // ADC over the PROBED CELLS' members only — the IVF/PQ composition
-    val members = e.filter($"vec_id" =!= 0)
-      .join(broadcast(cells), $"label" === $"cell")
-    val codes = members.select($"vec_id", expr(
-      """transform(sequence(0, 7), s -> aggregate(sequence(0, 7), 0L,
-         (acc, j) -> acc + IF(element_at(v, s * 8 + j + 1) > 0,
-                              shiftleft(1L, CAST(j AS INT)), 0L)))""").as("codes"))
-    val adc = codes.select($"vec_id", posexplode($"codes").as(Seq("sp", "code")))
-      .join(broadcast(lut), Seq("sp", "code"))
-      .groupBy($"vec_id").agg(sum($"wsc").as("adc"))
-    val short = adc.orderBy($"adc".desc, $"vec_id").limit(20)
-    short.join(e, "vec_id").crossJoin(broadcast(q))
-      .withColumn("cos", cosine($"v", $"qv"))
-      .select($"vec_id", $"label".as("cell"),
-        round($"adc" / 1e9, 6).as("adc_score"), round($"cos", 6).as("cos_sim"))
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-      .limit(10)
+    val cands = probeCells(e, centroids(e, "cell"), q, nprobe = 2)
+      .select($"probe_id", $"vec_id", signCodes($"v", 8).as("codes"))
+    adcSearch(cands, adcLut(queryWeights(dimProfile(e), q)), 20, e, q, 10, $"cell")
+      .orderBy($"rank")
+      .select($"neighbor_id".as("vec_id"), $"cell", $"adc_score", $"cos_sim")
   }
   private val s14Sql =
     """WITH e AS (
@@ -932,9 +875,9 @@ object Similarity extends QueryModule {
     // the corpus pays only the shortlist scan upstream), and the
     // earlier per-round join/agg/limit pipeline cost 35 scheduler
     // round-trips for 0.6 s of CPU (4.6 s wall in the bench). The
-    // selection arithmetic is replicated EXACTLY: cosine is the same
-    // left-to-right fold as the codegen'd CosineSimilarity expression,
-    // the argmax key is Spark's round(x, 9) (BigDecimal.valueOf +
+    // selection arithmetic is replicated EXACTLY: cosine is the Scala
+    // body of the CosineSimilarity expression's interpreted eval, the
+    // argmax key is Spark's round(x, 9) (BigDecimal.valueOf +
     // HALF_UP) descending with vec_id ascending tie-break, and the
     // score is simq*relWeight - maxsim*divWeight in that literal
     // order — the s15 oracle hash-checks all of it.
@@ -947,6 +890,13 @@ object Similarity extends QueryModule {
       .mapPartitions { it =>
         // vec_id sort makes the pass order-independent of the shuffle
         val cand = it.toArray.sortBy(_._1)
+        cand.headOption.foreach { h =>
+          cand.find(_._2.length != h._2.length).foreach { c =>
+            throw new IllegalArgumentException(s"mmrRerank: vec_id ${h._1} has " +
+              s"dimension ${h._2.length} but vec_id ${c._1} has ${c._2.length}")
+          }
+        }
+        val vecs = cand.map(c => ArrayData.toArrayData(c._2.toArray))
         // Spark's round() passes non-finite through (BigDecimal.valueOf
         // would throw); NaN/Inf keys then order via `gt` below
         def r9(x: Double): Double =
@@ -958,14 +908,6 @@ object Similarity extends QueryModule {
         // a bare `>` would make a NaN key lose every comparison
         def gt(a: Double, b: Double): Boolean =
           java.lang.Double.compare(a, b) > 0
-        def cos(a: Seq[Double], b: Seq[Double]): Double = {
-          var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-          while (i < a.length) {
-            val x = a(i); val y = b(i)
-            dot += x * y; na += x * x; nb += y * y; i += 1
-          }
-          dot / (math.sqrt(na) * math.sqrt(nb))
-        }
         val n = cand.length
         val taken = new Array[Boolean](n)
         // running max similarity to the selected set, updated per pick
@@ -996,9 +938,10 @@ object Similarity extends QueryModule {
           taken(best) = true
           i = 0
           while (i < n) {
-            if (!taken(i)) {
-              val ps = cos(cand(i)._2, v)
-              if (ps > maxsim(i)) maxsim(i) = ps
+            if (!taken(i)) CosineSimilarity.cosine(vecs(i), vecs(best)) match {
+              // a zero norm (null) has no similarity to raise maxsim with
+              case ps: Double if ps > maxsim(i) => maxsim(i) = ps
+              case _ =>
             }
             i += 1
           }
@@ -1039,8 +982,7 @@ object Similarity extends QueryModule {
     * per query from that count. */
   private def s16(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val e = vectors(s, d)
     val q = e.filter($"vec_id" === 0).select($"v".as("qv"))
     val meta = Tables.documents(s, d)
       .filter($"lang" === "en")
@@ -1048,7 +990,7 @@ object Similarity extends QueryModule {
     e.filter($"vec_id" =!= 0)
       .join(meta, "vec_id")
       .crossJoin(broadcast(q))
-      .withColumn("cos", cosine($"v", $"qv"))
+      .withColumn("cos", cosineSim($"v", $"qv"))
       .select($"vec_id", $"lang", round($"cos", 6).as("cos_sim"),
         round($"cos", 9).as("ord"))
       .orderBy($"ord".desc, $"vec_id")
@@ -1071,12 +1013,11 @@ object Similarity extends QueryModule {
 
   private def s15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val e = vectors(s, d)
     val q = e.filter($"vec_id" === 0).select($"v".as("qv"))
     val shortlist = e.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
-      .withColumn("simq", cosine($"v", $"qv"))
+      .withColumn("simq", cosineSim($"v", $"qv"))
       .orderBy(round($"simq", 9).desc, $"vec_id")
       .limit(20)
       .select($"vec_id", $"v", $"simq")
@@ -1169,12 +1110,7 @@ object Similarity extends QueryModule {
       indexPath: String): Long = {
     import spark.implicits._
     // corpus contract: (vec_id long, label long-castable, v array<double>)
-    val cent = corpus
-      .select($"label", posexplode($"v").as(Seq("p", "x")))
-      .groupBy($"label", $"p").agg(avg($"x").as("cx"))
-      .groupBy($"label")
-      .agg(transform(array_sort(collect_list(struct($"p", $"cx"))),
-        c => c.getField("cx")).as("cv"))
+    val cent = centroids(corpus, "label")
     val centRows = cent.select(lit("centroid").as("part"),
       $"label".cast("long").as("id"), $"label".cast("long").as("cell"),
       $"cv".cast("array<double>").as("vec"))
@@ -1202,14 +1138,8 @@ object Similarity extends QueryModule {
       else Seq(
         corpus.select(lit("pqcode").as("part"),
           $"vec_id".cast("long").as("id"), $"label".cast("long").as("cell"),
-          expr(s"""transform(sequence(0, ${nsp - 1}), s ->
-               CAST(aggregate(sequence(0, 7), 0L,
-                 (acc, j) -> acc + IF(element_at(v, s * 8 + j + 1) > 0,
-                                      shiftleft(1L, CAST(j AS INT)), 0L))
-                 AS DOUBLE))""").as("vec")),
-        corpus.select(posexplode($"v").as(Seq("i", "x")))
-          .groupBy($"i")
-          .agg(sum(expr("CAST(round(abs(x) * 1000000) AS BIGINT)")).as("si"))
+          signCodes($"v", nsp).cast("array<double>").as("vec")),
+        dimProfile(corpus)
           .select(lit("pqstat").as("part"), $"i".cast("long").as("id"),
             $"si".as("cell"), lit(null).cast("array<double>").as("vec")))
     val rows = (Seq(centRows, codeRows, paramRows) ++ pqParts)
@@ -1249,23 +1179,8 @@ object Similarity extends QueryModule {
       .select($"cell", $"vec".as("cv"))
     val codes = idx.filter($"part" === "code")
       .select($"id".as("vec_id"), $"cell", $"vec".as("v"))
-    val wAssign = Window.partitionBy($"probe_id")
-      .orderBy(round($"ccos", 9).desc, $"cell")
-    val assign = probes.crossJoin(broadcast(cent))
-      .withColumn("ccos", cosine($"pv", $"cv"))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter($"arn" <= nprobe)
-      .select($"probe_id", $"pv", $"cell")
-    val scored = codes.join(broadcast(assign).withColumnRenamed("cell", "pcell"),
-        $"cell" === $"pcell" && $"vec_id" =!= $"probe_id")
-      .withColumn("cos", cosine($"v", $"pv"))
-    val top = graft.plans.TopKPerKey.topKPerKey(scored, k,
-      Seq($"probe_id"), Seq(round($"cos", 9).desc, $"vec_id"))
-    val wRank = Window.partitionBy($"probe_id")
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-    top.withColumn("rank", row_number().over(wRank).cast("long"))
-      .select($"probe_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"cos", 6).as("cos_sim"))
+    rankTopK(probeCells(codes, cent, probes, nprobe)
+      .withColumn("cos", cosineSim($"v", $"pv")), k)
   }
 
   /** The stored IVF index of the corpus at `d`, a derived artifact shared
@@ -1336,63 +1251,23 @@ object Similarity extends QueryModule {
     * artifact: train once, version with the corpus, serve many. */
   private def s18(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val path = ensureIvfIndex(s, d)
-    val idx = graft.sources.VersionedTable.read(s, path)
+    val idx = graft.sources.VersionedTable.read(s, ensureIvfIndex(s, d))
     val cent = idx.filter($"part" === "centroid")
       .select($"cell", $"vec".as("cv"))
     val codes = idx.filter($"part" === "code")
       .select($"id".as("vec_id"), $"vec".as("v"))
     val pq = idx.filter($"part" === "pqcode")
-      .select($"id".as("vec_id"), $"cell", $"vec".as("pcodes"))
-    val stats = idx.filter($"part" === "pqstat")
+      .select($"id".as("vec_id"), $"cell", $"vec".as("codes"))
+    // the STORED profile (pqstat) and corpus size (param 2)
+    val profile = idx.filter($"part" === "pqstat")
       .select($"id".cast("int").as("i"), $"cell".as("si"))
-    val nDf = idx.filter($"part" === "param" && $"id" === 2)
-      .select($"cell".as("n"))
-    val probes = codes.filter($"vec_id" < 10)
-      .select($"vec_id".as("probe_id"), $"v".as("pv"))
-    val wAssign = Window.partitionBy($"probe_id")
-      .orderBy(round($"ccos", 9).desc, $"cell")
-    val assign = probes.crossJoin(broadcast(cent))
-      .withColumn("ccos", cosine($"pv", $"cv"))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter($"arn" <= 2)
-      .select($"probe_id", $"cell".as("pcell"))
-    // per-probe ADC weights from the STORED profile: w_i = round(
-    // pv_i * (S_i/(n*1e6)) * 1e9) — integer exact on both engines
-    val wtab = stats.crossJoin(broadcast(probes)).crossJoin(broadcast(nDf))
-      .select($"probe_id", $"i", expr(
-        "CAST(round((element_at(pv, i + 1) * (si / (n * 1000000.0))) * 1000000000.0) AS BIGINT)")
-        .as("wi"))
-    val lut = s.range(0, 2048)
-      .select(floor($"id" / 256).cast("long").as("sp"),
-        ($"id" % 256).cast("long").as("code"))
-      .crossJoin(s.range(0, 8).select($"id".cast("long").as("j")))
-      .withColumn("i", ($"sp" * 8 + $"j").cast("int"))
-      .join(broadcast(wtab), "i")
-      .withColumn("t", when(
-        expr("shiftright(code, CAST(j AS INT)) & 1") === 1L, $"wi")
-        .otherwise(-$"wi"))
-      .groupBy($"probe_id", $"sp", $"code").agg(sum($"t").as("wsc"))
-    val adc = pq.join(broadcast(assign),
-        $"cell" === $"pcell" && $"vec_id" =!= $"probe_id")
-      .select($"probe_id", $"vec_id", posexplode($"pcodes").as(Seq("sp", "cd")))
-      .withColumn("sp", $"sp".cast("long"))
-      .withColumn("code", $"cd".cast("long"))
-      .join(broadcast(lut), Seq("probe_id", "sp", "code"))
-      .groupBy($"probe_id", $"vec_id").agg(sum($"wsc").as("adc"))
-    val short = graft.plans.TopKPerKey.topKPerKey(adc, 20,
-      Seq($"probe_id"), Seq($"adc".desc, $"vec_id"))
-    val exact = short.join(codes, "vec_id")
-      .join(broadcast(probes), "probe_id")
-      .withColumn("cos", cosine($"v", $"pv"))
-    val top = graft.plans.TopKPerKey.topKPerKey(exact, 3,
-      Seq($"probe_id"), Seq(round($"cos", 9).desc, $"vec_id"))
-    val wRank = Window.partitionBy($"probe_id")
-      .orderBy(round($"cos", 9).desc, $"vec_id")
-    top.withColumn("rank", row_number().over(wRank).cast("long"))
-      .select($"probe_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"adc" / 1e9, 6).as("adc_score"),
-        round($"cos", 6).as("cos_sim"))
+      .crossJoin(broadcast(idx.filter($"part" === "param" && $"id" === 2)
+        .select($"cell".as("n"))))
+    val probes = probeSet(codes)
+    adcSearch(probeCells(pq, cent, probes, nprobe = 2)
+        .select($"probe_id", $"vec_id", $"codes"),
+      adcLut(queryWeights(profile, probes)), 20, codes, probes, 3)
+      .select($"probe_id", $"neighbor_id", $"rank", $"adc_score", $"cos_sim")
       .orderBy($"probe_id", $"rank")
   }
   private val s18Sql =

@@ -2,9 +2,23 @@ package graft
 
 import graft.ext.Similarity
 import graft.functions.CosineSimilarity
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
+
+  /** The reference `cosine_sim` is held to: cosine as a sequential
+    * left fold of Spark's higher-order functions, whose null, length
+    * and division rules are Spark's own arithmetic. */
+  private def foldCosine(a: Column, b: Column): Column = {
+    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+    val na = aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x)
+    val nb = aggregate(transform(b, x => x * x), lit(0.0), (acc, x) => acc + x)
+    dot / (sqrt(na) * sqrt(nb))
+  }
+
+  private def causes(t: Throwable): Iterator[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
 
   test("every similarity query runs; oracle SQL exists for each") {
     Similarity.queries.foreach { case (name, fn) =>
@@ -31,9 +45,70 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native cosine_sim expression matches the higher-order-function fold exactly") {
-    val hof = Similarity.queries("s01_cosine_topk")(spark, sfDir).collect()
-    val native = Similarity.queries("s04_cosine_topk_native")(spark, sfDir).collect()
-    assert(hof.toSeq == native.toSeq)
+    // outside ANSI mode the fold's division yields null on a zero
+    // divisor; under ANSI (the engine's session) it raises instead
+    val ref = spark.newSession()
+    ref.conf.set("spark.sql.ansi.enabled", "false")
+    import ref.implicits._
+    val emb = graft.sources.Tables.embeddings(spark, sfDir)
+      .select($"vec_id", $"embedding".cast("array<double>"))
+      .as[(Long, Array[Double])].collect()
+    // every (probe, corpus) pair of the s-family probe set; Array[Double]
+    // columns hold no nulls, so the generated loop has no null test
+    val pairs = (for ((p, pv) <- emb.toSeq if p < 10; (i, v) <- emb.toSeq)
+      yield (p * 1000000L + i, pv, v)).toDF("id", "a", "b")
+    val edges = ref.sql(
+      """SELECT * FROM VALUES
+           (1L, array(1D, CAST(NULL AS DOUBLE)), array(1D, 1D)),
+           (2L, array(1D, 1D), array(CAST(NULL AS DOUBLE), 1D)),
+           (3L, CAST(NULL AS ARRAY<DOUBLE>), array(1D)),
+           (4L, array(1D), array(1D, 1D)),
+           (5L, CAST(array() AS ARRAY<DOUBLE>), CAST(array() AS ARRAY<DOUBLE>)),
+           (6L, array(0D, 0D), array(1D, 1D)),
+           (7L, array(CAST('NaN' AS DOUBLE), 1D), array(1D, 1D)),
+           (8L, array(CAST('Infinity' AS DOUBLE), 1D), array(1D, 1D)),
+           (9L, array(CAST('-Infinity' AS DOUBLE), 0D), array(1D, 1D)),
+           (10L, array(1D, 2D, 3D), array(3D, -2D, 1D))
+         AS t(id, a, b)""")
+    // NaN bit patterns are canonical, so equal bits = same value or both NaN
+    def bits(df: DataFrame, c: Column): Map[Long, Option[Long]] =
+      df.repartition(4).select($"id", c).collect().map(r => r.getLong(0) ->
+        Option(r.get(1)).map(x => java.lang.Double.doubleToLongBits(x.asInstanceOf[Double])))
+        .toMap
+    for ((wholeStage, factory) <- Seq(("true", "FALLBACK"), ("false", "NO_CODEGEN"));
+         df <- Seq(pairs, edges)) {
+      ref.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      ref.conf.set("spark.sql.codegen.factoryMode", factory)
+      val native = bits(df, CosineSimilarity.cosineSim($"a", $"b"))
+      val fold = bits(df, foldCosine($"a", $"b"))
+      assert(native.size == df.count() && native == fold,
+        s"wholeStage=$wholeStage: ${(native.toSet diff fold.toSet).take(5)}")
+    }
+    val edgeNulls = bits(edges, CosineSimilarity.cosineSim($"a", $"b"))
+      .collect { case (id, None) => id }.toSet
+    assert(edgeNulls == Set(1L, 2L, 3L, 4L, 5L, 6L),
+      "null elements, a null array, a length mismatch and zero norms are null")
+    // the engine's session is ANSI: there the fold cannot score a zero
+    // vector at all, while cosine_sim yields null
+    val zero = spark.sql("SELECT array(0D, 0D) AS a, array(1D, 1D) AS b").repartition(1)
+    assert(zero.select(CosineSimilarity.cosineSim(col("a"), col("b"))).head.isNullAt(0))
+    val err = intercept[Exception](zero.select(foldCosine(col("a"), col("b"))).collect())
+    assert(causes(err).exists(e => String.valueOf(e.getMessage).contains("DIVIDE_BY_ZERO")), err)
+  }
+
+  test("no s-family plan or x04/x07/x08/x09 view plans a zip_with fold") {
+    val probe = graft.sources.Tables.embeddings(spark, sfDir)
+      .select(col("embedding").cast("array<double>").as("v"))
+    assert(planOf(probe.select(foldCosine(col("v"), col("v")))).contains("zip_with"),
+      "audit went vacuous: the fold no longer plans as zip_with")
+    val views = Seq("x04_sql_neardup_view", "x07_sql_text_signals",
+      "x08_sql_knn_view", "x09_sql_topk_view")
+    val plans = Similarity.queries.toSeq ++
+      views.map(v => v -> graft.queries.SqlSurface.queries(v))
+    plans.foreach { case (name, fn) =>
+      val plan = planOf(fn(spark, sfDir))
+      assert(!plan.contains("zip_with"), s"$name plans a zip_with fold:\n$plan")
+    }
   }
 
   test("cosine_sim is callable from SQL after registration and stays in codegen") {
@@ -185,6 +260,20 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSeq
     assert(picks == Seq(1L, 3L, 2L),
       s"diversity penalty must demote the near-duplicate: $picks")
+  }
+
+  test("mmrRerank rejects a shortlist of mixed dimensions, naming both vec_ids") {
+    import spark.implicits._
+    val cand = Seq(
+      (1L, Seq(1.0, 0.0, 0.1), 0.95),
+      (2L, Seq(1.0, 0.01), 0.94),
+      (3L, Seq(0.1, 1.0, 0.0), 0.80)
+    ).toDF("vec_id", "v", "simq")
+    val err = intercept[Exception](
+      Similarity.mmrRerank(cand, 3, 0.7, 0.3, "spec_dims").collect())
+    val iae = causes(err).collectFirst { case e: IllegalArgumentException => e }
+    assert(iae.exists(e => e.getMessage.contains("vec_id 1 ") &&
+      e.getMessage.contains("vec_id 2 ")), err)
   }
 
   test("stored IVF index: durable build, version-pinned serving, tombstoned refresh") {
